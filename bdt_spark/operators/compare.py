@@ -278,17 +278,15 @@ def _hash_diff_stats(df1, df2):
 
 def _zip_global_index(spark: SparkSession, df):
     """Attach a dense 0-based global row index following a canonical
-    sort, via operators/globalorder.py (range-repartition + local row
-    numbers + broadcast offsets — fully JVM-side, no single-partition
-    stage, no Python round-trip; r10 consolidation of the previously
-    inlined copy of the same technique). Map columns are excluded from
-    the sort key (Spark defines no ordering for maps); float columns
-    sort LAST so ties on exact columns are broken by the (possibly
-    epsilon-noisy) floats only when nothing else distinguishes the
-    rows. Returns (indexed, handle, n): release(handle) frees the
-    sorted layout once the caller's actions complete; n is the side's
-    total row count (the offsets job already paid for it, so callers
-    need no separate count scan)."""
+    sort, via operators/globalorder.py (fully JVM-side, no Python
+    round-trip: one ordered window below its size gate, range partitions
+    plus broadcast offsets above it, with no single-partition stage).
+    Map columns are excluded from the sort key (Spark defines no
+    ordering for maps); float columns sort LAST so ties on exact columns
+    are broken by the (possibly epsilon-noisy) floats only when nothing
+    else distinguishes the rows. Returns (indexed, handle):
+    release(handle) frees the heavy arm's sorted layout once the
+    caller's actions complete."""
     from bdt_spark.operators.globalorder import with_global_order
 
     floats = [c for c, t in df.dtypes if t in ("float", "double")]
@@ -300,11 +298,11 @@ def _zip_global_index(spark: SparkSession, df):
     if not keys:
         keys = list(df.columns)
     order = [F.col(c).asc_nulls_first() for c in keys]
-    res, _, n = with_global_order(df, order, index_col="__idx1")
+    res, _, _ = with_global_order(df, order, index_col="__idx1")
     indexed = res.withColumn(
         "__idx", F.col("__idx1") - F.lit(1)
     ).drop("__idx1")
-    return indexed, res, n
+    return indexed, res
 
 
 # A float-tied group larger than this is re-matched approximately never in
@@ -565,7 +563,10 @@ def _compare_epsilon_sorted(
     equality elsewhere). Replaces the old round-to-digits approximation,
     which misclassified pairs straddling a rounding boundary (0.0014999
     vs 0.0015001 with eps=1e-2 round to different buckets). Cost: one
-    range-shuffle sort + one count job per side, then an index equi-join.
+    global sort per side (operators/globalorder.py picks the plan), then
+    an index equi-join and ONE aggregate, which also counts each side's
+    rows: unequal counts report "Row counts do not match" before any
+    rematch runs.
     Rows whose ONLY distinction is epsilon-close float values can sort in
     different relative orders on the two sides; the sort pins the order by
     the exact columns first (exact for <= 1 float column by the uncrossing
@@ -579,18 +580,15 @@ def _compare_epsilon_sorted(
     and ::test_hash_mode_epsilon_float_tied_rows_rematch."""
     from bdt_spark.operators.cacheutil import release
 
-    i1, c1, n1 = _zip_global_index(spark, df1)
-    i2, c2, n2 = _zip_global_index(spark, df2.toDF(*df1.columns))
-    if n1 != n2:
-        release(c1)
-        release(c2)
-        return ComparisonResult(
-            False, f"Row counts do not match: {n1} != {n2}"
-        )
+    i1, c1 = _zip_global_index(spark, df1)
+    i2, c2 = _zip_global_index(spark, df2.toDF(*df1.columns))
+    # side markers: a data row may be all-NULL, the marker never is
     r2 = i2.select(
-        "__idx", *[F.col(c).alias(f"__r_{c}") for c in df1.columns]
+        "__idx",
+        F.lit(True).alias("__r_side"),
+        *[F.col(c).alias(f"__r_{c}") for c in df1.columns],
     )
-    j = i1.join(r2, "__idx", "full_outer")
+    j = i1.withColumn("__l_side", F.lit(True)).join(r2, "__idx", "full_outer")
 
     float_cols = {c for c, t in df1.dtypes if t in ("float", "double")}
     map_cols = {
@@ -620,13 +618,19 @@ def _compare_epsilon_sorted(
         bad = bad | ~col_ok
     try:
         [row] = (
-            j.select(bad.alias("bad"))
+            j.select(bad.alias("bad"), "__l_side", "__r_side")
             .agg(
                 F.count("*").alias("n"),
+                F.count("__l_side").alias("n1"),
+                F.count("__r_side").alias("n2"),
                 F.sum(F.col("bad").cast("long")).alias("n_bad"),
             )
             .collect()
         )
+        if row.n1 != row.n2:
+            return ComparisonResult(
+                False, f"Row counts do not match: {row.n1} != {row.n2}"
+            )
         if row.n_bad:
             # Second chance (failure path only): zip failures may be the
             # multi-float-column cross-zip residual, not real mismatches —
@@ -694,8 +698,8 @@ def _compare_hash(
         )
 
     if epsilon is not None:
-        # count pre-check happens inside: the per-partition offsets job
-        # already totals each side, so no separate count() scans
+        # the count check happens inside, in the compare's one aggregate,
+        # so no separate count() scans
         return _compare_epsilon_sorted(spark, df1, df2, epsilon)
     df2 = df2.toDF(*df1.columns)
 

@@ -1,41 +1,78 @@
-"""Distributed global-order primitives: row numbers, running totals, and
-NTILE over a TOTAL ordering without ever collapsing to one partition.
+"""Global-order primitives: row numbers, running totals, grand totals and
+NTILE over a TOTAL ordering, with the plan chosen from the input's size.
 
-The problem: `fn() OVER (ORDER BY ...)` with an empty PARTITION BY is a
-single-partition window in Spark — `Exchange SinglePartition` followed by
-one task sorting and scanning everything. Fine over a bounded rollup
-(days, languages, grouping cells); a genuine 100 TB bottleneck when the
-input is corpus-sized (every order, every customer, every distinct price).
-Several analytics queries need exactly that shape (equi-depth binning,
-Pareto cumulative share, KS cumulative distributions, rank sums), so this
-module provides the scalable equivalent, built from the same technique as
-`operators/compare.py`'s `_zip_global_index`:
+`fn() OVER (ORDER BY ...)` with an empty PARTITION BY is a
+single-partition window in Spark: `Exchange SinglePartition`, then one
+task sorts and scans everything. Over a bounded input that is the
+cheapest plan there is (one lazy plan, no extra job); over a corpus-sized
+input (every order, every customer, every distinct price at 100 TB) it is
+a cliff. Several analytics need exactly that shape (equi-depth binning,
+Pareto cumulative share, KS cumulative distributions, rank sums, the
+canonical row index of `compare --epsilon`), so `with_global_order` has
+two arms and picks one with a single gate:
 
-1. `repartitionByRange` on the total order — ordered partitions, parallel
-   sort (this is how Spark's own global `orderBy` starts);
-2. per-partition local prefix (window PARTITIONed BY the range-partition
-   id — no single-partition exchange anywhere);
-3. one tiny count/sum job per partition id, whose per-partition totals
-   become broadcast offsets added to the local prefixes — and whose
-   python-side accumulation yields the GRAND totals as literals, so
-   `SUM(x) OVER ()` disappears entirely.
+- **Window arm** (input below WINDOW_MAX_BYTES): `row_number()` and
+  `SUM(x) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`, with
+  `COUNT(*) OVER ()` and `SUM(x) OVER ()` for the grand totals. One lazy
+  plan: no persist and no Spark job before the caller's action.
+- **Heavy arm** (at or above the gate, or an input the gate cannot
+  bound): the distributed prefix.
+  1. `repartitionByRange` on the total order: ordered partitions and a
+     parallel sort (how Spark's own global `orderBy` starts);
+  2. a per-partition local prefix (window PARTITIONed BY the range
+     partition id, so no single-partition exchange anywhere);
+  3. one small count/sum job per partition id over the persisted sorted
+     layout, whose per-partition totals become broadcast offsets added
+     to the local prefixes, and whose Python-side accumulation yields
+     the grand totals as literals.
+  The persisted layout is released by the caller through the cacheutil
+  contract. Catalyst cannot prove the range layout already clusters rows
+  by `spark_partition_id()`, so the pid-partitioned window adds one more
+  narrow hash shuffle. Both shuffles are parallel and balanced by the
+  range boundaries.
+
+The gate (`plan_scan_bytes`) reads the on-disk bytes of the files the
+input plan scans from the scan leaves' Spark file index, so it works on
+object-store paths as well as local ones. Exact input bytes choose the
+plan, not optimizer estimates (the Dremel argument, PAPERS.md). A plan
+it cannot bound takes the heavy arm whatever its size: a leaf that is
+not a file scan, local relation or range (an RDD, say), or any operator
+that can multiply rows (a join or a generator such as `explode`).
+
+WINDOW_MAX_BYTES is set from a warm A/B of both arms (4 cores, medians of
+5-7 alternating runs of plan build plus a noop write; rows identical in
+every case). "MB" is the scanned files' bytes; sfK is the sf0.1 fixtures
+scaled by tools/gen_scale.py:
+
+| caller | scale (scanned MB) | heavy arm | window arm | speedup |
+|---|---|---|---|---|
+| AUC | sf0.1 (0.6) | 2.20 s | 0.63 s | 3.5x |
+| AUC | sf1 (2.3) | 1.30 s | 0.52 s | 2.5x |
+| `compare --epsilon`, supplier | sf0.1 / sf1 (<0.1) | 1.72 / 1.46 s | 0.46 / 0.47 s | 3.8x / 3.1x |
+| binning | sf0.1 (2.7) | 2.24 s | 1.01 s | 2.2x |
+| KS | sf0.1 (2.7) | 3.26 s | 1.51 s | 2.2x |
+| RFM | sf0.1 (2.7) | 4.42 s | 1.39 s | 3.2x |
+| binning | sf0.3 (4.3) | 2.58 s | 1.84 s | 1.4x |
+| KS | sf0.3 (4.3) | 2.39 s | 1.58 s | 1.5x |
+| RFM | sf0.3 (4.3) | 4.78 s | 1.82 s | 2.6x |
+| binning | sf0.5 (6.8) | 2.07 s | 2.37 s | 0.9x |
+| binning | sf1 (12.6) | 2.79 s | 3.51 s | 0.8x |
+| pareto | sf0.1 (10.8) | 2.71 s | 1.60 s | 1.7x |
+
+The window arm saves a fixed second or more (range sampling, persist,
+stats job) but sorts its whole input in one task, so its lead shrinks as
+the ordered rows grow. Binning orders every raw row and is the first
+caller to lose, between 4.3 and 6.8 MB; the threshold sits between the
+two. Callers that aggregate before ordering (pareto, KS, RFM) would win
+above it too, but the gate sees scanned bytes, not ordered rows, so they
+take the heavy arm there: the same plan and speed as before the gate.
 
 Exactness: the caller's order must be TOTAL (tie-broken to the row, as
-every registry query already guarantees); decimal/long running sums are
-associative, so per-partition partials + exclusive offsets reproduce the
-sequential prefix bit-for-bit. Cost: the range shuffle (with its sampling
-pass), one bounded stats job over the persisted sorted layout (released
-by the caller via the standard cacheutil contract), and one more narrow
-hash shuffle on the partition id — Catalyst cannot prove the range
-layout already clusters rows by `spark_partition_id()`, so the pid-
-partitioned window re-exchanges (`ENSURE_REQUIREMENTS`; the same cost
-compare.py's `_zip_global_index` pays). Both shuffles are fully
-parallel and balanced by the range boundaries; the structure this
-module exists to avoid is `Exchange SinglePartition` + one task
-sorting/scanning the world, which is a cliff, not a constant factor.
-
-NOT fully lazy: computing offsets requires one Spark job before the
-result plan is returned (same documented behavior as `ann.ivf_probe`).
+every registry query guarantees). Decimal and long running sums are
+associative, so the heavy arm's per-partition partials plus exclusive
+offsets reproduce the window arm's sequential prefix exactly; the two
+arms return the same rows and the same result types (both round a
+DECIMAL(38, s) running sum to scale s - 1; see `_add_prefix`).
 """
 
 from __future__ import annotations
@@ -47,26 +84,108 @@ from bdt_spark.operators.cacheutil import transfer_ownership
 
 _PID = "__go_pid"
 
+# Scanned input bytes below which the single-window arm runs (see the
+# module docstring for the A/B that sets it).
+WINDOW_MAX_BYTES = 5 << 20
+
+# Logical operators that never emit more rows than they read (a Union
+# emits the sum of its inputs), so the scanned bytes bound the rows that
+# reach the window. Anything else (Join, Generate, Expand, a sample with
+# replacement, Python map/flatMap nodes, ...) makes the plan unbounded.
+_ROW_BOUNDED = frozenset((
+    "Aggregate", "CTERelationDef", "Deduplicate", "Distinct", "Except",
+    "Filter", "GlobalLimit", "Intersect", "LocalLimit", "Offset",
+    "Project", "RebalancePartitions", "Repartition",
+    "RepartitionByExpression", "ResolvedHint", "Sort", "SubqueryAlias",
+    "Tail", "Union", "View", "Window", "WithCTE",
+))
+# Leaves whose size is known exactly without a job: driver-local rows
+# and spark.range.
+_SIZED_LEAVES = frozenset(("LocalRelation", "OneRowRelation", "Range"))
+
+
+def plan_scan_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of the files `df` scans, or None if its rows cannot
+    be bounded by them.
+
+    Walks the analyzed plan. File scans report their file index's
+    `sizeInBytes` (the listing Spark already holds, local or object
+    store); local relations and ranges report their exact stats size.
+    Any other leaf, or any operator outside _ROW_BOUNDED, returns None."""
+    total = 0
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        n = children.size()
+        name = node.nodeName()
+        if n:
+            if name not in _ROW_BOUNDED:
+                return None
+            stack.extend(children.apply(i) for i in range(n))
+        elif name == "LogicalRelation":
+            rel = node.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+            total += rel.location().sizeInBytes()
+        elif name in _SIZED_LEAVES:
+            total += node.stats().sizeInBytes()
+        elif name != "CTERelationRef":  # its definition is walked once
+            return None
+    return total
+
 
 def with_global_order(
     df: DataFrame,
     order: list[Column],
     running: dict[str, str] | None = None,
     index_col: str | None = None,
-) -> tuple[DataFrame, dict[str, object], int]:
-    """Attach global-order columns to `df` without a single-partition stage.
+) -> tuple[DataFrame, dict[str, Column], Column]:
+    """Attach global-order columns to `df`.
 
     order: sort expressions forming a TOTAL order (tie-broken to the row).
     running: {out_col: in_col} inclusive running SUMs along the order.
     index_col: name for the 1-based global row number, if wanted.
 
-    Returns (result, grand_totals, n_rows): `grand_totals[out_col]` is the
-    full-table sum of each running column (python Decimal/int — embed as a
-    literal instead of `SUM(x) OVER ()`), `n_rows` the total row count.
-    The result carries the persisted sorted layout under the cacheutil
-    ownership contract — `release(result)` once consumed.
+    Returns (result, grand_totals, n_rows). `grand_totals[out_col]` is the
+    full-table sum of each running column and `n_rows` the total row
+    count, both as Columns to use in projections of `result`: literals in
+    the heavy arm, `SUM(x) OVER ()` / `COUNT(*) OVER ()` in the window
+    arm. The heavy arm's result carries the persisted sorted layout under
+    the cacheutil ownership contract; `release(result)` once consumed (a
+    no-op for the window arm).
     """
     running = running or {}
+    size = plan_scan_bytes(df)
+    if size is not None and size < WINDOW_MAX_BYTES:
+        return _window_arm(df, order, running, index_col)
+    return _heavy_arm(df, order, running, index_col)
+
+
+def _window_arm(df, order, running, index_col):
+    w = Window.orderBy(*order)
+    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cols = {}
+    if index_col:
+        cols[index_col] = F.row_number().over(w).cast("long")
+    types = dict(df.dtypes)
+    for out, src in running.items():
+        local = F.sum(src).over(wsum)
+        if types.get(src, "decimal").startswith("decimal"):
+            # adding the heavy arm's offset widens a decimal sum's type (and
+            # at precision 38 drops a scale digit): combine with a NULL
+            # offset typed like the sum, so the types agree by construction.
+            # A name outside the top-level columns takes this path too; it
+            # is right for every type, just a few calls dearer.
+            local = _add_prefix(local, F.when(F.lit(False), local))
+        cols[out] = local
+    whole = Window.partitionBy()
+    totals = {out: F.sum(src).over(whole) for out, src in running.items()}
+    result = df.withColumns(cols) if cols else df
+    return result, totals, F.count(F.lit(1)).over(whole)
+
+
+def _heavy_arm(df, order, running, index_col):
     sdf = (
         df.repartitionByRange(*order)
         .sortWithinPartitions(*order)
@@ -93,31 +212,19 @@ def with_global_order(
                 totals[out] = s if totals[out] is None else totals[out] + s
         offsets.append((r[_PID], off))
 
-    spark = df.sparkSession
-    if not part_rows:  # empty input: keep a valid (typed, empty) plan
-        result = sdf
-        if index_col:
-            result = result.withColumn(index_col, F.lit(None).cast("long"))
-        for out in running:
-            result = result.withColumn(
-                out,
-                F.lit(None).cast(stats_schema[f"__go_sum_{out}"].dataType),
-            )
-        return transfer_ownership(result.drop(_PID), sdf), totals, 0
-
-    # offsets table typed from the stats row schema (keeps decimals exact)
+    sum_types = {out: stats_schema[f"__go_sum_{out}"].dataType
+                 for out in running}
+    total_cols = {out: F.lit(totals[out]).cast(sum_types[out])
+                  for out in running}
+    n_col = F.lit(n_rows).cast("long")
+    # offsets table typed from the stats row schema (keeps decimals exact);
+    # empty input gives an empty table, and so a typed, empty result
     from pyspark.sql.types import LongType, StructField, StructType
 
     fields = [StructField(_PID, stats_schema[_PID].dataType, False),
               StructField("__go_off_cnt", LongType(), False)]
     for out in running:
-        fields.append(
-            StructField(
-                f"__go_off_{out}",
-                stats_schema[f"__go_sum_{out}"].dataType,
-                True,
-            )
-        )
+        fields.append(StructField(f"__go_off_{out}", sum_types[out], True))
     # LocalRelation, not createDataFrame: the offsets frame is scanned by
     # every downstream job (broadcast build per pass, chained passes embed
     # earlier passes' joins), and a pickled-RDD scan pays a Python-worker
@@ -126,7 +233,7 @@ def with_global_order(
     from bdt_spark.operators.localrel import local_relation
 
     off_df = local_relation(
-        spark,
+        df.sparkSession,
         [
             tuple([pid, off["__go_off_cnt"]]
                   + [off[f"__go_off_{out}"] for out in running])
@@ -143,34 +250,43 @@ def with_global_order(
         )
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     for out, src in running.items():
-        local = F.sum(src).over(wsum)
-        off = F.col(f"__go_off_{out}")
-        # SUM ignores NULLs: a NULL local prefix (all values so far in this
-        # range partition are NULL) must not null out a non-NULL offset, and
-        # vice versa — only both-NULL yields NULL, matching SUM(x) OVER ().
         result = result.withColumn(
             out,
-            F.when(off.isNull(), local)
-            .when(local.isNull(), off)
-            .otherwise(local + off),
+            _add_prefix(F.sum(src).over(wsum), F.col(f"__go_off_{out}")),
         )
     drop = [_PID, "__go_off_cnt"] + [f"__go_off_{out}" for out in running]
-    return transfer_ownership(result.drop(*drop), sdf), totals, n_rows
+    return transfer_ownership(result.drop(*drop), sdf), total_cols, n_col
 
 
-def ntile_from_index(index_col: str, n_rows: int, k: int) -> Column:
-    """Exact NTILE(k) from a 1-based global row number over n_rows.
+def _add_prefix(local: Column, off: Column) -> Column:
+    """A local running sum plus the exclusive offset of the rows before it.
+
+    SUM ignores NULLs: a NULL local prefix (all values so far in this range
+    partition are NULL) must not null out a non-NULL offset, and vice
+    versa; only both-NULL yields NULL, matching SUM(x) OVER (). For a
+    DECIMAL(38, s) sum, Spark's decimal addition rounds the result to
+    scale s - 1 (precision-loss rule), so the prefix is typed
+    DECIMAL(38, s - 1) in both arms."""
+    return (
+        F.when(off.isNull(), local)
+        .when(local.isNull(), off)
+        .otherwise(local + off)
+    )
+
+
+def ntile_from_index(index_col: str, n_rows: Column, k: int) -> Column:
+    """Exact NTILE(k) from a 1-based global row number over n_rows rows
+    (the row-count Column `with_global_order` returns).
 
     Standard SQL semantics (Spark and DuckDB agree): with q = n div k and
-    r = n mod k, the first r tiles hold q+1 rows, the rest q. Pure
-    arithmetic on the global index — no window, no single partition."""
-    if n_rows <= 0:
-        return F.lit(None).cast("int")
-    q, r = divmod(n_rows, k)
+    r = n mod k, the first r tiles hold q+1 rows, the rest q. With fewer
+    rows than tiles (q = 0) every row is in the first branch, tile i
+    holding row i. Pure arithmetic on the global index, no window."""
+    n = n_rows.cast("long")
+    r = n % k
+    q = ((n - r) / k).cast("long")
     idx = F.col(index_col)
     boundary = r * (q + 1)
-    if q == 0:  # fewer rows than tiles: tile i gets row i
-        return idx.cast("int")
     in_big = F.floor((idx - 1) / (q + 1)) + 1
     in_small = r + F.floor((idx - 1 - boundary) / q) + 1
     return F.when(idx <= boundary, in_big).otherwise(in_small).cast("int")

@@ -136,7 +136,7 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
             == "true"
         ):
             raise _Unsupported("escapedStringLiterals session")
-        if not rows:
+        if not norm:
             if any(not f.nullable for f in struct.fields):
                 # a WHERE 1=0 projection of CAST(NULL ...) columns is
                 # all-nullable and cannot express a non-nullable field;

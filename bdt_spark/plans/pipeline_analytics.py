@@ -1188,12 +1188,13 @@ _RFM_TAIL = """
     "features_quantile_binning), folded into the 64-cell RFM cube "
     "with named segments. The three orderings run over the "
     "per-customer rollup (distinct customers, not orders) — still "
-    "billions of rows at 100 TB, so r10 replaces the three "
-    "single-partition NTILE windows with three chained "
-    "operators/globalorder.py passes (range partition + local row "
-    "numbers + broadcast offsets, NTILE derived arithmetically from "
-    "the global index); the oracle keeps the classic windowed form. "
-    "The segment fold tail is the same SQL text the oracle runs.",
+    "billions of rows at 100 TB, so the Spark side runs three chained "
+    "operators/globalorder.py passes, NTILE derived arithmetically "
+    "from the global index. Below the module's scanned-bytes gate "
+    "each pass is one ordered window; above it, a range partition + "
+    "local row numbers + broadcast offsets, with no single-partition "
+    "window. The oracle keeps the classic windowed form. The segment "
+    "fold tail is the same SQL text the oracle runs.",
 )
 def customer_rfm_segmentation(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
@@ -1239,10 +1240,10 @@ _PARETO_CLASS_CASE = """
     """
 
 
-# Spark tail: total_rev is a per-row literal (grand total from the
-# globalorder stats job), so no join is needed to recover it — the
-# oracle's CROSS JOIN against DISTINCT total_rev exists only because
-# the windowed form has no literal to hand.
+# Spark tail: total_rev is a per-row column (the grand total from
+# globalorder: SUM(rev) OVER () or the heavy arm's literal), so no join
+# is needed to recover it, unlike the oracle's CROSS JOIN against
+# DISTINCT total_rev.
 _PARETO_SPARK_TAIL = f"""
     WITH classed AS (
       SELECT l_partkey, rev, total_rev, {_PARETO_CLASS_CASE}
@@ -1295,14 +1296,15 @@ _PARETO_SPARK_TAIL = f"""
     "cross-multiplication (cum*10 <= total*8), exact in both "
     "engines, so a part straddling the 80% line lands in the same "
     "class everywhere. Deterministic under revenue ties (partkey "
-    "tie-break in the cumulative ordering). r10: the Spark side's "
-    "cumulative sum comes from operators/globalorder.py (range-"
-    "partitioned local prefixes + broadcast per-partition offsets — "
-    "decimal addition is associative so the distributed prefix is "
-    "bit-exact) and SUM(rev) OVER () becomes the grand-total "
-    "LITERAL from the same one stats job — no single-partition "
-    "window anywhere; the oracle keeps the classic windowed form, "
-    "so two structurally different algorithms must agree.",
+    "tie-break in the cumulative ordering). The Spark side's "
+    "cumulative sum and grand total come from "
+    "operators/globalorder.py: below its scanned-bytes gate one "
+    "ordered window with SUM(rev) OVER (); above it range-"
+    "partitioned local prefixes + broadcast per-partition offsets "
+    "(decimal addition is associative, so the distributed prefix "
+    "equals the sequential one) with the grand total as a literal "
+    "from the same stats job, and no single-partition window. The "
+    "oracle keeps the classic windowed form with its CROSS JOIN.",
 )
 def lineitem_pareto_abc(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
@@ -1318,7 +1320,7 @@ def lineitem_pareto_abc(spark, sf_dir):
     ranked = go_res.withColumn(
         "cum_rev", F.col("cum_rev").cast("decimal(38,8)")
     ).withColumn(
-        "total_rev", F.lit(totals["cum_rev"]).cast("decimal(38,8)")
+        "total_rev", totals["cum_rev"].cast("decimal(38,8)")
     )
     ranked.createOrReplaceTempView("__go_pareto_ranked")
     out = spark.sql(_PARETO_SPARK_TAIL.format(ranked="__go_pareto_ranked"))

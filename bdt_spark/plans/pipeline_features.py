@@ -709,14 +709,15 @@ _QUANTILE_BIN_TAIL = """
     "repartitionByRange (the lo/hi fences of each bin are exactly the "
     "range-partition split points that balance a skewed write). NTILE "
     "over a TOTAL order (price, orderkey) is deterministic down to the "
-    "row — identical bin populations, not just similar fences. r10: the "
-    "Spark side no longer pays a single-partition global window — "
-    "operators/globalorder.py range-partitions on the total order, "
-    "row-numbers within partitions, adds broadcast offsets, and derives "
-    "NTILE arithmetically from the global index (exact same tiling as "
-    "the oracle's NTILE by the standard first-r-tiles-get-one-extra "
-    "rule). The bin aggregation tail is the same SQL text the oracle "
-    "runs. Bin means decimal-pinned.",
+    "row — identical bin populations, not just similar fences. The "
+    "Spark side takes its global row number from "
+    "operators/globalorder.py (one ordered window below the module's "
+    "scanned-bytes gate; above it a range partition on the total "
+    "order, per-partition row numbers and broadcast offsets, with no "
+    "single-partition window) and derives NTILE arithmetically from "
+    "it (exact same tiling as the oracle's NTILE by the standard "
+    "first-r-tiles-get-one-extra rule). The bin aggregation tail is "
+    "the same SQL text the oracle runs. Bin means decimal-pinned.",
 )
 def features_quantile_binning(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
@@ -940,13 +941,14 @@ _KS_TAIL = """
     "is exact — the CDF gap is constant between them). "
     "no_drift_at_1pct uses the standard large-sample critical value "
     "c(0.01)=1.628 (Smirnov asymptotic, public tables). A sound "
-    "orderkey%2 split must pass at any sf. r10: the Spark side's "
-    "cumulative counts come from operators/globalorder.py (range-"
-    "partitioned prefix sums; distinct prices can approach row "
-    "cardinality on a continuous feature, so the former global "
-    "ordered window was a corpus-sized single partition) and the "
-    "n1/n2 totals are grand-total literals from the same stats job; "
-    "the oracle keeps the classic windowed form.",
+    "orderkey%2 split must pass at any sf. The Spark side's "
+    "cumulative counts and n1/n2 totals come from "
+    "operators/globalorder.py: one ordered window below its "
+    "scanned-bytes gate, range-partitioned prefix sums with literal "
+    "totals above it (distinct prices can approach row cardinality "
+    "on a continuous feature, where one ordered window would be a "
+    "corpus-sized single partition). The oracle keeps the classic "
+    "windowed form.",
 )
 def quality_split_drift_ks(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
@@ -960,8 +962,8 @@ def quality_split_drift_ks(spark, sf_dir):
     cdf = (
         go_res.withColumn("c1", F.col("c1").cast("bigint"))
         .withColumn("c2", F.col("c2").cast("bigint"))
-        .withColumn("n1", F.lit(totals["c1"]).cast("bigint"))
-        .withColumn("n2", F.lit(totals["c2"]).cast("bigint"))
+        .withColumn("n1", totals["c1"].cast("bigint"))
+        .withColumn("n2", totals["c2"].cast("bigint"))
     )
     cdf.createOrReplaceTempView("__go_ks_cdf")
     out = spark.sql(_KS_TAIL.format(cdf="__go_ks_cdf"))

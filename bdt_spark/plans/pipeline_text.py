@@ -1365,11 +1365,12 @@ _AUC_FINAL = """
     "and prefix-summing cnt via operators/globalorder.py gives the "
     "per-group positive contribution pos_cnt*(2C + cnt + 1) "
     "(= pos_cnt rows each contributing r*2 + tie_n - 1), summed to "
-    "the identical BIGINT rank sum. Distinct scores can approach "
-    "row cardinality for a continuous model score, hence the "
-    "distributed prefix rather than an ordered window; the oracle "
-    "keeps the classic two-window form, so two structurally "
-    "different algorithms must agree bit-for-bit.",
+    "the identical BIGINT rank sum. The prefix is one ordered window "
+    "below globalorder's scanned-bytes gate; distinct scores can "
+    "approach row cardinality for a continuous model score, so above "
+    "it the prefix is distributed, with no single-partition window. "
+    "The oracle keeps the classic two-window form, so two "
+    "structurally different algorithms must agree bit-for-bit.",
 )
 def text_feature_auc_mann_whitney(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership

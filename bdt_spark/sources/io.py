@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Mapping
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -416,6 +417,33 @@ def register_dir(
 _FIXTURES_LOADED: dict[int, str] = {}
 
 
+class _Views(Mapping):
+    """Temp views by name, each looked up only when read: the memoized
+    path of load_fixture_tables, where a query that reads one table (or
+    none) should not pay ten catalog round trips."""
+
+    def __init__(self, spark: SparkSession, names: tuple[str, ...]):
+        self._spark, self._names = spark, names
+
+    def __getitem__(self, name: str) -> DataFrame:
+        from pyspark.errors import AnalysisException
+
+        if name not in self._names:
+            raise KeyError(name)
+        try:
+            return self._spark.table(name)
+        except AnalysisException:
+            raise KeyError(name) from None
+
+    def __iter__(self):
+        return (
+            n for n in self._names if self._spark.catalog.tableExists(n)
+        )
+
+    def __len__(self) -> int:
+        return sum(1 for _ in self)
+
+
 # Tables whose CPU-HEAVY consumers (char-gram md5, shingling, token
 # scoring right above the scan) may opt into a scan fan-out when the
 # fixture parquet is under-split: an under-split scan serializes that
@@ -616,8 +644,9 @@ def load_fixture_tables(
     sf_dir: str,
     tables: tuple[str, ...] = FIXTURE_TABLES,
     force: bool = False,
-) -> dict[str, DataFrame]:
-    """Register the driver's fixture tables (TESTDATA.md) as temp views.
+) -> Mapping[str, DataFrame]:
+    """Register the driver's fixture tables (TESTDATA.md) as temp views
+    and return them by name.
 
     Fan-out gate (r11, relocated r12): a candidate table
     (_FANOUT_CANDIDATE_TABLES) whose parquet has fewer row groups than
@@ -638,7 +667,7 @@ def load_fixture_tables(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)
     if not force and _FIXTURES_LOADED.get(key) == sf_dir:
-        return {t: spark.table(t) for t in tables if spark.catalog.tableExists(t)}
+        return _Views(spark, tables)
     present = [
         t for t in tables if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
     ]

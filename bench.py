@@ -331,7 +331,7 @@ def render_line(out: dict, budget: int = 1900) -> str:
        invariant `line[index("queries"):]` <= budget is asserted by
        test at 75 queries.
 
-    MUTATES `out`; returns the line to print."""
+    Works on a copy: `out` is left unchanged. Returns the line to print."""
     tail_keys = ("queries", "sf", "reps", "protocol")
     ordered = {k: v for k, v in out.items() if k not in tail_keys}
     ordered.update({k: out[k] for k in tail_keys if k in out})

@@ -2,6 +2,8 @@
 (SURVEY §5 item 3: count mismatch compare.rs:66, row diff compare.rs:47,
 epsilon pass/fail compare.rs:31-45)."""
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -183,37 +185,101 @@ def test_hash_mode_epsilon_order_insensitive(spark, files):
     assert not res.ok and "1 of 3 rows differ" in res.message
 
 
-def test_epsilon_index_plan_is_distributed_jvm_only(spark):
-    """The global index must come from range partitions + per-partition
-    row_number — no single-task global window, no RDD/Python round-trip
-    (rdd.zipWithIndex pipes every row through Python)."""
+def test_epsilon_index_plan_is_distributed_jvm_only(spark, monkeypatch):
+    """Above the globalorder size gate the global index must come from
+    range partitions + per-partition row_number: no single-task global
+    window. In either arm no RDD/Python round-trip (rdd.zipWithIndex
+    pipes every row through Python). This 80 KB input is below the gate,
+    so by default it takes the window arm: one ordered window."""
+    import bdt_spark.operators.globalorder as go
+    from bdt_spark.operators.cacheutil import release
     from bdt_spark.operators.compare import _zip_global_index
 
     df = spark.range(10_000).selectExpr(
         "id AS k", "CAST(id AS DOUBLE) / 7 AS y"
     )
-    indexed, cached, total = _zip_global_index(spark, df)
-    try:
-        assert total == 10_000  # offsets job doubles as the side's count
-        plan = indexed._jdf.queryExecution().executedPlan().toString()
-        # the DATA path must not round-trip through an RDD (the tiny
-        # driver-built offsets table is a legitimate ExistingRDD on the
-        # broadcast side) and no Python evaluation may appear anywhere
-        assert "Scan ExistingRDD[k" not in plan
-        assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
-        assert "Exchange SinglePartition" not in plan  # no 1-task window
-        # dense, unique, 0-based
-        stats = indexed.selectExpr(
-            "COUNT(*) AS n",
-            "COUNT(DISTINCT __idx) AS d",
-            "MIN(__idx) AS mn",
-            "MAX(__idx) AS mx",
-        ).first()
-        assert (stats.n, stats.d, stats.mn, stats.mx) == (
-            10_000, 10_000, 0, 9_999
-        )
-    finally:
-        cached.unpersist()
+    for arm in ("window", "heavy"):
+        if arm == "heavy":
+            monkeypatch.setattr(go, "WINDOW_MAX_BYTES", 0)
+        indexed, cached = _zip_global_index(spark, df)
+        try:
+            plan = indexed._jdf.queryExecution().executedPlan().toString()
+            # the DATA path must not round-trip through an RDD (the tiny
+            # driver-built offsets table is a legitimate LocalTableScan
+            # on the broadcast side) and no Python evaluation may appear
+            assert "Scan ExistingRDD[k" not in plan
+            assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
+            # heavy: no 1-task window; window: exactly that, by design
+            assert ("Exchange SinglePartition" in plan) == (arm == "window")
+            # dense, unique, 0-based
+            stats = indexed.selectExpr(
+                "COUNT(*) AS n",
+                "COUNT(DISTINCT __idx) AS d",
+                "MIN(__idx) AS mn",
+                "MAX(__idx) AS mx",
+            ).first()
+            assert (stats.n, stats.d, stats.mn, stats.mx) == (
+                10_000, 10_000, 0, 9_999
+            ), arm
+        finally:
+            release(cached)
+
+
+@pytest.mark.parametrize("arm", ["window", "heavy"])
+def test_hash_mode_epsilon_count_mismatch_message(spark, files, monkeypatch, arm):
+    """The epsilon compare's one aggregate counts both sides: unequal
+    counts give the count message, not a row diff, in either arm."""
+    import bdt_spark.operators.globalorder as go
+
+    monkeypatch.setattr(go, "WINDOW_MAX_BYTES", {"window": 1 << 62, "heavy": 0}[arm])
+    a = files("ecm_a.parquet", {"k": [1, 2, 3], "y": [0.5, 1.5, 2.5]})
+    b = files("ecm_b.parquet", {"k": [1, 2], "y": [0.5, 1.5]})
+    res = compare_files(spark, a, b, epsilon=1e-3, method="hash")
+    assert not res.ok and res.message == "Row counts do not match: 3 != 2"
+    res = compare_files(spark, b, a, epsilon=1e-3, method="hash")
+    assert not res.ok and res.message == "Row counts do not match: 2 != 3"
+
+
+def test_epsilon_compare_arms_agree_sf001(spark, sf_dir, tmp_path, monkeypatch):
+    """compare --epsilon on the sf0.01 supplier table gives the same
+    verdict and message from either globalorder arm: on an identical
+    copy, on a copy with one cell moved past epsilon, and on a copy
+    missing a row."""
+    import bdt_spark.operators.globalorder as go
+
+    src = os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "supplier.parquet"
+    )
+    if not os.path.exists(src):
+        pytest.skip("needs the sf0.01 fixtures")
+    table = pq.read_table(src)
+    same = str(tmp_path / "same.parquet")
+    pq.write_table(table, same)
+    moved = str(tmp_path / "moved.parquet")
+    bal = table.column("s_acctbal").to_pylist()
+    bal[17] = bal[17] + 1
+    pq.write_table(
+        table.set_column(
+            table.column_names.index("s_acctbal"),
+            "s_acctbal",
+            pa.array(bal, table.schema.field("s_acctbal").type),
+        ),
+        moved,
+    )
+    short = str(tmp_path / "short.parquet")
+    pq.write_table(table.slice(1), short)
+    got = {}
+    for arm, limit in (("window", 1 << 62), ("heavy", 0)):
+        monkeypatch.setattr(go, "WINDOW_MAX_BYTES", limit)
+        got[arm] = [
+            (r.ok, r.message)
+            for r in (
+                compare_files(spark, src, other, epsilon=1e-6, method="hash")
+                for other in (same, moved, short)
+            )
+        ]
+    assert got["window"] == got["heavy"]
+    assert [ok for ok, _ in got["window"]] == [True, False, False]
 
 
 def test_hash_mode_count_mismatch_message(spark, files):

@@ -65,6 +65,15 @@ def test_empty_rows(spark):
     assert df.schema.simpleString() == "struct<x:int,y:string>"
 
 
+def test_empty_generator(spark):
+    """An empty iterator is the empty relation, like an empty list (the
+    emptiness check runs on the normalized rows, not the consumed
+    generator)."""
+    df = local_relation(spark, iter([]), "x int, y string")
+    assert df.count() == 0
+    assert df.schema.simpleString() == "struct<x:int,y:string>"
+
+
 def test_unsupported_type_falls_back(spark):
     # map type is not rendered — must silently fall back, same data
     rows = [({"a": 1},)]

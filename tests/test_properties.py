@@ -136,7 +136,9 @@ def test_global_order_matches_window_form(spark, case):
     """operators/globalorder.py's range-partition + broadcast-offset
     running sums and row numbers must equal SUM/ROW_NUMBER() OVER a
     single-partition window bit-for-bit, for ANY total order and any
-    null placement (hypothesis: the r10 module's core claim)."""
+    null placement (hypothesis: the r10 module's core claim). A
+    driver-list DataFrame scans an RDD, which the size gate cannot
+    bound, so this runs the heavy arm."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -150,7 +152,8 @@ def test_global_order_matches_window_form(spark, case):
     res, totals, n = with_global_order(
         df, order, running={"cum": "val"}, index_col="idx"
     )
-    assert n == len(rows)
+    [got] = res.select(n.alias("n"), totals["cum"].alias("t")).limit(1).collect()
+    assert got.n == len(rows)
     w = Window.orderBy(*order)
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ref = df.select(
@@ -170,4 +173,4 @@ def test_global_order_matches_window_form(spark, case):
     assert bad == 0
     py_total = sum(v for _, v, _ in rows if v is not None)
     expect = py_total if any(v is not None for _, v, _ in rows) else None
-    assert totals["cum"] == expect
+    assert got.t == expect
