@@ -31,13 +31,14 @@ two arms and picks one with a single gate:
   narrow hash shuffle. Both shuffles are parallel and balanced by the
   range boundaries.
 
-The gate (`plan_scan_bytes`) reads the on-disk bytes of the files the
-input plan scans from the scan leaves' Spark file index, so it works on
-object-store paths as well as local ones. Exact input bytes choose the
-plan, not optimizer estimates (the Dremel argument, PAPERS.md). A plan
-it cannot bound takes the heavy arm whatever its size: a leaf that is
-not a file scan, local relation or range (an RDD, say), or any operator
-that can multiply rows (a join or a generator such as `explode`).
+The gate reads the on-disk bytes of the files the input plan scans
+(`sources.io.plan_scan_bytes`, the input size every plan gate reads) from
+the scan leaves' Spark file index, so it works on object-store paths as
+well as local ones. Exact input bytes choose the plan, not optimizer
+estimates (the Dremel argument, PAPERS.md). A plan it cannot bound takes
+the heavy arm whatever its size: a leaf that is not a file scan, local
+relation or range (an RDD, say), or any operator that can multiply rows
+(a join or a generator such as `explode`).
 
 WINDOW_MAX_BYTES is set from a warm A/B of both arms (4 cores, medians of
 5-7 alternating runs of plan build plus a noop write; rows identical in
@@ -81,58 +82,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bdt_spark.operators.cacheutil import transfer_ownership
+from bdt_spark.sources.io import plan_scan_bytes
 
 _PID = "__go_pid"
 
 # Scanned input bytes below which the single-window arm runs (see the
 # module docstring for the A/B that sets it).
 WINDOW_MAX_BYTES = 5 << 20
-
-# Logical operators that never emit more rows than they read (a Union
-# emits the sum of its inputs), so the scanned bytes bound the rows that
-# reach the window. Anything else (Join, Generate, Expand, a sample with
-# replacement, Python map/flatMap nodes, ...) makes the plan unbounded.
-_ROW_BOUNDED = frozenset((
-    "Aggregate", "CTERelationDef", "Deduplicate", "Distinct", "Except",
-    "Filter", "GlobalLimit", "Intersect", "LocalLimit", "Offset",
-    "Project", "RebalancePartitions", "Repartition",
-    "RepartitionByExpression", "ResolvedHint", "Sort", "SubqueryAlias",
-    "Tail", "Union", "View", "Window", "WithCTE",
-))
-# Leaves whose size is known exactly without a job: driver-local rows
-# and spark.range.
-_SIZED_LEAVES = frozenset(("LocalRelation", "OneRowRelation", "Range"))
-
-
-def plan_scan_bytes(df: DataFrame) -> int | None:
-    """On-disk bytes of the files `df` scans, or None if its rows cannot
-    be bounded by them.
-
-    Walks the analyzed plan. File scans report their file index's
-    `sizeInBytes` (the listing Spark already holds, local or object
-    store); local relations and ranges report their exact stats size.
-    Any other leaf, or any operator outside _ROW_BOUNDED, returns None."""
-    total = 0
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        children = node.children()
-        n = children.size()
-        name = node.nodeName()
-        if n:
-            if name not in _ROW_BOUNDED:
-                return None
-            stack.extend(children.apply(i) for i in range(n))
-        elif name == "LogicalRelation":
-            rel = node.relation()
-            if rel.getClass().getSimpleName() != "HadoopFsRelation":
-                return None
-            total += rel.location().sizeInBytes()
-        elif name in _SIZED_LEAVES:
-            total += node.stats().sizeInBytes()
-        elif name != "CTERelationRef":  # its definition is walked once
-            return None
-    return total
 
 
 def with_global_order(
@@ -156,8 +112,7 @@ def with_global_order(
     no-op for the window arm).
     """
     running = running or {}
-    size = plan_scan_bytes(df)
-    if size is not None and size < WINDOW_MAX_BYTES:
+    if plan_scan_bytes(df) < WINDOW_MAX_BYTES:
         return _window_arm(df, order, running, index_col)
     return _heavy_arm(df, order, running, index_col)
 

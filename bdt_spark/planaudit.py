@@ -358,7 +358,7 @@ BROADCAST_GENERATE_JUSTIFIED: dict[str, tuple[int, str]] = {
     ),
     "text_pmi_cooccurrence": (6,
         "small-scan arm only (pipeline_text._MATERIALIZE_MIN_SCAN_BYTES "
-        "gate on fixture_scan_bytes — see that constant for the "
+        "gate on plan_scan_bytes — see that constant for the "
         "measured crossover): build is the word df table, vocabulary-"
         "bounded; the heavy arm plans every join against the "
         "MATERIALIZED token cache's true size and measures 0 flags"

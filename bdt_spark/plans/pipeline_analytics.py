@@ -673,10 +673,10 @@ _ANOMALY_MATERIALIZE_MIN_BYTES = 1 << 30
 )
 def events_anomaly_robust_zscore(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
-    from bdt_spark.sources.io import fixture_scan_bytes
+    from bdt_spark.sources.io import plan_scan_bytes
 
     load_fixture_tables(spark, sf_dir)
-    if fixture_scan_bytes(spark, "events") < _ANOMALY_MATERIALIZE_MIN_BYTES:
+    if plan_scan_bytes(spark.table("events")) < _ANOMALY_MATERIALIZE_MIN_BYTES:
         return spark.sql(_anomaly_mad_sql("spark"))
     daily = spark.sql(_ANOMALY_DAILY_SPARK).persist()
     daily.count()  # eager: 4 consumers in ONE action recompute a lazy cache
@@ -1051,8 +1051,11 @@ _BASKET_ORACLE = """
 # exactly like DISTINCT (and drops NULL categories, which the
 # self-join's `<` and the margin joins' equality drop anyway);
 # sort_array makes pos_a < pos_b ⟺ cat_a < cat_b (distinct sorted
-# values); n_orders = one array row per orderkey. Rows proven
-# identical at sf0.001/0.01/0.1/sf10.
+# values); n_orders = one array row per non-NULL orderkey. A NULL
+# orderkey forms its own array row: it counts toward the margins (the
+# oracle's DISTINCT keeps (NULL, category) rows too) but not toward
+# n_orders or pairs (COUNT(DISTINCT) and the self-join's equality drop
+# it). Rows proven identical at sf0.001/0.01/0.1/sf10.
 _BASKET_PER_ORDER = """
       SELECT l_orderkey,
              sort_array(collect_set(CAST(l_partkey % 50 AS BIGINT))) AS cats
@@ -1066,14 +1069,14 @@ _BASKET_TAIL = """
       GROUP BY category
     ),
     n AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_orders FROM {src}
+      SELECT CAST(COUNT(l_orderkey) AS BIGINT) AS n_orders FROM {src}
     ),
     pairs AS (
       SELECT cat_a, cat_b, CAST(COUNT(*) AS BIGINT) AS c_ab
       FROM {src}
       LATERAL VIEW posexplode(cats) ta AS pa, cat_a
       LATERAL VIEW posexplode(cats) tb AS pb, cat_b
-      WHERE pa < pb
+      WHERE pa < pb AND l_orderkey IS NOT NULL
       GROUP BY cat_a, cat_b
       HAVING COUNT(*) >= 10
     )
@@ -1127,10 +1130,10 @@ _BASKET_MATERIALIZE_MIN_BYTES = 256 << 20
 )
 def orders_market_basket_lift(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
-    from bdt_spark.sources.io import fixture_scan_bytes
+    from bdt_spark.sources.io import plan_scan_bytes
 
     load_fixture_tables(spark, sf_dir)
-    if fixture_scan_bytes(spark, "lineitem") < _BASKET_MATERIALIZE_MIN_BYTES:
+    if plan_scan_bytes(spark.table("lineitem")) < _BASKET_MATERIALIZE_MIN_BYTES:
         return spark.sql(_BASKET_ARRAY_BARE)
     per_order = spark.sql(_BASKET_PER_ORDER).persist()
     per_order.count()  # eager: 3 consumers in ONE action recompute a lazy cache

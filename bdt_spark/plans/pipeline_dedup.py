@@ -1036,11 +1036,11 @@ def _incremental_minhash_sql(
 def dedup_incremental_minhash(spark, sf_dir):
     from bdt_spark.sources.io import (
         exchange_width_for_bytes,
-        fixture_scan_bytes,
+        plan_scan_bytes,
     )
 
     load_fixture_tables(spark, sf_dir)
-    w = exchange_width_for_bytes(fixture_scan_bytes(spark, "documents"))
+    w = exchange_width_for_bytes(plan_scan_bytes(spark.table("documents")))
     return spark.sql(_incremental_minhash_sql("spark", width=w))
 
 
@@ -1194,11 +1194,11 @@ _INC_EMB_SPARK_BARE = _incremental_embedding_sql("spark")
 def dedup_incremental_embedding(spark, sf_dir):
     from bdt_spark.sources.io import (
         exchange_width_for_bytes,
-        fixture_scan_bytes,
+        plan_scan_bytes,
     )
 
     load_fixture_tables(spark, sf_dir)
-    b = fixture_scan_bytes(spark, "embeddings")
+    b = plan_scan_bytes(spark.table("embeddings"))
     if b < _INC_EMB_EXCHANGE_MIN_BYTES:
         return spark.sql(_INC_EMB_SPARK_BARE)
     # exchange arm: width from the same exact scan bytes as the gate

@@ -29,11 +29,13 @@ def _emb_width_query(name: str, sql_fn, tags: tuple, doc: str):
     def _fn(spark, sf_dir):
         from bdt_spark.sources.io import (
             exchange_width_for_bytes,
-            fixture_scan_bytes,
+            plan_scan_bytes,
         )
 
         load_fixture_tables(spark, sf_dir)
-        w = exchange_width_for_bytes(fixture_scan_bytes(spark, "embeddings"))
+        w = exchange_width_for_bytes(
+            plan_scan_bytes(spark.table("embeddings"))
+        )
         return spark.sql(sql_fn("spark", width=w))
 
     return _fn
@@ -615,13 +617,13 @@ def _pca_power_sql(dialect: str, width: int = 32) -> str:
 def embedding_pca_power_iteration(spark, sf_dir):
     from bdt_spark.sources.io import (
         exchange_width_for_bytes,
-        fixture_scan_bytes,
+        plan_scan_bytes,
     )
 
     load_fixture_tables(spark, sf_dir)
     # the exchanged stream is the EXPLODED projection: dim x scan rows
     w = exchange_width_for_bytes(
-        fixture_scan_bytes(spark, "embeddings") * 64
+        plan_scan_bytes(spark.table("embeddings")) * 64
     )
     return spark.sql(_pca_power_sql("spark", width=w))
 

@@ -1224,7 +1224,7 @@ def _pmi_tail(src: str) -> str:
 
 
 # Scan-size gate for the heavy-corpus plan shape (see
-# sources/io.py:fixture_scan_bytes): scan fan-out and CTE
+# sources/io.py:plan_scan_bytes): scan fan-out and CTE
 # materialization both trade FIXED overhead (extra exchanges / an extra
 # eager action + cache write) for savings PROPORTIONAL to corpus CPU,
 # so one exact-bytes threshold decides both. Measured for pmi at sf0.1:
@@ -1287,7 +1287,7 @@ def _pmi_lift_sql(dialect: str) -> str:
     "host). Materialized once: 10 s steady, spread gone (5 consecutive "
     "sf10 runs 9.5-10.2 s after JIT). Both the materialization AND the "
     "scan fan-out it reintroduced are GATED on the exact on-disk scan "
-    "size (fixture_scan_bytes >= 1 MB; rationale and per-shard A/Bs "
+    "size (plan_scan_bytes >= 1 MB; rationale and per-shard A/Bs "
     "measurements at _MATERIALIZE_MIN_SCAN_BYTES): pmi is a measured "
     "fan-out NON-member at probe scale, so the small arm is the bare "
     "inline plan (1.25 s at sf0.1 vs 2.2 s fanned). At 100 TB the gate "
@@ -1296,10 +1296,10 @@ def _pmi_lift_sql(dialect: str) -> str:
 )
 def text_pmi_cooccurrence(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
-    from bdt_spark.sources.io import fanout_rewrite, fixture_scan_bytes
+    from bdt_spark.sources.io import fanout_rewrite, plan_scan_bytes
 
     load_fixture_tables(spark, sf_dir)
-    if fixture_scan_bytes(spark, "documents") < _MATERIALIZE_MIN_SCAN_BYTES:
+    if plan_scan_bytes(spark.table("documents")) < _MATERIALIZE_MIN_SCAN_BYTES:
         return spark.sql(_pmi_lift_sql("spark"))
     tok = spark.sql(fanout_rewrite(spark, _PMI_SPARK_WORDS, ("documents",)))
     tok = tok.persist()

@@ -76,8 +76,9 @@ def query(
 # (3 reps, median) — see the round-12 SCALE.md section for the table.
 # @query-style callables opt in by calling io.fanned_table instead.
 FANOUT_DOCS_QUERIES: frozenset[str] = frozenset({
-    # r12 sf1 interleaved on/off A/B medians (tools/ab_fanout.py; on/off
-    # ratio in comments — every member measured, every non-member too):
+    # r12 sf1 interleaved on/off A/B medians (on/off ratio in comments,
+    # result file bench_results/ab_fanout_sf1_r12.txt — every member
+    # measured, every non-member too):
     "text_winnowing_fingerprints",     # 0.10x  (44.0 -> 4.3 s)
     "text_tfidf_topk_similar",         # 0.30x  (14.6 -> 4.3 s)
     "text_naive_bayes_langid",         # 0.42x  ( 5.3 -> 2.3 s)

@@ -557,11 +557,11 @@ _HLL_MATERIALIZE_MIN_BYTES = 1 << 30
 
 def _agg_hll_sketch_merge_fn(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
-    from bdt_spark.sources.io import fixture_scan_bytes
+    from bdt_spark.sources.io import plan_scan_bytes
     from bdt_spark.sources.io import load_fixture_tables as _load
 
     _load(spark, sf_dir)
-    if fixture_scan_bytes(spark, "events") < _HLL_MATERIALIZE_MIN_BYTES:
+    if plan_scan_bytes(spark.table("events")) < _HLL_MATERIALIZE_MIN_BYTES:
         return spark.sql(_HLL_MERGE_SPARK_BARE)
     pairs = spark.sql(_HLL_PAIRS_SPARK).persist()
     pairs.count()  # eager: 3 consumers in ONE action recompute a lazy cache

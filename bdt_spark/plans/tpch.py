@@ -494,16 +494,15 @@ _Q18_SPARK = f"""
     "text; DuckDB plans its own semi-join.",
 )
 def tpch_q18_large_volume(spark, sf_dir):
-    from bdt_spark.sources.io import ensure_heavy_arm_geometry, fixture_scan_bytes
+    from bdt_spark.sources.io import ensure_heavy_arm_geometry, plan_scan_bytes
 
     load_fixture_tables(spark, sf_dir)
-    big = (
-        fixture_scan_bytes(spark, "lineitem") >= _BIG_FACT_MIN_BYTES
-    )
+    b = plan_scan_bytes(spark.table("lineitem"))
+    big = b >= _BIG_FACT_MIN_BYTES
     if big:
         # heavy arm: shuffle partitions derived from the same scan bytes
         # that selected the arm (see ensure_heavy_arm_geometry).
-        ensure_heavy_arm_geometry(spark, "lineitem")
+        ensure_heavy_arm_geometry(spark, b)
     return spark.sql(
         _Q18_SPARK.format(
             hints="/*+ MERGE(q), MERGE(customer) */ " if big else "",
@@ -656,17 +655,16 @@ _Q21_SPARK = """
     "the DuckDB oracle (sf0.01 gate; sf0.1 full-result cross-check).",
 )
 def tpch_q21_waiting_supplier(spark, sf_dir):
-    from bdt_spark.sources.io import ensure_heavy_arm_geometry, fixture_scan_bytes
+    from bdt_spark.sources.io import ensure_heavy_arm_geometry, plan_scan_bytes
 
     load_fixture_tables(spark, sf_dir)
-    big = (
-        fixture_scan_bytes(spark, "lineitem") >= _BIG_FACT_MIN_BYTES
-    )
+    b = plan_scan_bytes(spark.table("lineitem"))
+    big = b >= _BIG_FACT_MIN_BYTES
     if big:
         # heavy arm: raise shuffle partitions to the measured-safe
         # geometry (sf100: 512 rides through where 256 can die —
         # SCALE.md r13, encoded here per VERDICT r13 #1).
-        ensure_heavy_arm_geometry(spark, "lineitem")
+        ensure_heavy_arm_geometry(spark, b)
     return spark.sql(_Q21_SPARK if big else _Q21_ORACLE)
 
 # --- q22: global sales opportunity (anti join + scalar subquery) ------------

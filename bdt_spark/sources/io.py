@@ -474,15 +474,12 @@ _FANOUT_CANDIDATE_TABLES = frozenset({"documents"})
 # tables whose registered parquet had fewer row groups than cores.
 _UNDERSPLIT: dict[int, dict[str, int]] = {}
 
-# session-key -> {table name: on-disk bytes of the registered fixture
-# file/dir} — EXACT input statistics recorded at registration time.
-_TABLE_BYTES: dict[int, dict[str, int]] = {}
-
 
 def hadoop_exists(spark: SparkSession, p: str) -> bool:
     """Driver-side existence check through the Hadoop FS abstraction —
     works on any filesystem the session can reach, unlike
-    os.path.isdir; used by the incremental state/index guards."""
+    os.path.isdir; used by fixture registration and the incremental
+    state/index guards."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     jp = jvm_path(p)
     return jp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jp)
@@ -500,22 +497,60 @@ def _path_bytes(path: str) -> int:
     return os.path.getsize(path)
 
 
-def fixture_scan_bytes(spark: SparkSession, table: str) -> int:
-    """On-disk bytes of a registered fixture table — the exact number a
-    small-vs-large plan gate needs, where Catalyst's derived estimates
-    are exactly the thing that cannot be trusted (it sizes an explode's
-    output from the scan's column ratio; see text_tfidf_topk_similar's
-    sf100 finding). Queries use this to pick between a small-scan plan
-    and a heavy-corpus plan: fan-out exchanges and persist+count
-    actions cost FIXED overhead but save work PROPORTIONAL to corpus
-    CPU, so below a byte threshold the bare inline plan wins (measured:
-    text_pmi_cooccurrence 1.25 s bare vs 2.2 s fanned+materialized at
-    sf0.1) and above it the heavy plan wins (10 s steady vs 10-37 s
-    bimodal at sf10).
-    Returns a large sentinel when the table is unknown, so gates fail
-    toward the scale-safe materialized path."""
-    key = id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)
-    return _TABLE_BYTES.get(key, {}).get(table, 1 << 60)
+# Logical operators that never emit more rows than they read (a Union
+# emits the sum of its inputs), so the scanned bytes bound the rows the
+# plan produces. Anything else (Join, Generate, Expand, a sample with
+# replacement, Python map/flatMap nodes, ...) makes the plan unbounded.
+_ROW_BOUNDED = frozenset((
+    "Aggregate", "CTERelationDef", "Deduplicate", "Distinct", "Except",
+    "Filter", "GlobalLimit", "Intersect", "LocalLimit", "Offset",
+    "Project", "RebalancePartitions", "Repartition",
+    "RepartitionByExpression", "ResolvedHint", "Sort", "SubqueryAlias",
+    "Tail", "Union", "View", "Window", "WithCTE",
+))
+# Leaves whose size is known exactly without a job: driver-local rows
+# and spark.range.
+_SIZED_LEAVES = frozenset(("LocalRelation", "OneRowRelation", "Range"))
+_UNBOUNDED = 1 << 60
+
+
+def plan_scan_bytes(df: DataFrame) -> int:
+    """On-disk bytes of the files `df` scans: the one input size every
+    small-vs-large plan gate reads.
+
+    Exact input statistics choose the plan, not Catalyst's estimates
+    (which size an explode's output from the scan's column ratio; see
+    text_tfidf_topk_similar's sf100 finding). Fan-out exchanges and
+    persist+count actions cost FIXED overhead but save work PROPORTIONAL
+    to the input, so below a gate's byte threshold the bare plan wins.
+
+    Walks the analyzed plan. File scans report their file index's
+    `sizeInBytes` (the listing Spark already holds, local or object
+    store); local relations and ranges report their exact stats size.
+    Any other leaf (an RDD, JDBC, ...), or any operator outside
+    _ROW_BOUNDED, returns the _UNBOUNDED sentinel (1 << 60), so every
+    gate fails toward its scale-safe heavy arm and the widest exchange."""
+    total = 0
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        n = children.size()
+        name = node.nodeName()
+        if n:
+            if name not in _ROW_BOUNDED:
+                return _UNBOUNDED
+            stack.extend(children.apply(i) for i in range(n))
+        elif name == "LogicalRelation":
+            rel = node.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return _UNBOUNDED
+            total += rel.location().sizeInBytes()
+        elif name in _SIZED_LEAVES:
+            total += node.stats().sizeInBytes()
+        elif name != "CTERelationRef":  # its definition is walked once
+            return _UNBOUNDED
+    return total
 
 
 # Compressed scan bytes per shuffle partition for GATED HEAVY ARMS.
@@ -544,7 +579,7 @@ def exchange_width_for_bytes(b: int, floor: int = 32) -> int:
     bucketed projections) is strictly smaller than its input scan, so
     the width errs WIDE — err-wide costs scheduling overhead on small
     data, err-narrow costs a straggler/spill stage at scale. The
-    unknown-table sentinel (1<<60) clamps to 4096, failing wide like
+    unbounded-plan sentinel (1<<60) clamps to 4096, failing wide like
     the heavy-arm hook."""
     w = floor
     while w < 4096 and w * _HEAVY_BYTES_PER_SHUFFLE_PARTITION < b:
@@ -552,10 +587,11 @@ def exchange_width_for_bytes(b: int, floor: int = 32) -> int:
     return w
 
 
-def ensure_heavy_arm_geometry(spark: SparkSession, table: str) -> int:
+def ensure_heavy_arm_geometry(spark: SparkSession, b: int) -> int:
     """Execution geometry for a size-gated heavy plan arm: derive shuffle
-    partitions from the fact table's EXACT scan bytes and raise the
-    session's `spark.sql.shuffle.partitions` if it is below that.
+    partitions from `b`, the exact scan bytes the gate already read
+    (plan_scan_bytes), and raise the session's
+    `spark.sql.shuffle.partitions` if it is below that.
 
     Why this exists: the big-fact gate (_BIG_FACT_MIN_BYTES in
     plans/tpch.py) picks the plan SHAPE from scan bytes, but a correct
@@ -569,13 +605,10 @@ def ensure_heavy_arm_geometry(spark: SparkSession, table: str) -> int:
     [64, 4096]); AQE partition coalescing (on by default,
     session.py) merges small shuffle reads back down, so a later small
     query in the same session pays scheduling overhead at worst, never a
-    plan regression. An unknown table's 1<<60 sentinel clamps to 4096 —
+    plan regression. An unbounded plan's sentinel clamps to 4096 —
     failing wide, the same direction as the gate itself. Returns the
     partition count in effect after the call."""
-    b = fixture_scan_bytes(spark, table)
-    needed = 64
-    while needed < 4096 and needed * _HEAVY_BYTES_PER_SHUFFLE_PARTITION < b:
-        needed *= 2
+    needed = exchange_width_for_bytes(b, floor=64)
     current = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if needed > current:
         spark.conf.set("spark.sql.shuffle.partitions", str(needed))
@@ -669,7 +702,9 @@ def load_fixture_tables(
     if not force and _FIXTURES_LOADED.get(key) == sf_dir:
         return _Views(spark, tables)
     present = [
-        t for t in tables if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
+        t
+        for t in tables
+        if hadoop_exists(spark, os.path.join(sf_dir, f"{t}.parquet"))
     ]
     # Registration is driver-side metadata work (footer peek + DataFrame
     # creation + temp-view registration) — ~0.2 s per table serially, all
@@ -679,12 +714,10 @@ def load_fixture_tables(
 
     par = spark.sparkContext.defaultParallelism
     undersplit: dict[str, int] = {}
-    table_bytes: dict[str, int] = {}
 
     def _reg(t: str):
         path = os.path.join(sf_dir, f"{t}.parquet")
         df = register_table(spark, t, path)
-        table_bytes[t] = _path_bytes(path)
         if t in _FANOUT_CANDIDATE_TABLES and _parquet_scan_splits(path) < par:
             undersplit[t] = par
         return t, df
@@ -701,7 +734,6 @@ def load_fixture_tables(
         if t not in out and spark.catalog.tableExists(t):
             spark.catalog.dropTempView(t)
     _UNDERSPLIT[key] = undersplit
-    _TABLE_BYTES[key] = table_bytes
     _FIXTURES_LOADED[key] = sf_dir
     return out
 

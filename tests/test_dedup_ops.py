@@ -597,28 +597,29 @@ def test_incremental_state_compaction_probe_invariant(spark, tmp_path):
     assert after == before
 
 
-def test_incremental_embedding_gate_both_arms_agree(spark, sf_dir):
+def test_incremental_embedding_gate_both_arms_agree(
+    spark, sf_dir, monkeypatch
+):
     """dedup_incremental_embedding picks bare vs exchange-reuse from
     exact embeddings scan bytes; both arms must return identical rows
     (the plan gate changes exchanges, never semantics)."""
     import bdt_spark.plans as plans
-    from bdt_spark.sources import io as bio
+    from bdt_spark.plans import pipeline_dedup
 
     fn = plans.get_query("dedup_incremental_embedding").fn
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
-    bio.load_fixture_tables(spark, sf_dir)
-    small_rows = fn(spark, sf_dir).collect()
-    recorded = bio._TABLE_BYTES[key]["embeddings"]
-    bio._TABLE_BYTES[key]["embeddings"] = 1 << 40
-    try:
-        assert fn(spark, sf_dir).collect() == small_rows
-        assert len(small_rows) > 0
-    finally:
-        bio._TABLE_BYTES[key]["embeddings"] = recorded
+    small = fn(spark, sf_dir)
+    small_rows = small.collect()
+    monkeypatch.setattr(pipeline_dedup, "_INC_EMB_EXCHANGE_MIN_BYTES", 0)
+    big = fn(spark, sf_dir)
+
+    def hinted(df):
+        return "RepartitionByExpression" in (
+            df._jdf.queryExecution().analyzed().toString()
+        )
+
+    assert not hinted(small) and hinted(big)
+    assert big.collect() == small_rows
+    assert len(small_rows) > 0
 
 
 def test_incremental_probe_max_batch_replay_guard(spark, tmp_path):
@@ -816,7 +817,7 @@ def test_exchange_width_for_bytes_scales_with_scan():
     assert exchange_width_for_bytes(1 << 20, floor=64) == 64
 
 
-def test_incremental_minhash_width_arms_agree(spark, sf_dir):
+def test_incremental_minhash_width_arms_agree(spark, sf_dir, monkeypatch):
     """dedup_incremental_minhash derives its sig-CTE exchange width from
     documents scan bytes; a forced 100x-bytes width must return
     identical rows (the width changes exchanges, never semantics)."""
@@ -824,17 +825,9 @@ def test_incremental_minhash_width_arms_agree(spark, sf_dir):
     from bdt_spark.sources import io as bio
 
     fn = plans.get_query("dedup_incremental_minhash").fn
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
-    bio.load_fixture_tables(spark, sf_dir)
     small_rows = fn(spark, sf_dir).collect()
-    recorded = bio._TABLE_BYTES[key]["documents"]
-    bio._TABLE_BYTES[key]["documents"] = 10 << 30  # -> width 1024
-    try:
-        assert fn(spark, sf_dir).collect() == small_rows
-        assert len(small_rows) > 0
-    finally:
-        bio._TABLE_BYTES[key]["documents"] = recorded
+    monkeypatch.setattr(bio, "plan_scan_bytes", lambda df: 10 << 30)
+    big = fn(spark, sf_dir)  # -> width 1024
+    assert "1024" in big._jdf.queryExecution().analyzed().toString()
+    assert big.collect() == small_rows
+    assert len(small_rows) > 0

@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 import bdt_spark.operators.globalorder as go
 from bdt_spark.operators.cacheutil import release
 from bdt_spark.operators.globalorder import ntile_from_index, with_global_order
+from bdt_spark.sources.io import (
+    FIXTURE_TABLES,
+    load_fixture_tables,
+    plan_scan_bytes,
+)
 
 GO_QUERIES = (
     "features_quantile_binning",
@@ -272,7 +277,7 @@ def test_gate_unbounded_plans_take_heavy_arm(spark, monkeypatch):
     base = spark.range(0, 100).select(
         F.col("id").alias("tie"), F.col("id").alias("val")
     )
-    assert go.plan_scan_bytes(base) == 800  # spark.range: 8 bytes a row
+    assert plan_scan_bytes(base) == 800  # spark.range: 8 bytes a row
     unbounded = {
         "explode": base.select(
             "tie", F.explode(F.array("val", "val")).alias("val")
@@ -283,10 +288,11 @@ def test_gate_unbounded_plans_take_heavy_arm(spark, monkeypatch):
             "tie long, val long",
         ),
     }
-    monkeypatch.setattr(go, "WINDOW_MAX_BYTES", 1 << 62)
+    # every size below the unbounded sentinel takes the window arm
+    monkeypatch.setattr(go, "WINDOW_MAX_BYTES", 1 << 60)
     for name, df in {"bounded": base, **unbounded}.items():
         expect_heavy = name != "bounded"
-        assert (go.plan_scan_bytes(df) is None) == expect_heavy, name
+        assert (plan_scan_bytes(df) == 1 << 60) == expect_heavy, name
         before = _persisted(spark)
         res, _, _ = with_global_order(
             df, [F.col("tie").asc()], index_col="rn"
@@ -297,13 +303,26 @@ def test_gate_unbounded_plans_take_heavy_arm(spark, monkeypatch):
 
 def test_gate_reads_file_index_bytes(spark, sf_dir):
     """File scans report the file index's on-disk bytes, summed over
-    every scan in the plan."""
+    every scan in the plan; so do the registered fixture views, at
+    sf0.001 and sf0.01."""
     path = os.path.join(sf_dir, "orders.parquet")
     df = spark.read.parquet(path)
     size = os.path.getsize(path)
-    assert go.plan_scan_bytes(df) == size
-    assert go.plan_scan_bytes(df.groupBy("o_custkey").count()) == size
-    assert go.plan_scan_bytes(df.unionByName(df)) == 2 * size
+    assert plan_scan_bytes(df) == size
+    assert plan_scan_bytes(df.groupBy("o_custkey").count()) == size
+    assert plan_scan_bytes(df.unionByName(df)) == 2 * size
+
+    sf001 = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    try:
+        for d in (sf_dir, sf001):
+            if not os.path.isdir(d):
+                continue
+            load_fixture_tables(spark, d)
+            for t in FIXTURE_TABLES:
+                size = os.path.getsize(os.path.join(d, f"{t}.parquet"))
+                assert plan_scan_bytes(spark.table(t)) == size, (d, t)
+    finally:
+        load_fixture_tables(spark, sf_dir)
 
 
 def test_rewritten_queries_have_no_single_partition_window(

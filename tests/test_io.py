@@ -291,3 +291,32 @@ def test_undersplit_gate_counts_directory_parts(spark, tmp_path):
         )
     finally:
         bio.load_fixture_tables(spark, full, force=True)
+
+
+def test_fixtures_register_from_hadoop_fs_uri(spark, sf_dir):
+    """A Hadoop-FS URI registers the same tables as the plain path, with
+    the same plan_scan_bytes, and a gated query returns the same rows."""
+    import os
+
+    import bdt_spark.plans as plans
+    from bdt_spark.sources.io import (
+        FIXTURE_TABLES,
+        load_fixture_tables,
+        plan_scan_bytes,
+    )
+
+    q = plans.get_query("orders_market_basket_lift").fn
+    load_fixture_tables(spark, sf_dir, force=True)
+    plain = {t: plan_scan_bytes(spark.table(t)) for t in FIXTURE_TABLES}
+    rows = q(spark, sf_dir).collect()
+    uri = "file://" + os.path.abspath(sf_dir)
+    try:
+        out = load_fixture_tables(spark, uri, force=True)
+        assert sorted(out) == sorted(FIXTURE_TABLES)
+        assert {
+            t: plan_scan_bytes(spark.table(t)) for t in FIXTURE_TABLES
+        } == plain
+        assert q(spark, uri).collect() == rows
+        assert rows
+    finally:
+        load_fixture_tables(spark, sf_dir, force=True)

@@ -307,31 +307,26 @@ def test_no_unjustified_broadcast_over_generate(spark, sf_dir, built_query):
     )
 
 
-def test_gated_queries_big_arm_broadcast_over_generate(spark, sf_dir):
+def test_gated_queries_big_arm_broadcast_over_generate(
+    spark, sf_dir, monkeypatch
+):
     """r12 ADVICE: the repo-wide guard above audits queries at fixture
     scale, so size-gated queries always present their SMALL arm — the
     heavy-arm plan shapes that motivated the sf100 failures were never
-    audited. Build each gated query's big arm explicitly (table-bytes
-    override for pmi, eager_persist_min_bytes=0 for minhash) and pin
-    its flag count: the heavy arms plan joins from MATERIALIZED true
-    sizes and must measure ZERO broadcast-over-Generate hits."""
+    audited. Build each gated query's big arm explicitly (threshold 0
+    for pmi, eager_persist_min_bytes=0 for minhash) and pin its flag
+    count: the heavy arms plan joins from MATERIALIZED true sizes and
+    must measure ZERO broadcast-over-Generate hits."""
     from bdt_spark.operators.dedup import minhash_pairs
     from bdt_spark.planaudit import broadcast_over_generate
-    from bdt_spark.sources import io as bio
+    from bdt_spark.plans import pipeline_text
 
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
-    bio.load_fixture_tables(spark, sf_dir)
-    recorded = bio._TABLE_BYTES[key]["documents"]
-    bio._TABLE_BYTES[key]["documents"] = 1 << 40
     try:
-        pmi = plans.get_query("text_pmi_cooccurrence").fn(spark, sf_dir)
+        with monkeypatch.context() as m:
+            m.setattr(pipeline_text, "_MATERIALIZE_MIN_SCAN_BYTES", 0)
+            pmi = plans.get_query("text_pmi_cooccurrence").fn(spark, sf_dir)
         assert broadcast_over_generate(pmi) == []
     finally:
-        bio._TABLE_BYTES[key]["documents"] = recorded
         spark.catalog.clearCache()
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -283,69 +283,67 @@ def test_fan_out_cpu_stage_only_when_input_too_coarse(spark, tmp_path):
     assert _fan_out_cpu_stage(inmem) is inmem
 
 
-def test_pmi_materialize_gate_both_arms_agree(spark, sf_dir):
+def _rdd_backed(spark):
+    """A plan no file index can size (its leaf is an RDD)."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,)]), "id long"
+    )
+
+
+def test_pmi_materialize_gate_both_arms_agree(spark, sf_dir, monkeypatch):
     """text_pmi_cooccurrence picks its plan from the EXACT on-disk scan
-    size (io.fixture_scan_bytes): small scans run the bare inline plan
+    size (io.plan_scan_bytes): small scans run the bare inline plan
     (pmi is a measured fan-out NON-member — 1.25 s bare vs 2.2 s
     fanned+materialized at sf0.1), big scans fan out the token explode
     and materialize the six-times-consumed token CTE (kills the sf10
     10-37 s bimodality). Both arms must return identical rows, and the
-    gate must read the recorded fixture statistics, not Catalyst's
+    gate must read the files' on-disk bytes, not Catalyst's
     estimates."""
-    from bdt_spark.sources import io as bio
+    import os
+
+    from bdt_spark.plans import pipeline_text
+    from bdt_spark.sources.io import plan_scan_bytes
 
     pmi = plans.get_query("text_pmi_cooccurrence").fn
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
 
     inline = pmi(spark, sf_dir)
     assert "InMemoryTableScan" not in inline._jdf.queryExecution().toString()
     inline_rows = inline.collect()
 
-    from bdt_spark.plans.pipeline_text import _MATERIALIZE_MIN_SCAN_BYTES
-
-    recorded = bio._TABLE_BYTES[key]["documents"]
+    size = plan_scan_bytes(spark.table("documents"))
     # fixture is tiny -> inline arm taken
-    assert 0 < recorded < _MATERIALIZE_MIN_SCAN_BYTES
-    bio._TABLE_BYTES[key]["documents"] = 1 << 40
+    assert size == os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
+    assert 0 < size < pipeline_text._MATERIALIZE_MIN_SCAN_BYTES
     try:
-        mat = pmi(spark, sf_dir)
+        with monkeypatch.context() as m:
+            m.setattr(pipeline_text, "_MATERIALIZE_MIN_SCAN_BYTES", 0)
+            mat = pmi(spark, sf_dir)
         assert "InMemoryTableScan" in mat._jdf.queryExecution().toString()
         assert mat.collect() == inline_rows
     finally:
-        bio._TABLE_BYTES[key]["documents"] = recorded
         spark.catalog.clearCache()
 
-    # unknown table -> large sentinel -> the scale-safe materialized arm
-    assert bio.fixture_scan_bytes(spark, "no_such_table") == 1 << 60
+    # unsizable input -> large sentinel -> the scale-safe materialized arm
+    assert plan_scan_bytes(_rdd_backed(spark)) == 1 << 60
 
 
-def test_q21_gate_both_arms_agree(spark, sf_dir):
+def test_q21_gate_both_arms_agree(spark, sf_dir, monkeypatch):
     """tpch_q21_waiting_supplier picks correlated vs decorrelated from
     the exact lineitem scan bytes (plans/tpch._BIG_FACT_MIN_BYTES).
     The decorrelated arm is a different ALGORITHM (supplier-level
     window over per-order ship maxima with tie handling), so both arms
     must return identical rows; q18's big arm must plan its semi-join
     as sort-merge (the sf100 broadcast-death fix)."""
-    from bdt_spark.sources import io as bio
+    from bdt_spark.plans import tpch
 
     q21 = plans.get_query("tpch_q21_waiting_supplier").fn
     q18 = plans.get_query("tpch_q18_large_volume").fn
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
 
     small_rows = q21(spark, sf_dir).collect()
     q18_small_rows = q18(spark, sf_dir).collect()
 
-    recorded = bio._TABLE_BYTES[key]["lineitem"]
     parts = spark.conf.get("spark.sql.shuffle.partitions")
-    bio._TABLE_BYTES[key]["lineitem"] = 2 << 30
+    monkeypatch.setattr(tpch, "_BIG_FACT_MIN_BYTES", 0)
     try:
         big_rows = q21(spark, sf_dir).collect()
         assert big_rows == small_rows
@@ -360,21 +358,21 @@ def test_q21_gate_both_arms_agree(spark, sf_dir):
         assert "BroadcastExchange" not in text
         assert q18_df.collect() == q18_small_rows
     finally:
-        bio._TABLE_BYTES[key]["lineitem"] = recorded
         # the big arms raise shuffle partitions (heavy-arm geometry);
         # restore the test session's small default
         spark.conf.set("spark.sql.shuffle.partitions", parts)
 
 
-def test_heavy_arm_geometry_gate(spark, sf_dir):
+def test_heavy_arm_geometry_gate(spark, sf_dir, monkeypatch):
     """VERDICT r13 #1: when the big-fact gate selects a heavy arm, the
     execution geometry must come WITH it — shuffle partitions derived
     from the same scan bytes that selected the arm (sf100 measured: 512
     rides through where 256 can transiently die; SCALE.md r13). Pin:
     (a) the small arm leaves the session conf alone; (b) the big arm
-    raises it to the byte-derived count; (c) the hook never LOWERS a
-    caller's higher setting; (d) the unknown-table sentinel clamps to
-    the 4096 ceiling."""
+    raises it to the count derived from the scan bytes; (c) the hook
+    never LOWERS a caller's higher setting; (d) an unsizable plan's
+    sentinel clamps to the 4096 ceiling."""
+    from bdt_spark.plans import tpch
     from bdt_spark.sources import io as bio
     from bdt_spark.sources.io import (
         _HEAVY_BYTES_PER_SHUFFLE_PARTITION,
@@ -382,73 +380,122 @@ def test_heavy_arm_geometry_gate(spark, sf_dir):
     )
 
     q21 = plans.get_query("tpch_q21_waiting_supplier").fn
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
     bio.load_fixture_tables(spark, sf_dir)
     parts = spark.conf.get("spark.sql.shuffle.partitions")
-    recorded = bio._TABLE_BYTES[key]["lineitem"]
+    assert int(parts) < 64
     try:
         # small arm (fixture scale): conf untouched
         q21(spark, sf_dir)
         assert spark.conf.get("spark.sql.shuffle.partitions") == parts
 
-        # big arm at 6.4 GB (the measured sf100 point): raised to 512
-        bio._TABLE_BYTES[key]["lineitem"] = int(6.4e9)
+        # big arm at fixture bytes: raised to the 64 floor
+        with monkeypatch.context() as m:
+            m.setattr(tpch, "_BIG_FACT_MIN_BYTES", 0)
+            q21(spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "64"
+
+        # 6.4 GB (the measured sf100 point): raised to 512
         assert 256 * _HEAVY_BYTES_PER_SHUFFLE_PARTITION < 6.4e9
-        q21(spark, sf_dir)
+        assert ensure_heavy_arm_geometry(spark, int(6.4e9)) == 512
         assert spark.conf.get("spark.sql.shuffle.partitions") == "512"
 
         # never lowers: a caller already above the derived count keeps it
         spark.conf.set("spark.sql.shuffle.partitions", "2048")
-        assert ensure_heavy_arm_geometry(spark, "lineitem") == 2048
+        assert ensure_heavy_arm_geometry(spark, int(6.4e9)) == 2048
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2048"
 
-        # unknown table -> 1<<60 sentinel -> ceiling, not a huge number
-        assert ensure_heavy_arm_geometry(spark, "no_such_table") == 4096
+        # unsizable plan -> 1<<60 sentinel -> ceiling, not a huge number
+        unknown = bio.plan_scan_bytes(_rdd_backed(spark))
+        assert ensure_heavy_arm_geometry(spark, unknown) == 4096
     finally:
-        bio._TABLE_BYTES[key]["lineitem"] = recorded
         spark.conf.set("spark.sql.shuffle.partitions", parts)
 
 
-def test_r16_materialize_gate_arms_agree(spark, sf_dir):
+def test_r16_materialize_gate_arms_agree(spark, sf_dir, monkeypatch):
     """r16 scan-collapse gates: orders_market_basket_lift,
     events_anomaly_robust_zscore, and agg_hll_sketch_merge pick between
     a bare inline plan and a persist-the-shared-rollup plan from exact
     fixture scan bytes (the pmi materialization doctrine). The arms are
     different PLANS of the same relation, so they must return identical
-    rows; pin both directions at fixture scale by monkeypatching the
-    recorded bytes across each gate."""
+    rows; pin both directions at fixture scale by monkeypatching each
+    gate's threshold to 0."""
     from bdt_spark.operators.cacheutil import release
-    from bdt_spark.sources import io as bio
+    from bdt_spark.plans import pipeline_analytics, relational
 
-    key = (
-        id(spark._jsparkSession)
-        if hasattr(spark, "_jsparkSession")
-        else id(spark)
-    )
-    bio.load_fixture_tables(spark, sf_dir)
     cases = [
-        ("orders_market_basket_lift", "lineitem"),
-        ("events_anomaly_robust_zscore", "events"),
-        ("agg_hll_sketch_merge", "events"),
+        ("orders_market_basket_lift",
+         pipeline_analytics, "_BASKET_MATERIALIZE_MIN_BYTES"),
+        ("events_anomaly_robust_zscore",
+         pipeline_analytics, "_ANOMALY_MATERIALIZE_MIN_BYTES"),
+        ("agg_hll_sketch_merge", relational, "_HLL_MATERIALIZE_MIN_BYTES"),
     ]
-    for name, table in cases:
+    for name, module, threshold in cases:
         fn = plans.get_query(name).fn
-        recorded = bio._TABLE_BYTES[key][table]
-        try:
-            df = fn(spark, sf_dir)  # fixture scale: bare arm
-            bare_rows = df.collect()
-            release(df)
-            bio._TABLE_BYTES[key][table] = 2 << 30  # force the persist arm
+        df = fn(spark, sf_dir)  # fixture scale: bare arm
+        assert "InMemoryTableScan" not in df._jdf.queryExecution().toString()
+        bare_rows = df.collect()
+        release(df)
+        with monkeypatch.context() as m:
+            m.setattr(module, threshold, 0)  # force the persist arm
             df = fn(spark, sf_dir)
-            gated_rows = df.collect()
-            release(df)
-        finally:
-            bio._TABLE_BYTES[key][table] = recorded
+        assert "InMemoryTableScan" in df._jdf.queryExecution().toString()
+        gated_rows = df.collect()
+        release(df)
         assert gated_rows == bare_rows, f"{name}: gate arms diverge"
+
+
+def test_market_basket_null_orderkey_matches_oracle(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """orders_market_basket_lift on a lineitem copy with NULL l_orderkey
+    (where l_orderkey & 7 = 0): the per-order array form puts all NULL
+    keys in one array row, which must count toward the category margins
+    but not toward n_orders or the pairs (the oracle's COUNT(DISTINCT)
+    and self-join equality drop NULL). Both gate arms match the DuckDB
+    oracle."""
+    import os
+
+    import duckdb
+
+    from bdt_spark.operators.cacheutil import release
+    from bdt_spark.plans import pipeline_analytics
+    from bdt_spark.sources.io import load_fixture_tables
+    from tools.check_oracle import canonicalize
+
+    src = os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "lineitem.parquet"
+    )
+    if not os.path.exists(src):
+        pytest.skip("needs the sf0.01 fixtures")
+    con = duckdb.connect()
+    con.sql(
+        "COPY (SELECT * REPLACE (CASE WHEN l_orderkey & 7 = 0 THEN NULL "
+        f"ELSE l_orderkey END AS l_orderkey) FROM read_parquet('{src}')) "
+        f"TO '{tmp_path}/lineitem.parquet' (FORMAT PARQUET)"
+    )
+    con.sql(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/lineitem.parquet')"
+    )
+    q = plans.get_query("orders_market_basket_lift")
+    want = canonicalize(con.sql(q.oracle).df())
+    assert want[1]
+
+    d = str(tmp_path)
+    try:
+        for threshold in (None, 0):  # bare arm, then the persist arm
+            if threshold is not None:
+                monkeypatch.setattr(
+                    pipeline_analytics, "_BASKET_MATERIALIZE_MIN_BYTES",
+                    threshold,
+                )
+            load_fixture_tables(spark, d, tables=("lineitem",), force=True)
+            df = q.fn(spark, d)
+            got = canonicalize(df.toPandas())
+            release(df)
+            assert got == want, f"threshold={threshold}"
+    finally:
+        load_fixture_tables(spark, sf_dir, force=True)
 
 
 def test_registry_sf10_sweep_coverage():

@@ -17,7 +17,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bdt_spark.session import get_spark  # noqa: E402
 from bdt_spark.sources.io import FIXTURE_TABLES  # noqa: E402

@@ -8,11 +8,12 @@ Usage: python tools/explain_audit.py [query ...]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bdt_spark.session import get_spark  # noqa: E402
 import bdt_spark.plans as plans  # noqa: E402

@@ -21,10 +21,11 @@ Exit 1 on the first mismatching case, printing the SQL for repro.
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLE_COLS = {
     "orders": {
