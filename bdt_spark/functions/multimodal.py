@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from bdt_spark.sources.io import fanned
+
 # Schema of the decoded-feature output — stable driver-visible contract.
 DECODE_SCHEMA = StructType(
     [
@@ -138,50 +140,6 @@ def _doc_pixels(doc_id: int, text: str) -> "object":
     return rgb.reshape(h, w, 3)
 
 
-def _fan_out_cpu_stage(df: DataFrame) -> DataFrame:
-    """Ensure a CPU-bound Python stage gets cluster-wide parallelism.
-
-    A small fixture table is often ONE parquet file -> one input split ->
-    the whole codec stage serializes onto a single Python worker (measured
-    6.6 s single-task vs sub-second spread at sf0.1). Repartition ONLY
-    when the input has fewer splits than cores — at 100 TB the scan
-    already has thousands of splits and this is a no-op, so the corpus is
-    never shuffled just for decode.
-
-    The gate reads `df.inputFiles()` — a pure plan-leaf inspection — and
-    NOT `df.rdd.getNumPartitions()`: with AQE enabled, touching `.rdd`
-    finalizes the adaptive plan, which materializes any upstream shuffle
-    query stages as an extra eager job before the encode starts (ADVICE
-    r9). File count under-approximates split count (one big file can hold
-    many splits), so the worst case of the heuristic is one redundant
-    round-robin shuffle of the narrow (doc_id, text) projection, never a
-    lost fan-out at scale. Scan-less inputs (in-memory relations) report
-    zero files and are left untouched — createDataFrame already spreads
-    its slices across defaultParallelism.
-
-    Post-shuffle inputs (r11 advice -> VERDICT r11 #5): the file-count
-    heuristic is only consulted when the plan's partition count actually
-    COMES from its file leaves. planaudit.effective_partitions first
-    traces the compiled plan for a partition-determining node (exchange /
-    coalesce / AQE shuffle read) — still a static inspection, no job —
-    so an input collapsed by an upstream coalesce(1) is fanned back out
-    correctly, and an input already repartitioned to >= target is left
-    alone instead of paying a second redundant exchange."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    from bdt_spark.planaudit import effective_partitions
-
-    eff = effective_partitions(df)
-    if eff is not None:
-        return df.repartition(target) if eff < target else df
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # exotic plan leaf: fanning out is only a heuristic
-        return df
-    if 0 < n_files < target:
-        return df.repartition(target)
-    return df
-
-
 def _encode_docs(df: DataFrame, text_col: str, encoder, pixels_fn=None) -> DataFrame:
     """Shared mapInPandas batching loop for doc -> image-payload encoders:
     `encoder(doc_id, pixels) -> bytes` supplies the per-row codec and
@@ -189,9 +147,8 @@ def _encode_docs(df: DataFrame, text_col: str, encoder, pixels_fn=None) -> DataF
     per-pixel formula; the JPEG path passes the flat-tile grayscale
     variant); the None/empty-text skip, batching, fan-out, and output
     schema live HERE once so the BMP/PPM, PNG, and JPEG paths cannot
-    drift apart. Callers must pass `df` as a (projection of a) table
-    read, not a post-shuffle frame — see the _fan_out_cpu_stage gate
-    contract."""
+    drift apart. The codec stage is CPU-bound Python, so an under-split
+    input is fanned out first (sources/io.fanned)."""
     pixels_fn = pixels_fn or _doc_pixels
 
     def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -205,7 +162,7 @@ def _encode_docs(df: DataFrame, text_col: str, encoder, pixels_fn=None) -> DataF
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
     # fan out AFTER the projection so only (doc_id, text) shuffles
-    return _fan_out_cpu_stage(df.select("doc_id", text_col)).mapInPandas(
+    return fanned(df.select("doc_id", text_col)).mapInPandas(
         encode_batches, IMAGE_SCHEMA
     )
 

@@ -543,7 +543,7 @@ def compact_ivf_index(spark: SparkSession, path: str) -> int:
 def ivf_index_stats(path: str, skew_threshold: float = 4.0) -> dict:
     """Per-cluster row counts and skew for a persisted IVF index, read
     from parquet FOOTERS on the driver (no Spark job — the same
-    metadata-peek pattern as io._parquet_scan_splits). Counts are
+    metadata-peek pattern as io._scan_units). Counts are
     physical rows (base + increments; an id re-ingested across batches
     counts each version until compaction — the gate is a heuristic, not
     an exact census). skew = max/mean cluster count;

@@ -35,7 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession, Window, functions as F
 
-from bdt_spark.sources.io import file_format, read_file
+from bdt_spark.sources.io import _local_path, _path_bytes, file_format, read_file
 
 
 @dataclass
@@ -54,6 +54,7 @@ class ComparisonResult:
 
 def _read_arrow_table(path: str, header: bool = True):
     fmt = file_format(path)
+    path = _local_path(path)
     if fmt == "parquet":
         import pyarrow.parquet as pq
 
@@ -116,8 +117,6 @@ def compare_files(
     writers anyway; pass method="positional" to pin exact reference
     semantics at any size (and accept the driver-memory cost)."""
     if method == "auto":
-        from bdt_spark.sources.io import _path_bytes
-
         total = _path_bytes(path1) + _path_bytes(path2)
         if total >= _POSITIONAL_MAX_BYTES:
             import sys

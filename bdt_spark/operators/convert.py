@@ -29,7 +29,7 @@ import shutil
 
 from pyspark.sql import SparkSession
 
-from bdt_spark.sources.io import file_format, read_file
+from bdt_spark.sources.io import _local_path, file_format, read_file
 
 
 class UnsupportedOutputError(ValueError):
@@ -59,7 +59,8 @@ def _write_arrow(df, output_path: str, *, single_file: bool, zstd: bool) -> None
     filesystem shared by driver and executors (local mode, NFS, a FUSE
     mount). That is weaker than a FileOutputCommitter, which commits
     through the Hadoop FS on any URI: on an object store (`s3://...`) this
-    writer does not work at all (os.* can't open the path), and even on a
+    writer does not work at all (convert refuses any scheme but `file:`
+    with a ValueError before a job runs), and even on a
     shared POSIX FS the driver-side sweep could in principle race one
     zombie speculative attempt still holding its `.tmp` (harmless to
     committed output — the sweep only ever deletes `.tmp` files — but the
@@ -189,6 +190,9 @@ def convert(
         )
     if partition_by and single_file:
         raise ValueError("partition_by and single_file are mutually exclusive")
+    if out_fmt == "arrow" or single_file:
+        # written (arrow) or moved (single_file) with driver-local file APIs
+        output_path = _local_path(output_path)
     df = read_file(spark, input_path, header=header)
     if single_file:
         df = df.coalesce(1)

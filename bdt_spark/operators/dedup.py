@@ -66,10 +66,8 @@ def _plan_size_bytes(df: DataFrame) -> int:
     zero. Any OTHER stats-less leaf (an exotic source) returns the
     scale-safe large answer (persists kept). Summing leaves ignores
     filters between leaf and operator — a conservative over-estimate
-    that can only err toward keeping the scale path. Callers piping a
-    transformed view whose input size no longer reflects the derived
-    shingle/signature work should pass eager_persist_min_bytes=0 to
-    force the scale path."""
+    that can only err toward keeping the scale path. A test forces the
+    scale path by setting EAGER_PERSIST_MIN_BYTES to 0."""
     try:
         jconf = df.sparkSession._jsparkSession.sessionState().conf()
         unknown = int(jconf.defaultSizeInBytes())
@@ -185,7 +183,6 @@ def minhash_pairs(
     stats: dict | None = None,
     k_hash: int = K_HASH,
     n_bands: int = N_BANDS,
-    eager_persist_min_bytes: int = EAGER_PERSIST_MIN_BYTES,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH + exact-Jaccard verification.
 
@@ -215,9 +212,9 @@ def minhash_pairs(
     defaults (8/4) are far below the 64-128 production near-dup uses;
     non-default geometry diverges from the DuckDB oracle by construction.
 
-    `eager_persist_min_bytes` gates BOTH the persist+count
-    materializations AND the verification plan arm on the Catalyst
-    input-size estimate (see EAGER_PERSIST_MIN_BYTES): above the gate,
+    EAGER_PERSIST_MIN_BYTES, read at call time, gates BOTH the
+    persist+count materializations AND the verification plan arm on
+    the Catalyst input-size estimate: above the gate,
     intermediates are cached and Jaccard verification re-shingles only
     the candidate docs (the sf100-viable shape — no corpus-derived
     cache anywhere); below it, nothing is cached and verification joins
@@ -225,7 +222,8 @@ def minhash_pairs(
     shape — the subset joins would otherwise recompute the uncached
     candidate subtree three times). Identical results either way,
     pinned by tests/test_dedup_ops.py::
-    test_minhash_gate_both_arms_agree. Pass 0 to force the scale path.
+    test_minhash_gate_both_arms_agree, which sets it to 0 to force the
+    scale path.
     """
     from pyspark import StorageLevel
 
@@ -245,7 +243,7 @@ def minhash_pairs(
     # shingle subtree; a lazy cache lets concurrent branches of one job
     # recompute it. Below the gate the recompute is cheaper than the
     # three count() actions.
-    eager = in_bytes >= eager_persist_min_bytes
+    eager = in_bytes >= EAGER_PERSIST_MIN_BYTES
 
     def _mat(d: DataFrame) -> DataFrame:
         if not eager:
@@ -511,7 +509,6 @@ def embedding_neardup_pairs(
     rungs: tuple[int, ...] = NEARDUP_RUNGS,
     hot_bucket_cap: int = HOT_BUCKET_CAP,
     n_partitions: int | None = None,
-    eager_persist_min_bytes: int = EAGER_PERSIST_MIN_BYTES,
 ) -> DataFrame:
     """Verified cosine>=threshold near-dup pairs via sparse sign-LSH
     buckets and an in-bucket spanning window + log rungs.
@@ -563,7 +560,7 @@ def embedding_neardup_pairs(
         from bdt_spark.sources.io import exchange_width_for_bytes
 
         n_partitions = exchange_width_for_bytes(in_bytes)
-    eager = in_bytes >= eager_persist_min_bytes
+    eager = in_bytes >= EAGER_PERSIST_MIN_BYTES
 
     def _mat(d: DataFrame) -> DataFrame:
         if not eager:

@@ -70,8 +70,10 @@ def query(
 
 # Queries whose DOMINANT stage is per-row CPU right above the documents
 # scan (char-gram md5, shingling, token scoring): these opt into the
-# under-split scan fan-out (io.fanout_rewrite) — the r11 registration-time
-# view fan-out relocated to the only consumers it helps (VERDICT r11 #1).
+# under-split scan fan-out (io.fanout_rewrite), which reads the live plan
+# of the documents view at build time, not a registration-time record;
+# the r11 view fan-out is paid only by the consumers it helps
+# (VERDICT r11 #1).
 # Membership is MEASURED, not guessed: r12 same-process on/off A/B at sf1
 # (3 reps, median) — see the round-12 SCALE.md section for the table.
 # @query-style callables opt in by calling io.fanned_table instead.
@@ -122,9 +124,9 @@ def sql_query(
 
     Membership in FANOUT_DOCS_QUERIES is consulted at CALL time: the
     SPARK text gets a /*+ REPARTITION */ hinted subquery at its
-    documents scans iff the session recorded the fixture as under-split
-    — the oracle text is untouched, and at production parquet layouts
-    the rewrite is a structural no-op."""
+    documents scans iff the documents view's plan is under-split at
+    build time — the oracle text is untouched, and at production
+    parquet layouts the rewrite is a structural no-op."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_fixture_tables(spark, sf_dir)

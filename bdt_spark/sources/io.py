@@ -81,6 +81,25 @@ def table_name_from_path(path: str) -> str:
     return sanitize_table_name(Path(path).stem)
 
 
+def _local_path(path: str) -> str:
+    """The driver-local filesystem path behind `path`: a plain path as
+    given, a `file:` URI as its percent-decoded path. Its callers open
+    the result with os/pyarrow, so any other scheme raises ValueError
+    before a Spark job runs, instead of a write landing under a
+    literal `./file:` directory or a read failing with a missing file."""
+    if "://" not in path and not path.startswith("file:"):
+        return path
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(path)
+    if u.scheme != "file":
+        raise ValueError(
+            f"{path!r}: this path is opened with local file APIs; pass a "
+            "local path or a file: URI"
+        )
+    return unquote(u.path)
+
+
 def _arrow_table_from_bytes(content: bytes):
     """Decode one Arrow IPC payload: random-access (feather v2) file
     format first, stream format as fallback — same order the readers
@@ -112,11 +131,11 @@ def _read_arrow(spark: SparkSession, path: str) -> DataFrame:
     import pyarrow.feather as feather
     import pyarrow.ipc as ipc
 
-    first = path
-    if os.path.isdir(path):
+    first = local = _local_path(path)
+    if os.path.isdir(local):
         cand = sorted(
-            _glob.glob(os.path.join(path, "*.arrow"))
-            + _glob.glob(os.path.join(path, "*.feather"))
+            _glob.glob(os.path.join(local, "*.arrow"))
+            + _glob.glob(os.path.join(local, "*.feather"))
         )
         if not cand:
             raise ValueError(f"no .arrow/.feather files under {path!r}")
@@ -149,7 +168,7 @@ def _read_arrow(spark: SparkSession, path: str) -> DataFrame:
 
     bin_df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{arrow,feather}" if os.path.isdir(path) else "*")
+        .option("pathGlobFilter", "*.{arrow,feather}" if os.path.isdir(local) else "*")
         .load(path)
     )
     return bin_df.select("content").mapInPandas(_decode, schema=spark_schema)
@@ -193,12 +212,11 @@ def _read_avro(spark: SparkSession, path: str) -> DataFrame:
 
     from bdt_spark.sources import avro as A
 
-    local = "://" not in path or path.startswith("file:")
-    fs_path = path
-    if path.startswith("file:"):
-        from urllib.parse import urlparse
-
-        fs_path = urlparse(path).path or path
+    try:
+        fs_path = _local_path(path)
+    except ValueError:  # remote URI: whole-file decode below
+        fs_path = None
+    local = fs_path is not None
 
     if local and os.path.isdir(fs_path):
         files = sorted(_glob.glob(os.path.join(fs_path, "*.avro")))
@@ -444,37 +462,6 @@ class _Views(Mapping):
         return sum(1 for _ in self)
 
 
-# Tables whose CPU-HEAVY consumers (char-gram md5, shingling, token
-# scoring right above the scan) may opt into a scan fan-out when the
-# fixture parquet is under-split: an under-split scan serializes that
-# work, and the rows are narrow enough that one extra exchange is noise
-# next to it. Measured at sf10, documents fan-out: winnowing 166 s ->
-# 46 s, TF-IDF 91 s -> 19 s, NB langid 144 s -> 98 s, prefix-Jaccard
-# 20 s -> 12 s. The relational tables are deliberately NOT here — their
-# first stage is a cheap partial aggregate where an added corpus shuffle
-# costs more than the scan skew (measured: tpch_q1 at sf0.1 went 0.40 s
-# -> 0.97 s with lineitem fanned out). `embeddings` is excluded too: its
-# queries run operator pipelines with their own persist/bucket/window
-# structure, and fanning their input measured NET NEGATIVE
-# (dedup_embedding_cosine at sf10: 12.6 s -> 41 s) — the per-vector fold
-# is JVM-cheap enough that the extra exchange and the disrupted operator
-# partitioning dominate.
-#
-# r12 relocation (VERDICT r11 item 1): the fan-out used to live at VIEW
-# REGISTRATION (every consumer paid it), which taxed 13 cheap single-agg
-# sf0.1 queries 1.2-2.6x for nothing. Registration now only RECORDS the
-# under-split fact per session; each CPU-heavy query opts in via
-# registry.sql_query(fanout=...) / fanout_rewrite(), which injects a
-# /*+ REPARTITION(n) */ hinted subquery into the SPARK text only —
-# oracle texts never see it, and at production scale (thousands of row
-# groups) the recorded condition is false so the rewrite is a no-op.
-_FANOUT_CANDIDATE_TABLES = frozenset({"documents"})
-
-# session-key -> {table name: fan-out target partitions} for candidate
-# tables whose registered parquet had fewer row groups than cores.
-_UNDERSPLIT: dict[int, dict[str, int]] = {}
-
-
 def hadoop_exists(spark: SparkSession, p: str) -> bool:
     """Driver-side existence check through the Hadoop FS abstraction —
     works on any filesystem the session can reach, unlike
@@ -487,6 +474,7 @@ def hadoop_exists(spark: SparkSession, p: str) -> bool:
 
 def _path_bytes(path: str) -> int:
     """On-disk bytes of a data file or a directory of part files."""
+    path = _local_path(path)
     if os.path.isdir(path):
         total = 0
         for root, _dirs, files in os.walk(path):
@@ -616,62 +604,6 @@ def ensure_heavy_arm_geometry(spark: SparkSession, b: int) -> int:
     return current
 
 
-def _parquet_scan_splits(path: str) -> int:
-    """Splittable scan units of a parquet table = its ROW-GROUP count,
-    summed over part files when the table is a directory.
-
-    Spark carves files into byte-range splits, but a split that contains
-    no row-group start reads nothing — so a 10 MB single-row-group file
-    yields ONE working scan task no matter how many byte ranges the
-    planner emits. Driver-side footer peek, no Spark job. For a
-    directory-of-parts layout (the production shape; r13 probe measured
-    native parts 0.30-0.86x the fanned single-file plan on the sf10 text
-    family) the unit count is the SUM over members, so a many-part dir
-    is correctly not under-split and a 2-part dir of single-row-group
-    files still is. Footer peeks stop as soon as the core count is
-    unreachable-from-below (>=4096 members short-circuits: no cluster
-    this code targets schedules more initial scan tasks than that).
-
-    Members are collected with os.walk, so hive-partitioned layouts
-    (table/lang=en/part-*.parquet) and nested writer output count their
-    real part files. A directory with NO .parquet/.parq members anywhere
-    (extension-less parts, unknown layout) returns the assume-wide
-    sentinel — the same fail-safe as the exception path — instead of
-    max(1, 0)=1, which would record the table under-split and let
-    fanout_rewrite inject a corpus-wide REPARTITION on exactly the
-    layouts the r13 probe measured as harmed by fan-out (ADVICE r13)."""
-    import pyarrow.parquet as pq
-
-    try:
-        if os.path.isdir(path):
-            members = []
-            for root, dirs, files in os.walk(path):
-                dirs[:] = sorted(
-                    d for d in dirs if not d.startswith(("_", "."))
-                )
-                members.extend(
-                    os.path.join(root, f)
-                    for f in sorted(files)
-                    if f.endswith((".parquet", ".parq"))
-                    and not f.startswith(("_", "."))
-                )
-                if len(members) >= 4096:
-                    break
-            if not members:
-                return 1 << 30  # unknown layout: assume wide, no shuffle
-            if len(members) >= 4096:
-                return len(members)
-            total = 0
-            for m in members:
-                total += max(1, pq.read_metadata(m).num_row_groups)
-                if total >= 4096:  # bound the footer peeks: already wide
-                    break
-            return max(1, total)
-        return max(1, pq.read_metadata(path).num_row_groups)
-    except Exception:
-        return 1 << 30  # unknown layout: assume wide, never add a shuffle
-
-
 def load_fixture_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -679,21 +611,8 @@ def load_fixture_tables(
     force: bool = False,
 ) -> Mapping[str, DataFrame]:
     """Register the driver's fixture tables (TESTDATA.md) as temp views
-    and return them by name.
-
-    Fan-out gate (r11, relocated r12): a candidate table
-    (_FANOUT_CANDIDATE_TABLES) whose parquet has fewer row groups than
-    the cluster has cores is RECORDED as under-split (_UNDERSPLIT); the
-    view itself is always the plain scan. CPU-heavy queries opt into the
-    fan-out per-query via fanout_rewrite() — see _FANOUT_CANDIDATE_TABLES
-    for the measured rationale. The generated fixtures are single files
-    with 1-5 row groups (sf0.1: every table is ONE row group), so without
-    the opt-in the text queries' dominant stage — scan + the per-row CPU
-    fused above it (md5 grams, shingles) — runs on that handful of tasks
-    while 32 cores idle. The row-group gate makes the opt-in a structural
-    no-op at production scale: a real 100 TB table has thousands of row
-    groups, the condition is false, and no corpus-wide shuffle is ever
-    added where the scan already fills the cluster."""
+    and return them by name. Each view is the plain scan; CPU-heavy
+    queries fan it out at build time (fanout_rewrite, fanned_table)."""
     # Runtime conf insurance for sessions not built by bdt_spark.session
     # (e.g. the driver's): UTC makes epoch math match DuckDB's UTC-naive
     # timestamps (SURVEY §7 conformance shims).
@@ -712,15 +631,8 @@ def load_fixture_tables(
     # 10 tables on a small thread pool.
     from concurrent.futures import ThreadPoolExecutor
 
-    par = spark.sparkContext.defaultParallelism
-    undersplit: dict[str, int] = {}
-
     def _reg(t: str):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        df = register_table(spark, t, path)
-        if t in _FANOUT_CANDIDATE_TABLES and _parquet_scan_splits(path) < par:
-            undersplit[t] = par
-        return t, df
+        return t, register_table(spark, t, os.path.join(sf_dir, f"{t}.parquet"))
 
     with ThreadPoolExecutor(max_workers=min(8, max(1, len(present)))) as ex:
         out = dict(ex.map(_reg, present))
@@ -733,15 +645,105 @@ def load_fixture_tables(
     for t in tables:
         if t not in out and spark.catalog.tableExists(t):
             spark.catalog.dropTempView(t)
-    _UNDERSPLIT[key] = undersplit
     _FIXTURES_LOADED[key] = sf_dir
     return out
 
 
-_FANOUT_FROM_RE = {
-    t: re.compile(rf"\bFROM\s+{t}\b(?!\.)", re.IGNORECASE)
-    for t in _FANOUT_CANDIDATE_TABLES
-}
+# Scan fan-out for CPU-HEAVY consumers (char-gram md5, shingling, token
+# scoring, Python codecs right above the scan): an under-split scan
+# serializes that work, and the rows are narrow enough that one extra
+# exchange is noise next to it. Measured at sf10, documents fan-out:
+# winnowing 166 s -> 46 s, TF-IDF 91 s -> 19 s, NB langid 144 s -> 98 s,
+# prefix-Jaccard 20 s -> 12 s. Only documents consumers opt in. The
+# relational tables' first stage is a cheap partial aggregate where an
+# added corpus shuffle costs more than the scan skew (measured: tpch_q1
+# at sf0.1 went 0.40 s -> 0.97 s with lineitem fanned out). The
+# `embeddings` queries run operator pipelines with their own
+# persist/bucket/window structure, and fanning their input measured NET
+# NEGATIVE (dedup_embedding_cosine at sf10: 12.6 s -> 41 s) — the
+# per-vector fold is JVM-cheap enough that the extra exchange and the
+# disrupted operator partitioning dominate.
+#
+# Queries opt in (registry.FANOUT_DOCS_QUERIES via fanout_rewrite,
+# @query callables via fanned_table, the multimodal encoders via fanned)
+# instead of paying it at view registration, which taxed 13 cheap
+# single-aggregate sf0.1 queries 1.2-2.6x (VERDICT r11 item 1). Every
+# opt-in asks one rule, _fanout_width, about the live plan it is given,
+# so the answer follows the view as it is now: at production scale
+# (thousands of row groups) the rule is a no-op.
+
+
+def _scan_units(df: DataFrame, stop: int) -> int:
+    """Working scan tasks of `df`'s file leaves, counted up to `stop`.
+
+    Spark carves files into byte-range splits, but a split that holds no
+    row-group start reads nothing, so a 10 MB single-row-group parquet
+    file yields ONE working scan task however many ranges the planner
+    emits. Each parquet file therefore counts its footer's row groups (a
+    driver-side footer peek, no Spark job) and each file of any other
+    format counts 1. The files are the list the scan's file index
+    already holds, so hive-partitioned and extension-less parts count.
+    A plan with no file leaf (an in-memory relation, which
+    createDataFrame already spreads) counts 0. A footer that cannot be
+    read counts `stop`: an unknown layout never gets a fan-out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    units = 0
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for j in range(leaves.size()):
+        if units >= stop:
+            break
+        leaf = leaves.apply(j)
+        if leaf.nodeName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        files = rel.location().inputFiles()
+        if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat":
+            units += len(files)
+            continue
+        for i in range(len(files)):
+            if units >= stop:
+                break
+            try:
+                meta = pq.read_metadata(_local_path(files[i]))
+            except (OSError, ValueError, pa.ArrowException):
+                return stop
+            units += meta.num_row_groups
+    return units
+
+
+def _fanout_width(df: DataFrame, partitions: int | None = None) -> int:
+    """The one scan fan-out rule: defaultParallelism when `df` reads
+    fewer input partitions than that (and more than none), else 0.
+    `partitions` is the count a plan node already fixed (see fanned);
+    without one, the count is the plan's scan units."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if partitions is None:
+        partitions = _scan_units(df, target)
+    return target if 0 < partitions < target else 0
+
+
+def fanned(df: DataFrame) -> DataFrame:
+    """`df` repartitioned to defaultParallelism iff it is under-split,
+    for a CPU-bound stage right above it (the multimodal codecs: on one
+    input split the codec stage measured 6.6 s against a sub-second
+    spread at sf0.1).
+
+    `df` may be post-shuffle, so a plan node that fixes the partition
+    count (coalesce, exchange) answers first: planaudit's
+    effective_partitions reads the compiled physical plan statically.
+    A coalesce(1)'d input is fanned back out even though it lists many
+    files, and an input already repartitioned to the target is left
+    alone. Only a scan-defined count falls through to the scan units.
+    Nothing here reads `.rdd`, which under AQE materializes upstream
+    shuffle stages as an eager job (ADVICE r9)."""
+    from bdt_spark.planaudit import effective_partitions
+
+    n = _fanout_width(df, effective_partitions(df))
+    return df.repartition(n) if n else df
 
 
 def fanout_rewrite(
@@ -749,25 +751,32 @@ def fanout_rewrite(
 ) -> str:
     """Opt-in scan fan-out for CPU-heavy SPARK query texts.
 
-    For each named table that load_fixture_tables recorded as
-    under-split for this session, rewrite `FROM <table>` into
-    `FROM (SELECT /*+ REPARTITION(n) */ * FROM <table>)` — the same
-    exchange the r11 registration-time gate added for every consumer,
-    now paid only by queries whose dominant stage is per-row CPU right
-    above the scan. Trailing aliases/WHERE/GROUP BY survive (a
-    parenthesized subquery is relation-position compatible), Catalyst
-    still pushes filters and column pruning through the repartition,
-    and the ORACLE text is never rewritten — DuckDB would lex the hint
-    away anyway, but the dialects stay textually honest. When the scan
-    is already wide (production layout), the recorded condition is
-    false and the text passes through untouched."""
-    key = id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)
-    recorded = _UNDERSPLIT.get(key, {})
+    For each named view that the fan-out rule finds under-split right
+    now, rewrite `FROM <table>` into
+    `FROM (SELECT /*+ REPARTITION(n) */ * FROM <table>)`, paid only by
+    queries whose dominant stage is per-row CPU right above the scan.
+    Trailing aliases/WHERE/GROUP BY survive (a parenthesized subquery
+    is relation-position compatible), Catalyst still pushes filters and
+    column pruning through the repartition, and the ORACLE text is
+    never rewritten — DuckDB would lex the hint away anyway, but the
+    dialects stay textually honest. A bare view fixes no partition
+    count, so the rule reads its scan units directly. A view that is
+    already wide, or not registered (spark.sql then raises its usual
+    error), leaves the text untouched."""
+    from pyspark.errors import AnalysisException
+
     for t in tables:
-        n = recorded.get(t)
+        try:
+            df = spark.table(t)
+        except AnalysisException:
+            continue
+        n = _fanout_width(df)
         if n:
-            sql = _FANOUT_FROM_RE[t].sub(
-                f"FROM (SELECT /*+ REPARTITION({n}) */ * FROM {t})", sql
+            sql = re.sub(
+                rf"\bFROM\s+{t}\b(?!\.)",
+                f"FROM (SELECT /*+ REPARTITION({n}) */ * FROM {t})",
+                sql,
+                flags=re.IGNORECASE,
             )
     return sql
 
@@ -775,8 +784,7 @@ def fanout_rewrite(
 def fanned_table(spark: SparkSession, table: str) -> DataFrame:
     """DataFrame-API twin of fanout_rewrite for @query-style callables:
     the registered view, repartitioned up to defaultParallelism iff the
-    registration recorded it as under-split."""
+    fan-out rule finds its scan under-split now."""
     df = spark.table(table)
-    key = id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)
-    n = _UNDERSPLIT.get(key, {}).get(table)
+    n = _fanout_width(df)
     return df.repartition(n) if n else df

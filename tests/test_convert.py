@@ -269,3 +269,35 @@ def test_orc_zstd_single_file(spark, sf_dir, tmp_path):
     f = po.ORCFile(out)
     assert f.compression.upper() == "ZSTD"
     assert f.nrows == 5
+
+
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_arrow_convert_roundtrip_plain_path_and_file_uri(
+    spark, sf_dir, tmp_path, as_uri
+):
+    """A `file:` URI names the same local file as its plain path: convert
+    to .arrow (directory and single file) writes at that path, the
+    output reads back, and a session-less positional compare of the
+    round trip against the source passes. Any other scheme is refused
+    on these driver-local paths before a job runs."""
+    from bdt_spark.sources.io import read_file
+
+    def p(path):
+        return f"file://{path}" if as_uri else path
+
+    src = os.path.abspath(f"{sf_dir}/supplier.parquet")
+    src_rows = sorted(spark.read.parquet(src).collect())
+    for single in (False, True):
+        out = str(tmp_path / f"supplier_{single}.arrow")
+        back = str(tmp_path / f"supplier_{single}_back.parquet")
+        convert(spark, p(src), p(out), single_file=single)
+        assert (os.path.isfile if single else os.path.isdir)(out)
+        assert sorted(read_file(spark, p(out)).collect()) == src_rows
+        convert(spark, p(out), p(back), single_file=True)
+        res = compare_files(None, p(src), p(back))
+        assert res.ok and res.method == "positional", res
+
+    with pytest.raises(ValueError, match="file: URI"):
+        convert(spark, p(src), "s3a://bucket/supplier.arrow")
+    with pytest.raises(ValueError, match="file: URI"):
+        compare_files(None, p(src), "s3a://bucket/supplier.parquet")

@@ -309,12 +309,12 @@ def test_rungs_cover_every_interleave_factor():
 
 
 @pytest.mark.slow
-def test_eager_persist_gate_same_results_and_no_cache_residue(spark):
+def test_eager_persist_gate_same_results_and_no_cache_residue(spark, monkeypatch):
     """The input-size gate (EAGER_PERSIST_MIN_BYTES) switches caching AND
     the verification arm (r13: small corpora verify against the corpus
     shingle table single-pass; big corpora cache intermediates and
     re-shingle only candidates): a small corpus run and a forced-eager
-    run (eager_persist_min_bytes=0) must produce identical pairs, and
+    run (EAGER_PERSIST_MIN_BYTES=0) must produce identical pairs, and
     NEITHER may leave persisted RDDs behind (the small path never
     persists; the eager path unpersists everything but the result,
     which it also releases via garbage collection of the handle)."""
@@ -333,7 +333,11 @@ def test_eager_persist_gate_same_results_and_no_cache_residue(spark):
     mid = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert mid - before == set(), "small path must not persist anything"
 
-    eager_out = minhash_pairs(docs, threshold=0.3, eager_persist_min_bytes=0)
+    from bdt_spark.operators import dedup
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "EAGER_PERSIST_MIN_BYTES", 0)
+        eager_out = minhash_pairs(docs, threshold=0.3)
     eager = {(r.doc_a, r.doc_b, r.jaccard) for r in eager_out.collect()}
     assert eager == small and len(small) >= 1
     eager_out.unpersist()
@@ -346,9 +350,9 @@ def test_eager_persist_gate_same_results_and_no_cache_residue(spark):
     )
     s2 = {(r.vec_a, r.vec_b)
           for r in embedding_neardup_pairs(emb, threshold=0.9).collect()}
-    e2_out = embedding_neardup_pairs(
-        emb, threshold=0.9, eager_persist_min_bytes=0
-    )
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "EAGER_PERSIST_MIN_BYTES", 0)
+        e2_out = embedding_neardup_pairs(emb, threshold=0.9)
     e2 = {(r.vec_a, r.vec_b) for r in e2_out.collect()}
     assert e2 == s2 and len(s2) >= 1
     e2_out.unpersist()
@@ -381,11 +385,11 @@ def test_plan_size_bytes_never_trusts_sentinel_derived_roots(spark):
     assert 0 < _plan_size_bytes(files.select("text")) < EAGER_PERSIST_MIN_BYTES
 
 
-def test_minhash_gate_both_arms_agree(spark):
+def test_minhash_gate_both_arms_agree(spark, monkeypatch):
     """r13 arm gate (VERDICT r12 #2): on the fixture documents table the
     small-corpus arm (verify joins the corpus shingle table; nothing
     persisted, so the plan shows no InMemoryTableScan) and the forced
-    scale arm (eager_persist_min_bytes=0: cached candidates, verify
+    scale arm (EAGER_PERSIST_MIN_BYTES=0: cached candidates, verify
     re-shingles only candidate docs) must return row-identical pairs.
     The discriminator between arms is structural: the scale arm's
     executed plan reads persisted intermediates, the small arm's never
@@ -399,7 +403,10 @@ def test_minhash_gate_both_arms_agree(spark):
     ), "small arm must stay fully lazy (no cached intermediates)"
     small = [(r.doc_a, r.doc_b, r.jaccard) for r in small_df.collect()]
 
-    scale_df = minhash_pairs(docs, threshold=0.5, eager_persist_min_bytes=0)
+    from bdt_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "EAGER_PERSIST_MIN_BYTES", 0)
+    scale_df = minhash_pairs(docs, threshold=0.5)
     assert (
         "InMemoryTableScan"
         in scale_df._jdf.queryExecution().executedPlan().toString()

@@ -314,9 +314,10 @@ def test_gated_queries_big_arm_broadcast_over_generate(
     scale, so size-gated queries always present their SMALL arm — the
     heavy-arm plan shapes that motivated the sf100 failures were never
     audited. Build each gated query's big arm explicitly (threshold 0
-    for pmi, eager_persist_min_bytes=0 for minhash) and pin its flag
+    for pmi, EAGER_PERSIST_MIN_BYTES=0 for minhash) and pin its flag
     count: the heavy arms plan joins from MATERIALIZED true sizes and
     must measure ZERO broadcast-over-Generate hits."""
+    from bdt_spark.operators import dedup
     from bdt_spark.operators.dedup import minhash_pairs
     from bdt_spark.planaudit import broadcast_over_generate
     from bdt_spark.plans import pipeline_text
@@ -330,13 +331,13 @@ def test_gated_queries_big_arm_broadcast_over_generate(
         spark.catalog.clearCache()
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    monkeypatch.setattr(dedup, "EAGER_PERSIST_MIN_BYTES", 0)
     for k_hash, n_bands in ((8, 4), (64, 16)):
         out = minhash_pairs(
             docs,
             threshold=0.5,
             k_hash=k_hash,
             n_bands=n_bands,
-            eager_persist_min_bytes=0,
         )
         flagged = broadcast_over_generate(out)
         out.unpersist()

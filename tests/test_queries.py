@@ -242,47 +242,6 @@ def test_fixture_embedding_dim_matches_unrolled_expressions():
         assert lo == hi == EMB_DIM, f"{path}: dims [{lo},{hi}] != {EMB_DIM}"
 
 
-def test_fan_out_cpu_stage_only_when_input_too_coarse(spark, tmp_path):
-    """The codec-stage fan-out must repartition a one-file scan up to
-    cluster parallelism, and be a NO-OP (no added shuffle) when the scan
-    already has enough files — the property that makes it safe at 100 TB
-    where scans come in with thousands of splits. The gate inspects the
-    COMPILED plan statically, never .rdd (ADVICE r9: .rdd under AQE
-    eagerly materializes upstream shuffle stages): a partition-determining
-    node (coalesce/exchange) answers first (VERDICT r11 #5 — a
-    coalesce(1)'d input is fanned back out even though its plan still
-    lists many files), file count is the fallback for scan-defined
-    partitioning, and scan-less in-memory inputs are left untouched."""
-    from bdt_spark.functions.multimodal import _fan_out_cpu_stage
-
-    par = spark.sparkContext.defaultParallelism
-    one_path = str(tmp_path / "one")
-    spark.range(100).coalesce(1).write.parquet(one_path)
-    one = spark.read.parquet(one_path)
-    assert len(one.inputFiles()) == 1
-    assert _fan_out_cpu_stage(one).rdd.getNumPartitions() == par
-
-    many_path = str(tmp_path / "many")
-    spark.range(1000).repartition(par + 3).write.parquet(many_path)
-    many = spark.read.parquet(many_path)
-    assert len(many.inputFiles()) >= par
-    assert _fan_out_cpu_stage(many) is many
-
-    # post-shuffle coarse input: many files in the plan, but an upstream
-    # coalesce(1) collapsed the partitioning — must STILL fan out
-    collapsed = many.coalesce(1).select("id")
-    assert _fan_out_cpu_stage(collapsed).rdd.getNumPartitions() == par
-
-    # already-fanned input: a second exchange would be pure waste
-    prefanned = one.repartition(par)
-    assert _fan_out_cpu_stage(prefanned) is prefanned
-
-    # scan-less in-memory relation: createDataFrame already spreads its
-    # slices; leaf -> undeterminable -> zero files -> untouched
-    inmem = spark.createDataFrame([(i,) for i in range(10)], "id long")
-    assert _fan_out_cpu_stage(inmem) is inmem
-
-
 def _rdd_backed(spark):
     """A plan no file index can size (its leaf is an RDD)."""
     return spark.createDataFrame(
