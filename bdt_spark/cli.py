@@ -78,41 +78,16 @@ def cmd_query(args) -> None:
         df.explain()  # main.rs:183-186
     if args.output:
         # csv and parquet only, like main.rs:188-221
-        from bdt_spark.operators.convert import UnsupportedOutputError
+        from bdt_spark.operators.convert import UnsupportedOutputError, write_file
         from bdt_spark.sources.io import file_format
 
-        fmt = file_format(args.output)
-        if fmt == "csv":
-            df.coalesce(1).write.mode("overwrite").option("header", "true").csv(
-                args.output + ".dir"
-            )
-            _single(args.output)
-        elif fmt == "parquet":
-            df.coalesce(1).write.mode("overwrite").parquet(args.output + ".dir")
-            _single(args.output)
-        else:
+        if file_format(args.output) not in ("csv", "parquet"):
             raise UnsupportedOutputError(
                 f"unsupported output format: {args.output!r}"
             )
+        write_file(df, args.output, single_file=True)
     else:
         df.show(truncate=False)
-
-
-def _single(output: str) -> None:
-    import glob
-    import os
-    import shutil
-
-    parts = sorted(glob.glob(os.path.join(output + ".dir", "part-*")))
-    if len(parts) != 1:
-        raise RuntimeError(f"expected 1 part file, found {len(parts)}")
-    if os.path.exists(output):
-        # a directory at the target (interrupted run, prior non-single
-        # write) must be REPLACED — moving the part INTO it would bury
-        # the result as output/part-0000... (convert.py handles this too)
-        os.remove(output) if os.path.isfile(output) else shutil.rmtree(output)
-    shutil.move(parts[0], output)
-    shutil.rmtree(output + ".dir", ignore_errors=True)
 
 
 def cmd_convert(args) -> None:

@@ -31,11 +31,19 @@ Fixes vs the reference (documented, SURVEY §2 compare notes):
 
 from __future__ import annotations
 
+import io
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession, Window, functions as F
 
-from bdt_spark.sources.io import _local_path, _path_bytes, file_format, read_file
+from bdt_spark.sources.io import (
+    _concat_parts,
+    _local_path,
+    _part_files,
+    _path_bytes,
+    file_format,
+    read_file,
+)
 
 
 @dataclass
@@ -53,35 +61,44 @@ class ComparisonResult:
 
 
 def _read_arrow_table(path: str, header: bool = True):
+    """The whole file as one Arrow table. A directory reads its Spark
+    part files in partition order: csv and json parts as one
+    concatenated byte stream (each later csv part's header dropped), so
+    they parse exactly as the single-file output would; orc parts one by
+    one. Parquet reads a directory natively."""
+    import os
+
+    import pyarrow as pa
+
     fmt = file_format(path)
     path = _local_path(path)
     if fmt == "parquet":
         import pyarrow.parquet as pq
 
         return pq.read_table(path)
+    paths = _part_files(path) if os.path.isdir(path) else [path]
+    if not paths:
+        raise ValueError(f"no part files under {path!r}")
+    if fmt in ("csv", "json") and len(paths) > 1:
+        buf = io.BytesIO()
+        _concat_parts(paths, buf, header=fmt == "csv" and header)
+        src = pa.BufferReader(buf.getbuffer())
+    else:
+        src = paths[0]
     if fmt == "csv":
         import pyarrow.csv as pacsv
 
         opts = pacsv.ReadOptions(autogenerate_column_names=not header)
-        return pacsv.read_csv(path, read_options=opts)
+        return pacsv.read_csv(src, read_options=opts)
     # The reference restricts compare to csv/parquet (compare.rs:121-142);
     # we additionally accept json via pyarrow.
     if fmt == "json":
         import pyarrow.json as pajson
 
-        return pajson.read_json(path)
+        return pajson.read_json(src)
     if fmt == "orc":
-        import glob as _glob
-        import os as _os
-
-        import pyarrow as pa
         import pyarrow.orc as po
 
-        paths = (
-            sorted(_glob.glob(_os.path.join(path, "part-*.orc")))
-            if _os.path.isdir(path)
-            else [path]
-        )
         return pa.concat_tables([po.read_table(p) for p in paths])
     raise ValueError(f"unsupported format for compare: {path!r}")
 
@@ -681,6 +698,15 @@ def _compare_hash(
 ) -> ComparisonResult:
     df1 = read_file(spark, path1, header=header)
     df2 = read_file(spark, path2, header=header)
+    # Spark's JSON reader orders inferred columns by name, so a JSON copy
+    # lists its source's columns in another order; both modes below
+    # align the sides by position, so realign the JSON side by name.
+    if sorted(df1.columns) == sorted(df2.columns):
+        json1, json2 = file_format(path1) == "json", file_format(path2) == "json"
+        if json2 and not json1:
+            df2 = df2.select(*df1.columns)
+        elif json1 and not json2:
+            df1 = df1.select(*df2.columns)
 
     if len(df1.columns) != len(df2.columns):
         # reference reports count mismatch before row-length mismatch

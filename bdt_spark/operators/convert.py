@@ -3,8 +3,13 @@
 Reads any supported input format (extension dispatch, utils.rs:12-23) and
 writes csv/json/parquet. Mirrors the reference's writer surface:
 - `single_file`: one output file at exactly the requested path
-  (convert.rs:22 single_file_output) — Spark writes a part-file directory,
-  so we coalesce(1) and move the part file.
+  (convert.rs:22 single_file_output). Spark writes a part-file directory.
+  Uncompressed csv and json parts are written in parallel from the plan's
+  own partitions and concatenated in partition order (each later csv
+  part's header line checked and dropped), which gives the bytes a
+  coalesce(1) write gives. Compressed text, csv whose column names hold a
+  line break, and the footer formats (parquet, orc, arrow) cannot be
+  concatenated: those coalesce(1) and move the one part file.
 - `zstd`: parquet compression zstd + dictionary off, approximating the
   reference's zstd-level-8 + PLAIN encoding WriterProperties
   (convert.rs:23-34; Spark exposes no codec level or per-column encoding —
@@ -16,9 +21,11 @@ writes csv/json/parquet. Mirrors the reference's writer surface:
   (utils.rs:59-61, convert.rs:52); the repo reads it (sources/io.py) and
   writes it here — per-partition IPC files serialized executor-side.
 
-Scale: convert is a pure scan->sink plan — no shuffle at all unless
-`single_file` forces coalesce(1). At 100 TB you convert WITHOUT
-single_file and let each task write its own part file.
+Scale: convert is a pure scan->sink plan with no shuffle. A coalesce(1)
+single-file write funnels the scan and encode through one task; the csv
+and json ones only funnel the final byte copy through the driver. At
+100 TB you convert WITHOUT single_file and let each task write its own
+part file.
 """
 
 from __future__ import annotations
@@ -27,9 +34,15 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from bdt_spark.sources.io import _local_path, file_format, read_file
+from bdt_spark.sources.io import (
+    _concat_parts,
+    _local_path,
+    _part_files,
+    file_format,
+    read_file,
+)
 
 
 class UnsupportedOutputError(ValueError):
@@ -149,21 +162,52 @@ def _write_arrow(df, output_path: str, *, single_file: bool, zstd: bool) -> None
             pass
 
     if single_file:
-        parts = sorted(glob.glob(os.path.join(target_dir, "part-*.arrow")))
-        if len(parts) != 1:
-            raise RuntimeError(f"expected 1 part file, found {len(parts)}")
-        if os.path.exists(output_path):
-            os.remove(output_path) if os.path.isfile(output_path) else shutil.rmtree(
-                output_path
-            )
-        shutil.move(parts[0], output_path)
-        shutil.rmtree(target_dir, ignore_errors=True)
+        _commit_single_file(target_dir, output_path, concat=False, header=False)
     else:
         # job + rename sweep complete: mark the directory committed (same
         # contract as Spark's parquet/csv sinks; single-file output is one
         # bare file, so there is no directory to mark)
         with open(os.path.join(target_dir, "_SUCCESS"), "w"):
             pass
+
+
+def _commit_single_file(
+    target_dir: str, output_path: str, *, concat: bool, header: bool
+) -> None:
+    """Replace `output_path` with the one file the part files in
+    `target_dir` make, then remove `target_dir`. Without `concat` the
+    write was coalesce(1)'d and must hold exactly one part. With it, the
+    parts are concatenated in partition order into a temp file inside
+    `target_dir` (beside the target, so on its filesystem), which then
+    replaces the target; `header` drops each later csv part's header."""
+    parts = _part_files(target_dir)
+    if not concat and len(parts) != 1:
+        raise RuntimeError(f"expected 1 part file, found {len(parts)}")
+    if len(parts) == 1:
+        src = parts[0]
+    else:
+        src = os.path.join(target_dir, "_concat")
+        with open(src, "wb") as dst:
+            _concat_parts(parts, dst, header=header)
+    if os.path.isdir(output_path):
+        # a directory at the target (interrupted run, prior non-single
+        # write) is replaced, not written into
+        shutil.rmtree(output_path)
+    os.replace(src, output_path)
+    shutil.rmtree(target_dir, ignore_errors=True)
+
+
+def _output_format(
+    output_path: str, *, single_file: bool, partition_by: list[str] | None
+) -> str:
+    out_fmt = file_format(output_path)
+    if out_fmt not in ("csv", "json", "parquet", "arrow", "orc"):
+        raise UnsupportedOutputError(
+            f"unsupported output format for path: {output_path!r}"
+        )
+    if partition_by and single_file:
+        raise ValueError("partition_by and single_file are mutually exclusive")
+    return out_fmt
 
 
 def convert(
@@ -183,19 +227,34 @@ def convert(
     pruning on the next read, i.e. how a 100 TB table should be written.
     Incompatible with `single_file`.
     """
-    out_fmt = file_format(output_path)
-    if out_fmt not in ("csv", "json", "parquet", "arrow", "orc"):
-        raise UnsupportedOutputError(
-            f"unsupported output format for path: {output_path!r}"
-        )
-    if partition_by and single_file:
-        raise ValueError("partition_by and single_file are mutually exclusive")
+    # checked before the read, which may run a csv inference job
+    _output_format(output_path, single_file=single_file, partition_by=partition_by)
+    write_file(
+        read_file(spark, input_path, header=header),
+        output_path,
+        single_file=single_file,
+        zstd=zstd,
+        partition_by=partition_by,
+    )
+
+
+def write_file(
+    df: DataFrame,
+    output_path: str,
+    *,
+    single_file: bool = False,
+    zstd: bool = False,
+    partition_by: list[str] | None = None,
+) -> None:
+    """Write `df` in the format implied by `output_path`: convert's
+    writer, and the one single-file writer (`bdt query --output` uses
+    it too). See the module docstring for the single-file paths."""
+    out_fmt = _output_format(
+        output_path, single_file=single_file, partition_by=partition_by
+    )
     if out_fmt == "arrow" or single_file:
         # written (arrow) or moved (single_file) with driver-local file APIs
         output_path = _local_path(output_path)
-    df = read_file(spark, input_path, header=header)
-    if single_file:
-        df = df.coalesce(1)
 
     if out_fmt == "arrow":
         # Arrow IPC write — an EXTENSION: the reference panics on Arrow in
@@ -205,9 +264,23 @@ def convert(
         # task serializes its own partition through pyarrow executor-side.
         if partition_by:
             raise ValueError("partition_by is not supported for arrow output")
+        if single_file:
+            df = df.coalesce(1)
         _write_arrow(df, output_path, single_file=single_file, zstd=zstd)
         return
 
+    # Uncompressed line formats concatenate; a csv header holding a line
+    # break would span lines (json escapes line breaks in its keys).
+    concat = (
+        single_file
+        and out_fmt in ("csv", "json")
+        and not zstd
+        and not (
+            out_fmt == "csv" and any("\r" in c or "\n" in c for c in df.columns)
+        )
+    )
+    if single_file and not concat:
+        df = df.coalesce(1)
     target_dir = output_path if not single_file else output_path + "._spark_tmp"
     writer = df.write.mode("overwrite")
     if partition_by:
@@ -240,12 +313,6 @@ def convert(
         writer.parquet(target_dir)
 
     if single_file:
-        parts = sorted(glob.glob(os.path.join(target_dir, "part-*")))
-        if len(parts) != 1:
-            raise RuntimeError(f"expected 1 part file, found {len(parts)}")
-        if os.path.exists(output_path):
-            os.remove(output_path) if os.path.isfile(output_path) else shutil.rmtree(
-                output_path
-            )
-        shutil.move(parts[0], output_path)
-        shutil.rmtree(target_dir, ignore_errors=True)
+        _commit_single_file(
+            target_dir, output_path, concat=concat, header=out_fmt == "csv"
+        )

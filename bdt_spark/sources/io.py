@@ -19,13 +19,16 @@ Differences (documented improvements, not regressions):
 Scale notes: `spark.read.parquet(dir)` accepts a directory of files natively
 (the DataFusion listing-table equivalent). Schema inference for CSV/JSON scans
 the file once — identical cost shape to the reference's eager inference at
-registration (utils.rs:66-72).
+registration (utils.rs:66-72). A single parquet file needs no scan: its
+schema is in its footer, which read_file reads on the driver, so opening it
+runs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
 from collections.abc import Mapping
 from pathlib import Path
 
@@ -305,8 +308,12 @@ def _nano_timestamp_columns(path: str) -> list[str]:
     import pyarrow.dataset as ds
     import pyarrow as pa
 
+    # INT96 (Spark's default timestamp encoding) would also surface as ns
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
     try:
-        schema = ds.dataset(path, format="parquet").schema
+        schema = ds.dataset(path, format=fmt).schema
     except Exception:
         return []
     return [
@@ -314,6 +321,66 @@ def _nano_timestamp_columns(path: str) -> list[str]:
         for f in schema
         if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"
     ]
+
+
+# Characters that make Spark expand a path as a glob (SparkHadoopUtil.isGlobPath)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+# A top-level INT64 TIMESTAMP(NANOS) field in parquet-mr's text form of a
+# file schema (MessageType.toString indents each nesting level by two)
+_NANOS_FIELD = re.compile(
+    r"^  (?:optional|required) int64 (.+) "
+    r"\(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$",
+    re.M,
+)
+
+
+def _single_parquet_footer(spark: SparkSession, path: str):
+    """The footer of the one parquet file `path` names, read on the
+    driver with the calls Spark's schema-inference task makes for it
+    (ParquetFileFormat.readParquetFootersInParallel), as a JVM `Footer`.
+
+    None for a directory or a glob, whose file choice and partition
+    discovery stay Spark's, and for a path the JVM cannot open as a
+    parquet file (missing, corrupt, an unknown scheme): Spark's own
+    inference then reports it exactly as it would have."""
+    from py4j.protocol import Py4JJavaError
+
+    if any(c in _GLOB_CHARS for c in path):
+        return None
+    jvm = spark._jvm
+    reader = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    skip_row_groups = (
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+    try:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        jp = jvm.org.apache.hadoop.fs.Path(path)
+        status = jp.getFileSystem(conf).getFileStatus(jp)
+        if not status.isFile():
+            return None
+        md = reader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
+            skip_row_groups,
+        )
+    except Py4JJavaError:
+        return None
+    return jvm.org.apache.parquet.hadoop.Footer(status.getPath(), md)
+
+
+def _footer_schema(spark: SparkSession, footer):
+    """Spark's schema for one parquet footer: the StructType its
+    inference job would return, converted under the session's SQL conf
+    by Spark's own converter (so its Spark-schema metadata, TIMESTAMP_NTZ
+    and nanos-as-long rules are Spark's, not a Python re-mapping)."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    pkg = spark._jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = pkg.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    return _parse_datatype_json_string(
+        pkg.ParquetFileFormat.readSchemaFromFooter(footer, converter).json()
+    )
 
 
 def read_file(
@@ -329,6 +396,12 @@ def read_file(
     CSV defaults to header=True + inferSchema, matching the reference's
     default CsvReadOptions (utils.rs:66-68); `header=False` mirrors
     `--no-header-row` (main.rs:95-97).
+
+    A path naming exactly one parquet file opens with no Spark job: its
+    footer is read once on the driver and Spark's own converter turns it
+    into the schema the reader is given, the schema Spark's inference
+    job would have returned. A parquet directory or glob keeps Spark's
+    inference (one job), as do the text formats.
     """
     fmt = fmt or file_format(path)
     if fmt == "arrow":
@@ -343,12 +416,21 @@ def read_file(
         if path.lower().endswith(".tsv"):
             reader = reader.option("sep", "\t")
     if fmt == "parquet":
-        nano_cols = _nano_timestamp_columns(path)
+        footer = _single_parquet_footer(spark, path)
+        if footer is None:
+            nano_cols = _nano_timestamp_columns(path)
+        else:
+            nano_cols = _NANOS_FIELD.findall(
+                footer.getParquetMetadata().getFileMetaData().getSchema().toString()
+            )
         if nano_cols:
             # Runtime-set so sessions not built by bdt_spark.session (e.g.
             # the driver's own) still read nanos parquet. Spark 4 errors on
             # TIMESTAMP(NANOS) without this.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if footer is not None:
+            # converted after the conf above: Spark refuses nanos otherwise
+            reader = reader.schema(_footer_schema(spark, footer))
         df = reader.format(fmt).load(path)
         for col in nano_cols:
             df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))
@@ -483,6 +565,40 @@ def _path_bytes(path: str) -> int:
                     total += os.path.getsize(os.path.join(root, f))
         return total
     return os.path.getsize(path)
+
+
+def _part_files(directory: str) -> list[str]:
+    """The `part-*` data files of a Spark output directory in partition
+    order, the row order a coalesce(1) write of the same plan has (its
+    `.crc` and `_SUCCESS` files are not parts)."""
+    names = [n for n in os.listdir(directory) if n.startswith("part-")]
+    names.sort(key=lambda n: (int(re.match(r"part-(\d+)", n).group(1)), n))
+    return [os.path.join(directory, n) for n in names]
+
+
+def _concat_parts(parts: list[str], dst, *, header: bool) -> None:
+    """Append line-format part files to the binary file object `dst`.
+
+    With `header`, every part opens with the same csv header line: the
+    first part's is kept, and each later part's is checked and dropped.
+    A part whose first line differs raises ValueError, since its rows
+    would land under the wrong columns. An empty part adds nothing."""
+    first = None
+    for p in parts:
+        with open(p, "rb") as src:
+            if header:
+                line = src.readline()
+                if not line:
+                    continue
+                if first is None:
+                    first = line
+                    dst.write(line)
+                elif line != first:
+                    raise ValueError(
+                        f"{p}: header {line!r} differs from the first "
+                        f"part's {first!r}"
+                    )
+            shutil.copyfileobj(src, dst, 1 << 20)
 
 
 # Logical operators that never emit more rows than they read (a Union

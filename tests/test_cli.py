@@ -440,3 +440,45 @@ def test_cli_stream_ann(tmp_path, capsys, spark):
     ]) == 0
     assert "stream drained: index skew=" in capsys.readouterr().out
     assert spark.read.parquet(f"{idx}/increments").count() == 10
+
+
+def test_query_order_by_csv_output_matches_coalesced_write(
+    spark, tmp_path, monkeypatch
+):
+    """`query --output x.csv` goes through convert's single-file writer:
+    an ORDER BY result's range partitions are written in parallel and
+    concatenated in partition order, which is the global order, so the
+    file has the bytes a coalesce(1) write of the same query has."""
+    import glob
+
+    from bdt_spark import cli
+    from bdt_spark.operators import convert as conv
+
+    # the test session as is: get_spark would reset the AQE conf below
+    monkeypatch.setattr(cli, "get_spark", lambda name: spark)
+    sql = (
+        "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
+        "ORDER BY o_totalprice DESC, o_orderkey"
+    )
+    concats = []
+    real_concat = conv._concat_parts
+    monkeypatch.setattr(
+        conv, "_concat_parts",
+        lambda parts, dst, *, header: concats.append(len(parts))
+        or real_concat(parts, dst, header=header),
+    )
+    out = str(tmp_path / "top.csv")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep several range partitions
+    try:
+        rc = main(["query", "--tables", SF_DIR, "--sql", sql, "--output", out])
+        ref = str(tmp_path / "ref")
+        spark.sql(sql).coalesce(1).write.option("header", "true").csv(ref)
+    finally:
+        spark.conf.set(key, old)
+    assert rc == 0
+    assert concats and concats[0] > 1
+    [part] = glob.glob(ref + "/part-*")
+    with open(out, "rb") as f, open(part, "rb") as g:
+        assert f.read() == g.read()

@@ -669,3 +669,73 @@ def test_auto_mode_size_gate(files, spark, monkeypatch, capsys):
     res = compare_files(spark, a, c, method="positional")
     assert not res.ok and "Row 2" in res.message      # positional detail
     assert compare_files(spark, a, b, method="positional").ok
+
+
+def _json_copies(spark, sf_dir, tmp_path, table="supplier"):
+    """A single-file and a part-file-directory JSON copy of a fixture,
+    and a perturbed single-file copy (one s_acctbal moved by 1)."""
+    from pyspark.sql import functions as F
+
+    from bdt_spark.operators.convert import convert
+    from bdt_spark.sources.io import read_file
+
+    src = f"{sf_dir}/{table}.parquet"
+    one = str(tmp_path / f"{table}.json")
+    many = str(tmp_path / f"{table}_dir.json")
+    convert(spark, src, one, single_file=True)
+    convert(spark, src, many)
+    bad_src = str(tmp_path / f"{table}_bad.parquet")
+    df = read_file(spark, src)
+    key = df.agg(F.min("s_suppkey")).first()[0]
+    df.withColumn(
+        "s_acctbal",
+        F.when(F.col("s_suppkey") == key, F.col("s_acctbal") + 1).otherwise(
+            F.col("s_acctbal")
+        ),
+    ).write.parquet(bad_src)
+    bad = str(tmp_path / f"{table}_bad.json")
+    convert(spark, bad_src, bad, single_file=True)
+    return src, one, many, bad
+
+
+def test_hash_and_epsilon_compare_json_copies(spark, sf_dir, tmp_path):
+    """Spark's JSON reader orders inferred columns by name; hash and
+    epsilon compare realign the JSON side by name, so a JSON copy (single
+    file or part directory) matches its source and a perturbed one does
+    not, in either argument order."""
+    src, one, many, bad = _json_copies(spark, sf_dir, tmp_path)
+    assert spark.read.json(one).columns != spark.read.parquet(src).columns
+    for eps in (None, 1e-6):
+        for copy in (one, many):
+            for a, b in ((src, copy), (copy, src)):
+                res = compare_files(spark, a, b, method="hash", epsilon=eps)
+                assert res.ok, (a, b, eps, res.message)
+        res = compare_files(spark, src, bad, method="hash", epsilon=eps)
+        assert not res.ok, res.message
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+def test_positional_compare_reads_part_file_directory(
+    spark, sf_dir, tmp_path, fmt
+):
+    """The default convert output is a part-file directory; positional
+    (and auto) compare reads its part files in partition order, as it
+    does an orc directory."""
+    from bdt_spark.operators.convert import convert
+
+    src = str(tmp_path / "nation3.parquet")
+    spark.read.parquet(f"{sf_dir}/nation.parquet").repartition(3).write.parquet(
+        src
+    )
+    out = str(tmp_path / f"nation.{fmt}")
+    convert(spark, src, out)
+    assert len([n for n in os.listdir(out) if n.startswith("part-")]) > 1
+    # the single-file output of the same scan has the directory's row
+    # order (the parquet source's file order is Spark's scan order, which
+    # need not be its part-name order)
+    single = str(tmp_path / f"nation_one.{fmt}")
+    convert(spark, src, single, single_file=True)
+    for method in ("positional", "auto"):
+        res = compare_files(None, single, out, method=method)
+        assert res.ok and res.method == "positional", res.message
+    assert compare_files(spark, src, out, method="hash").ok

@@ -7,6 +7,7 @@ import pytest
 
 from bdt_spark.operators.compare import compare_files
 from bdt_spark.operators.convert import UnsupportedOutputError, convert
+from bdt_spark.sources.io import read_file
 
 
 def test_parquet_to_csv_single_file(spark, sf_dir, tmp_path):
@@ -301,3 +302,152 @@ def test_arrow_convert_roundtrip_plain_path_and_file_uri(
         convert(spark, p(src), "s3a://bucket/supplier.arrow")
     with pytest.raises(ValueError, match="file: URI"):
         compare_files(None, p(src), "s3a://bucket/supplier.parquet")
+
+
+# --- single-file writes: parallel csv/json parts, concatenated ------------
+
+
+def _coalesced_bytes(df, fmt: str, out: str) -> bytes:
+    """The one part a coalesce(1) write of `df` gives: the bytes a
+    single-file csv/json output must equal."""
+    import glob
+
+    w = df.coalesce(1).write.mode("overwrite")
+    if fmt == "csv":
+        w.option("header", "true").csv(out)
+    else:
+        w.json(out)
+    [part] = glob.glob(os.path.join(out, "part-*"))
+    with open(part, "rb") as f:
+        return f.read()
+
+
+@pytest.fixture()
+def parts_seen(monkeypatch):
+    """Part counts each single-file commit found, in call order, and how
+    many of those commits concatenated parts."""
+    from bdt_spark.operators import convert as conv
+
+    seen = {"parts": [], "concats": 0}
+    real_parts, real_concat = conv._part_files, conv._concat_parts
+
+    def part_files(d):
+        out = real_parts(d)
+        seen["parts"].append(len(out))
+        return out
+
+    def concat_parts(parts, dst, *, header):
+        seen["concats"] += 1
+        return real_concat(parts, dst, header=header)
+
+    monkeypatch.setattr(conv, "_part_files", part_files)
+    monkeypatch.setattr(conv, "_concat_parts", concat_parts)
+    return seen
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+def test_single_file_line_formats_match_coalesce_bytes(
+    spark, sf_dir, tmp_path, fmt, parts_seen
+):
+    """A 3-part input writes 3 parts in parallel; concatenated in
+    partition order (later csv headers dropped) they are byte-identical
+    to a coalesce(1) write of the same input."""
+    src = str(tmp_path / "orders3.parquet")
+    spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(3).write.parquet(src)
+    out = str(tmp_path / f"orders.{fmt}")
+    convert(spark, src, out, single_file=True)
+    assert parts_seen == {"parts": [3], "concats": 1}
+    want = _coalesced_bytes(read_file(spark, src), fmt, str(tmp_path / "ref"))
+    with open(out, "rb") as f:
+        assert f.read() == want
+    assert not os.path.exists(out + "._spark_tmp")
+
+
+def test_single_file_csv_empty_input_is_header_only(spark, tmp_path):
+    src = str(tmp_path / "empty.parquet")
+    spark.range(0).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(src)
+    out = str(tmp_path / "empty.csv")
+    convert(spark, src, out, single_file=True)
+    with open(out, "rb") as f:
+        got = f.read()
+    assert got == b"id,s\n"
+    assert got == _coalesced_bytes(
+        read_file(spark, src), "csv", str(tmp_path / "ref")
+    )
+
+
+def test_single_file_csv_quoted_column_names(spark, tmp_path, parts_seen):
+    """Column names holding a comma and a quote are quoted in every
+    part's header; the header is kept once and the file reads back."""
+    src = str(tmp_path / "names.parquet")
+    spark.range(30).selectExpr(
+        "id AS `a,b`", "CAST(id * 2 AS STRING) AS `c\"d`"
+    ).repartition(3).write.parquet(src)
+    out = str(tmp_path / "names.csv")
+    convert(spark, src, out, single_file=True)
+    assert parts_seen["concats"] == 1
+    with open(out, "rb") as f:
+        got = f.read()
+    assert got == _coalesced_bytes(
+        read_file(spark, src), "csv", str(tmp_path / "ref")
+    )
+    back = spark.read.option("header", "true").csv(out)
+    assert back.columns == ["a,b", 'c"d']
+    assert back.count() == 30
+
+
+def test_single_file_csv_header_mismatch_raises(tmp_path):
+    from bdt_spark.sources.io import _concat_parts
+
+    a, b = tmp_path / "part-00000.csv", tmp_path / "part-00001.csv"
+    a.write_bytes(b"x,y\n1,2\n")
+    b.write_bytes(b"x,z\n3,4\n")
+    with open(tmp_path / "out.csv", "wb") as dst, pytest.raises(
+        ValueError, match="header"
+    ):
+        _concat_parts([str(a), str(b)], dst, header=True)
+
+
+@pytest.mark.parametrize(
+    "name,zstd",
+    [("out.csv", True), ("out.parquet", False), ("out.orc", False),
+     ("out.arrow", False), ("line_break.csv", False)],
+)
+def test_single_file_other_outputs_stay_one_part(
+    spark, tmp_path, name, zstd, parts_seen, monkeypatch
+):
+    """Compressed text, footer formats, and csv whose header would span
+    lines cannot be concatenated: they still coalesce(1) to one part."""
+    from pyspark.errors import IllegalArgumentException
+
+    src = str(tmp_path / "src.parquet")
+    col = "`a\nb`" if name == "line_break.csv" else "a"
+    spark.range(30).selectExpr(f"id AS {col}").repartition(3).write.parquet(src)
+    coalesced = []
+    frame = type(spark.range(1))
+    real_coalesce = frame.coalesce
+    monkeypatch.setattr(
+        frame, "coalesce",
+        lambda self, n: coalesced.append(n) or real_coalesce(self, n),
+    )
+    out = str(tmp_path / name)
+    try:
+        convert(spark, src, out, single_file=True, zstd=zstd)
+    except IllegalArgumentException as e:
+        # a Spark build without a text zstd codec refuses the write
+        assert zstd and "CODEC_NOT_AVAILABLE" in str(e)
+        assert coalesced == [1] and parts_seen["concats"] == 0
+        return
+    assert coalesced == [1]
+    assert parts_seen == {"parts": [1], "concats": 0}
+    assert os.path.isfile(out)
+    if zstd:
+        with open(out, "rb") as f:
+            assert f.read(4) == b"\x28\xb5\x2f\xfd"  # zstd frame magic
+    elif name == "line_break.csv":
+        back = spark.read.option("header", "true").option(
+            "multiLine", "true"
+        ).csv(out)
+        assert back.columns == ["a\nb"] and back.count() == 30
+    else:
+        assert read_file(spark, out).count() == 30

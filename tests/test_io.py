@@ -445,3 +445,190 @@ def test_fixtures_register_from_hadoop_fs_uri(spark, sf_dir):
         assert rows
     finally:
         load_fixture_tables(spark, sf_dir, force=True)
+
+
+# --- single-file parquet opens: the footer schema, no inference job -------
+
+
+def _jobs_started(spark, fn) -> set:
+    """Ids of the Spark jobs `fn` starts, from any thread (registration
+    reads tables on a thread pool, whose jobs carry no job group): the
+    ungrouped job ids the status tracker gains, read once the listener
+    bus has delivered every event."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None)) - before
+
+
+def _assert_spark_parity(spark, path):
+    """read_file of one parquet file gives the schema Spark's inference
+    gives, and the same rows. (The relation makes every column nullable
+    on both paths, so a REQUIRED column compares at the scan, not at the
+    raw footer schema.)"""
+    from bdt_spark.sources import io as bio
+
+    inferred = spark.read.parquet(path)
+    footer = bio._single_parquet_footer(spark, path)
+    assert footer is not None
+    given = spark.read.schema(bio._footer_schema(spark, footer)).parquet(path)
+    assert given.schema == inferred.schema
+    df = read_file(spark, path)
+    assert df.schema == bio._ntz_to_ltz(inferred).schema
+    assert df.collect() == bio._ntz_to_ltz(inferred).collect()
+
+
+@pytest.mark.parametrize(
+    "table",
+    ["customer", "documents", "embeddings", "events", "lineitem", "nation",
+     "orders", "part", "region", "supplier"],
+)
+def test_single_parquet_file_schema_and_rows_match_spark(spark, sf_dir, table):
+    import os
+
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    assert os.path.isfile(path)
+    _assert_spark_parity(spark, path)
+
+
+def test_single_parquet_file_typed_columns_match_spark(spark, tmp_path):
+    """REQUIRED columns, decimal, uint32 and nested struct/list/map, as
+    pyarrow writes them: the footer schema is Spark's own."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([
+        pa.field("id", pa.int64(), nullable=False),
+        pa.field("price", pa.decimal128(12, 2)),
+        pa.field("u", pa.uint32(), nullable=False),
+        pa.field("s", pa.struct([pa.field("a", pa.int32(), nullable=False),
+                                 pa.field("b", pa.string())])),
+        pa.field("xs", pa.list_(pa.float64())),
+        pa.field("m", pa.map_(pa.string(), pa.int64())),
+    ])
+    table = pa.table({
+        "id": [1, 2],
+        "price": [Decimal("12.50"), None],
+        "u": [4_000_000_000, 7],
+        "s": [{"a": 1, "b": "x"}, {"a": 2, "b": None}],
+        "xs": [[1.5, 2.5], []],
+        "m": [[("k", 1)], None],
+    }, schema=schema)
+    path = str(tmp_path / "typed.parquet")
+    pq.write_table(table, path)
+    _assert_spark_parity(spark, path)
+
+
+def test_single_parquet_file_spark_written_ntz(spark, tmp_path):
+    """A Spark-written TIMESTAMP_NTZ column: Spark's schema metadata in
+    the footer makes it TIMESTAMP_NTZ, and read_file then normalizes it
+    to TIMESTAMP like any NTZ scan."""
+    import glob
+
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    d = str(tmp_path / "ntz")
+    spark.sql(
+        "SELECT 1 AS k, TIMESTAMP_NTZ'2024-03-01 12:34:56.789' AS t"
+    ).coalesce(1).write.parquet(d)
+    [path] = glob.glob(d + "/part-*.parquet")
+    _assert_spark_parity(spark, path)
+    assert isinstance(spark.read.parquet(path).schema["t"].dataType,
+                      TimestampNTZType)
+    assert isinstance(read_file(spark, path).schema["t"].dataType,
+                      TimestampType)
+
+
+def test_nanos_parquet_reads_in_a_vanilla_session(spark, tmp_path):
+    """TIMESTAMP(NANOS) without the nanosAsLong conf (a session not built
+    by bdt_spark.session): read_file sets the conf before converting the
+    footer, so the file reads as micros-truncated timestamps, from a
+    single file and from a directory."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, None]
+    table = pa.table({
+        "k": [1, 2],
+        "ts": pa.array(ns, pa.timestamp("ns")),
+    })
+    d = tmp_path / "nanos"
+    d.mkdir()
+    path = str(d / "part-0.parquet")
+    pq.write_table(table, path, version="2.6")
+    assert "timeUnit=nanoseconds" in str(pq.ParquetFile(path).schema)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(conf)
+    want = [dt.datetime(2023, 11, 14, 22, 13, 20, 123456), None]
+    try:
+        for p in (path, str(d)):
+            spark.conf.unset(conf)
+            df = read_file(spark, p, fmt="parquet")
+            assert spark.conf.get(conf) == "true"
+            assert df.schema["ts"].dataType.typeName() == "timestamp"
+            got = [r.ts for r in df.orderBy("k").collect()]
+            assert [g and g.replace(tzinfo=None) for g in got] == want
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_int96_parquet_reads_as_timestamp(spark, tmp_path):
+    """INT96, Spark's default timestamp encoding in a vanilla session,
+    is not TIMESTAMP(NANOS): it reads as a plain timestamp, from a
+    single file and from a directory."""
+    import glob
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(conf)
+    d = str(tmp_path / "int96")
+    try:
+        spark.conf.set(conf, "INT96")
+        spark.sql(
+            "SELECT 1 AS k, TIMESTAMP'2024-03-01 12:34:56' AS ts"
+        ).coalesce(1).write.parquet(d)
+    finally:
+        spark.conf.set(conf, old)
+    [path] = glob.glob(d + "/part-*.parquet")
+    want = spark.read.parquet(path).collect()
+    assert read_file(spark, path).collect() == want
+    assert read_file(spark, d, fmt="parquet").collect() == want
+
+
+def test_single_parquet_open_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """One parquet file opens from its footer on the driver, so neither
+    read_file nor the fixture registration starts a Spark job; a parquet
+    directory still runs Spark's inference job."""
+    from bdt_spark.sources.io import load_fixture_tables
+
+    one = f"{sf_dir}/orders.parquet"
+    assert not _jobs_started(spark, lambda: read_file(spark, one).schema)
+    assert not _jobs_started(
+        spark, lambda: load_fixture_tables(spark, sf_dir, force=True)
+    )
+    d = str(tmp_path / "orders_dir.parquet")
+    spark.read.parquet(one).repartition(3).write.parquet(d)
+    assert _jobs_started(spark, lambda: read_file(spark, d).schema)
+
+
+def test_single_parquet_footer_leaves_globs_and_missing_paths_to_spark(
+    spark, sf_dir, tmp_path
+):
+    from pyspark.errors import AnalysisException
+
+    from bdt_spark.sources import io as bio
+
+    assert bio._single_parquet_footer(spark, sf_dir) is None
+    assert bio._single_parquet_footer(spark, f"{sf_dir}/region.parq*") is None
+    missing = str(tmp_path / "missing.parquet")
+    assert bio._single_parquet_footer(spark, missing) is None
+    with pytest.raises(AnalysisException):
+        read_file(spark, missing)
+    assert read_file(spark, f"{sf_dir}/region.parq*", fmt="parquet").count() == 5
