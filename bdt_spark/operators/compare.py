@@ -208,7 +208,7 @@ def _compare_positional(
         else:
             if c1.type != c2.type:
                 try:
-                    c2 = pc.cast(c2, c1.type)
+                    c1, c2 = _cast_to_common_type(c1, c2)
                 except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
                     return ComparisonResult(
                         False,
@@ -227,6 +227,41 @@ def _compare_positional(
     if first is not None:
         return _diff(*first)
     return ComparisonResult(True, "Files match")
+
+
+def _cast_to_common_type(c1, c2):
+    """The column pair as one type. A string column beside a timestamp or
+    date column is parsed into that type, in either argument order: text
+    formats hold times as ISO strings, and Spark's json writer adds a
+    zone offset that a plain cast into a zoneless type rejects. Otherwise
+    the second column is cast to the first's type."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def text(t):
+        return pa.types.is_string(t) or pa.types.is_large_string(t)
+
+    def temporal(t):
+        return pa.types.is_timestamp(t) or pa.types.is_date(t)
+
+    if text(c1.type) and temporal(c2.type):
+        return _parse_temporal(c1, c2.type), c2
+    if temporal(c1.type) and text(c2.type):
+        return c1, _parse_temporal(c2, c1.type)
+    return c1, pc.cast(c2, c1.type)
+
+
+def _parse_temporal(strings, target):
+    """ISO strings as `target`; a string with a zone offset parses as its
+    UTC instant (the session time zone), with or without `target` zoned."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    try:
+        return pc.cast(strings, target)
+    except pa.ArrowInvalid:
+        unit = target.unit if pa.types.is_timestamp(target) else "us"
+        return pc.cast(pc.cast(strings, pa.timestamp(unit, "UTC")), target)
 
 
 def _diff(row: int, col: int, left, right) -> ComparisonResult:

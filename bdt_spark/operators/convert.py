@@ -7,13 +7,16 @@ writes csv/json/parquet. Mirrors the reference's writer surface:
   Uncompressed csv and json parts are written in parallel from the plan's
   own partitions and concatenated in partition order (each later csv
   part's header line checked and dropped), which gives the bytes a
-  coalesce(1) write gives. Compressed text, csv whose column names hold a
-  line break, and the footer formats (parquet, orc, arrow) cannot be
-  concatenated: those coalesce(1) and move the one part file.
+  coalesce(1) write gives. Csv whose column names hold a line break and
+  the footer formats (parquet, orc, arrow) cannot be concatenated: those
+  coalesce(1) and move the one part file.
 - `zstd`: parquet compression zstd + dictionary off, approximating the
   reference's zstd-level-8 + PLAIN encoding WriterProperties
   (convert.rs:23-34; Spark exposes no codec level or per-column encoding —
   documented divergence; created_by is not settable in Spark, cosmetic).
+  As in the reference, which sets zstd only through those parquet
+  properties, csv and json are written uncompressed; orc and arrow
+  (extensions) compress with zstd too.
 - Avro output rejected, matching convert.rs:37-39.
 - ORC output (EXTENSION): native Spark sink; the reference's FileFormat
   enum has no ORC arm (utils.rs:12-23).
@@ -269,12 +272,11 @@ def write_file(
         _write_arrow(df, output_path, single_file=single_file, zstd=zstd)
         return
 
-    # Uncompressed line formats concatenate; a csv header holding a line
-    # break would span lines (json escapes line breaks in its keys).
+    # Line formats concatenate; a csv header holding a line break would
+    # span lines (json escapes line breaks in its keys).
     concat = (
         single_file
         and out_fmt in ("csv", "json")
-        and not zstd
         and not (
             out_fmt == "csv" and any("\r" in c or "\n" in c for c in df.columns)
         )
@@ -286,13 +288,8 @@ def write_file(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if out_fmt == "csv":
-        writer = writer.option("header", "true")
-        if zstd:
-            writer = writer.option("compression", "zstd")
-        writer.csv(target_dir)
+        writer.option("header", "true").csv(target_dir)
     elif out_fmt == "json":
-        if zstd:
-            writer = writer.option("compression", "zstd")
         writer.json(target_dir)
     elif out_fmt == "orc":
         # ORC out — an EXTENSION (the reference's FileFormat enum has no

@@ -1,14 +1,13 @@
-"""Physical-plan tree inspection shared by tools/explain_audit.py and
-tests/test_globalorder.py.
+"""Physical-plan tree inspection: the plan-shape ledger row of a query
+(`ledger_row`, checked against plans/ledger.json by tests/test_queries.py
+and rewritten by tools/plan_ledger.py), plus the structural checks
+tests/test_plans.py and tests/test_globalorder.py run.
 
-The r10 versions classified `Exchange SinglePartition` children by
-substring-matching the NEXT line of the plan's toString — fragile when a
-WholeStageCodegen / InputAdapter wrapper (or a multi-line operator) sits
-between the exchange and its real child (r10 advice item). This walks the
-actual JVM plan tree via py4j instead: unwrap AdaptiveSparkPlanExec to its
-current physical plan, find every shuffle exchange whose output
-partitioning is SinglePartition, then descend through codegen wrappers to
-the first substantive child and report its node name.
+Everything walks the JVM plan tree via py4j rather than matching the
+plan's toString: AdaptiveSparkPlanExec is unwrapped to its current
+physical plan, and codegen/AQE wrappers are descended through to the
+substantive node (string matching broke whenever a WholeStageCodegen /
+InputAdapter wrapper or a multi-line operator sat between two nodes).
 """
 
 from __future__ import annotations
@@ -33,11 +32,18 @@ def _children(node):
     return [cs.apply(i) for i in range(cs.size())]
 
 
-def _walk(node):
+def _walk(node, subqueries: bool = False):
+    """Every node of the tree under `node`; with `subqueries`, also the
+    plans of its subquery expressions. A reused exchange or subquery is
+    a leaf, so work the plan shares counts once."""
     node = _unwrap_adaptive(node)
     yield node
-    for c in _children(node):
-        yield from _walk(c)
+    kids = _children(node)
+    if subqueries:
+        subs = node.subqueries()
+        kids += [subs.apply(i) for i in range(subs.size())]
+    for c in kids:
+        yield from _walk(c, subqueries)
 
 
 def _substantive_child(node):
@@ -142,102 +148,77 @@ def broadcast_over_generate(df: DataFrame) -> list[str]:
     return out
 
 
-def _scan_root_names(node) -> list[str] | None:
-    """Basenames of a file scan's root paths, resolved from its FileIndex
-    (FileSourceScanExec.relation.location.rootPaths) — exact, immune to
-    spark.sql.maxToStringFields truncation of the rendered Location
-    string and to partitioned-subdir paths (r13 ADVICE: substring
-    matching over toString() is a silent-false-negative vector). None
-    when the node has no resolvable relation (v2/exotic scans)."""
-    try:
+# Columns of a plans/ledger.json row besides `scan:<table>` (the parquet
+# scans of each file, named by its stem) and `build_jobs`.
+_SHUFFLE_COLUMNS = {
+    "HashPartitioning": "exchange_hash",
+    "RoundRobinPartitioning": "exchange_round_robin",
+    "RangePartitioning": "exchange_range",
+    "SinglePartition$": "exchange_single",
+}
+_NODE_COLUMNS = (  # (node-name prefix, column)
+    ("BroadcastExchange", "exchange_broadcast"),
+    ("SortMergeJoin", "sort_merge_join"),
+    ("BroadcastHashJoin", "broadcast_hash_join"),
+    ("CartesianProduct", "nested_loop_join"),
+    ("BroadcastNestedLoopJoin", "nested_loop_join"),
+    ("Generate", "generate"),
+    ("InMemoryTableScan", "in_memory_scan"),
+)
+_PYTHON_EXEC_PACKAGE = "org.apache.spark.sql.execution.python."
+
+
+def _ledger_column(node) -> str | None:
+    name = node.nodeName()
+    if name.startswith("Scan parquet"):
         paths = node.relation().location().rootPaths()
-        return [
-            str(paths.apply(i).getName()).lower()
-            for i in range(paths.size())
-        ]
-    except Exception:
-        return None
+        stems = sorted(
+            {str(paths.apply(i).getName()).split(".")[0]
+             for i in range(paths.size())}
+        )
+        return "scan:" + "+".join(stems)
+    if name == "Exchange":
+        kind = node.outputPartitioning().getClass().getSimpleName()
+        return _SHUFFLE_COLUMNS.get(kind, "exchange_other")
+    if node.getClass().getName().startswith(_PYTHON_EXEC_PACKAGE):
+        return "python_exec"
+    return next((col for p, col in _NODE_COLUMNS if name.startswith(p)), None)
 
 
-def broadcast_over_big_scan(
-    df: DataFrame, big_tables: set[str], seen_roots: set[str] | None = None
-) -> list[str]:
-    """BroadcastExchange nodes whose MAP-ONLY build subtree scans one of
-    the named fact tables — the r13 q21 midpoint lesson, generalized: a
-    selective filter over a corpus-scale scan (o_orderstatus='F' over 45M
-    orders) statically shrinks the relation under the broadcast threshold,
-    and the true build then dies with "Not enough memory to build and
-    broadcast". A hit is a plan that only survives where the filter's
-    TRUE output happens to be small; at a bigger shard of the same data
-    it is a dead job. Only map-only subtrees are flagged: a shuffle
-    between the scan and the BroadcastExchange is a query-stage boundary,
-    so AQE re-selects the join strategy there from TRUE materialized
-    sizes — a broadcast above a shuffle is runtime-safe at any scale,
-    while a scan->filter->broadcast chain has no stage boundary and its
-    static decision is final. Match is by the scan's fixture file path;
-    static inspection only — no job runs. Callers adjudicate the
-    remaining hits: safe when the build is a hard-bounded probe-set/key
-    filter or an honestly-estimated full scan (the estimate tracks true
-    size linearly, so bigger shards flip to SMJ on their own);
-    q21-class when a filter's estimate shrinks while its true output
-    scales with the corpus.
+def ledger_row(spark, name: str, sf_dir: str) -> tuple[DataFrame, dict]:
+    """Build registered query `name` over `sf_dir`, run it, and return
+    the DataFrame with its plans/ledger.json row: `build_jobs`, the Spark
+    jobs the build starts (from any thread: the ungrouped job ids the
+    status tracker gains once the listener bus has delivered every
+    event), and the node counts of the DataFrame's own physical plan,
+    read before the run. Zero counts are left out. The caller owns the
+    result (cacheutil.release).
 
-    Matching is FileIndex-first: the scan's actual root-path basenames
-    (exact) with the rendered-string needle only as fallback for scans
-    without a resolvable relation. Pass `seen_roots` to collect every
-    root name observed under a BroadcastExchange — an audit's "no hits"
-    is only a clean bill alongside the evidence of what it resolved."""
-    out = []
-    # fallback needles match the fixture FILE name, not a bare substring:
-    # "part" is inside both "parquet" and every "part-00001" file of a
-    # dir layout, and a scan's simpleString ends with its Location path
-    needles = {t.lower(): f"/{t.lower()}.parq" for t in big_tables}
+    The counts come from the plan adaptive execution starts from, not
+    the one it ends with: AQE re-plans a join when its first input stage
+    finishes, so which side it broadcasts, and which exchanges it then
+    reuses, depends on which stage finished first. Two runs of
+    text_naive_bayes_langid in one session ended with 4 and 5 broadcast
+    exchanges, and join_bloom_filter_pruning with 2 and 5 orders scans."""
+    import bdt_spark.plans as plans
 
-    def _maponly_scan_hit(node):
-        node = _unwrap_adaptive(node)
-        name = node.nodeName()
-        if name.startswith("Exchange") or name.startswith("ShuffleExchange"):
-            return None  # stage boundary: AQE re-sizes everything above
-        if "Scan" in name or name.startswith("FileScan"):
-            roots = _scan_root_names(node)
-            if roots is not None:
-                if seen_roots is not None:
-                    seen_roots.update(roots)
-                hit = next(
-                    (
-                        t
-                        for t in needles
-                        if any(
-                            r == t or r.startswith(f"{t}.") for r in roots
-                        )
-                    ),
-                    None,
-                )
-            else:
-                text = node.toString().lower()
-                if seen_roots is not None:
-                    seen_roots.add(f"<unresolved: {name}>")
-                hit = next((t for t, n in needles.items() if n in text), None)
-            if hit is not None:
-                return (hit, node.toString().splitlines()[0][:90])
-        for c in _children(node):
-            found = _maponly_scan_hit(c)
-            if found is not None:
-                return found
-        return None
-
-    for node in _walk(df._jdf.queryExecution().executedPlan()):
-        if not node.nodeName().startswith("BroadcastExchange"):
-            continue
-        for c in _children(_unwrap_adaptive(node)):
-            found = _maponly_scan_hit(c)
-            if found is not None:
-                out.append(
-                    f"BroadcastExchange over map-only scan of {found[0]}: "
-                    f"{found[1]}"
-                )
-                break
-    return out
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    df = plans.get_query(name).fn(spark, sf_dir)
+    bus.waitUntilEmpty()
+    row = {"build_jobs": len(
+        set(sc.statusTracker().getJobIdsForGroup(None)) - before
+    )}
+    root = df._jdf.queryExecution().executedPlan()
+    for node in _walk(root, subqueries=True):
+        col = _ledger_column(node)
+        if col is not None:
+            row[col] = row.get(col, 0) + 1
+    df.collect()
+    return df, {k: v for k, v in sorted(row.items()) if v}
 
 
 # Queries whose broadcast-over-Generate hits are JUSTIFIED — each entry

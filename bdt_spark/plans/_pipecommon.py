@@ -12,33 +12,15 @@ module docstring in plans/pipeline.py for the cross-engine determinism and
 
 from __future__ import annotations
 
+from bdt_spark.operators.dedup import shingle_expr
 
 # ---------------------------------------------------------------------------
 # helpers: per-dialect SQL fragments
 # ---------------------------------------------------------------------------
 
-K_HASH = 8          # minhash signature length
-
-
-def _spark_shingles(src: str = "text") -> str:
-    """Distinct word 3-shingles of lower(text) — Spark dialect.
-
-    Built with zip_with over shifted slices rather than indexed element_at
-    inside a transform lambda: the naive form re-evaluates split() for
-    every element access (~3x shingle count per doc); this form references
-    the split array ~5x per DOC. zip_with pads the shorter side with null
-    and concat propagates null, so the trailing partial shingles drop out
-    in the filter."""
-    w = f"split(lower({src}), ' ')"
-    return (
-        f"array_distinct(filter(zip_with("
-        f"zip_with({w}, slice({w}, 2, size({w})), (x, y) -> concat(x, ' ', y)),"
-        f" slice({w}, 3, size({w})), (x, y) -> concat(x, ' ', y)),"
-        f" x -> x IS NOT NULL))"
-    )
-
 
 def _duck_shingles(src: str = "text") -> str:
+    """DuckDB twin of operators/dedup.shingle_expr (the Spark side)."""
     w = f"string_split(lower({src}), ' ')"
     return (
         f"list_distinct(list_transform(range(1, greatest(len({w}) - 2, 1) + 1),"
@@ -46,11 +28,8 @@ def _duck_shingles(src: str = "text") -> str:
     )
 
 
-N_MD5_SEEDS = K_HASH // 4  # each md5 digest yields four 8-hex-char lanes
-
-
 def _shingles(dialect: str) -> str:
-    return _spark_shingles() if dialect == "spark" else _duck_shingles()
+    return shingle_expr() if dialect == "spark" else _duck_shingles()
 
 
 def _shingle_stream(dialect: str) -> str:

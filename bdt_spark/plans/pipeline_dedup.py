@@ -15,18 +15,20 @@ from pyspark.sql import functions as F
 
 from bdt_spark.plans.registry import query, sql_query
 from bdt_spark.sources.io import fanned_table, load_fixture_tables
-from bdt_spark.plans._pipecommon import (
+from bdt_spark.operators.dedup import (
     K_HASH,
+    N_BANDS,
+    band_keys_expr,
+    minhash_lane_exprs,
+    shingle_expr,
+)
+from bdt_spark.plans._pipecommon import (
     _cos_pre,
     _duck_shingles,
     _norm,
     _shingles,
-    _spark_shingles,
     _word_stream,
 )
-
-
-N_BANDS = 4         # LSH bands (rows per band = K_HASH / N_BANDS = 2)
 
 
 JACCARD_T = 0.5     # verification threshold
@@ -59,17 +61,14 @@ def _lane_mins(dialect: str, k_hash: int = K_HASH) -> str:
 
 
 def _band_keys(dialect: str, k_hash: int = K_HASH, n_bands: int = N_BANDS) -> str:
+    if dialect == "spark":
+        return band_keys_expr(k_hash, n_bands)
     rows = k_hash // n_bands
     parts = []
     for b in range(n_bands):
-        sig = ", ".join(f"h{b * rows + r}" for r in range(rows))
-        if dialect == "spark":
-            parts.append(f"concat('b{b}:', md5(concat({sig})))")
-        else:
-            sig_cat = " || ".join(f"h{b * rows + r}" for r in range(rows))
-            parts.append(f"'b{b}:' || md5({sig_cat})")
-    arr = ", ".join(parts)
-    return f"array({arr})" if dialect == "spark" else f"[{arr}]"
+        sig_cat = " || ".join(f"h{b * rows + r}" for r in range(rows))
+        parts.append(f"'b{b}:' || md5({sig_cat})")
+    return f"[{', '.join(parts)}]"
 
 
 def _minhash_lsh_sql(
@@ -96,15 +95,9 @@ def _minhash_lsh_sql(
         # mins via array_min — zero shuffle between the scan and the band-
         # bucket exchange (the explode->GROUP BY form pays a doc_id
         # shuffle for the same result; min over identical values)
-        digests = ", ".join(
-            f"transform(shingles, s -> md5(concat('{i}#', s))) AS d{i}"
-            for i in range(k_hash // 4)
-        )
-        lanes = ",\n         ".join(
-            f"array_min(transform(d{j // 4}, x -> substring(x,"
-            f" {(j % 4) * 8 + 1}, 8))) AS h{j}"
-            for j in range(k_hash)
-        )
+        digest_exprs, lane_exprs = minhash_lane_exprs(k_hash)
+        digests = ", ".join(digest_exprs)
+        lanes = ",\n         ".join(lane_exprs)
         sig_ctes = f"""
     digests AS (
       SELECT doc_id, {digests} FROM sh
@@ -1265,7 +1258,7 @@ sql_query(
 
 
 def _prefix_filter_spark_sql() -> str:
-    sh = _spark_shingles()
+    sh = shingle_expr()
     # REPARTITION(32) on the docs CTE (ABOVE the shingle projection —
     # deliberately): Spark inlines the CTE per consumer, so without the
     # hint every downstream CTE re-runs the shingle CPU on the 4 tasks

@@ -739,3 +739,36 @@ def test_positional_compare_reads_part_file_directory(
         res = compare_files(None, single, out, method=method)
         assert res.ok and res.method == "positional", res.message
     assert compare_files(spark, src, out, method="hash").ok
+
+
+def test_positional_compare_parses_json_times(spark, sf_dir, tmp_path):
+    """A single-file json copy of orders holds o_orderdate as ISO text
+    with a zone offset; positional compare parses it into the parquet
+    side's timestamp type in either argument order, and a copy with one
+    perturbed cell still reports its first differing row."""
+    import json
+
+    from bdt_spark.operators.convert import convert
+
+    src = os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "orders.parquet"
+    )
+    if not os.path.exists(src):
+        pytest.skip("needs the sf0.01 fixtures")
+    copy = str(tmp_path / "orders.json")
+    convert(spark, src, copy, single_file=True)
+    for a, b in ((src, copy), (copy, src)):
+        res = compare_files(None, a, b, method="positional")
+        assert res.ok, (a, b, res.message)
+
+    with open(copy) as f:
+        rows = [json.loads(line) for line in f]
+    rows[7]["o_orderdate"] = "1970-01-02T00:00:00.000Z"
+    bad = str(tmp_path / "orders_bad.json")
+    with open(bad, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+    for a, b in ((src, bad), (bad, src)):
+        res = compare_files(None, a, b, method="positional")
+        assert not res.ok
+        assert res.message.startswith("Row 7 does not match."), res.message
+        assert res.message.endswith("at position 4"), res.message

@@ -416,10 +416,10 @@ def test_single_file_csv_header_mismatch_raises(tmp_path):
 def test_single_file_other_outputs_stay_one_part(
     spark, tmp_path, name, zstd, parts_seen, monkeypatch
 ):
-    """Compressed text, footer formats, and csv whose header would span
-    lines cannot be concatenated: they still coalesce(1) to one part."""
-    from pyspark.errors import IllegalArgumentException
-
+    """Footer formats and csv whose header would span lines cannot be
+    concatenated: they still coalesce(1) to one part. Text is written
+    uncompressed under zstd, so zstd csv concatenates its parts into the
+    bytes of the plain write."""
     src = str(tmp_path / "src.parquet")
     col = "`a\nb`" if name == "line_break.csv" else "a"
     spark.range(30).selectExpr(f"id AS {col}").repartition(3).write.parquet(src)
@@ -431,23 +431,46 @@ def test_single_file_other_outputs_stay_one_part(
         lambda self, n: coalesced.append(n) or real_coalesce(self, n),
     )
     out = str(tmp_path / name)
-    try:
-        convert(spark, src, out, single_file=True, zstd=zstd)
-    except IllegalArgumentException as e:
-        # a Spark build without a text zstd codec refuses the write
-        assert zstd and "CODEC_NOT_AVAILABLE" in str(e)
-        assert coalesced == [1] and parts_seen["concats"] == 0
+    convert(spark, src, out, single_file=True, zstd=zstd)
+    if zstd:
+        plain = str(tmp_path / f"plain_{name}")
+        convert(spark, src, plain, single_file=True)
+        assert coalesced == [] and parts_seen["concats"] == 2
+        with open(out, "rb") as f, open(plain, "rb") as g:
+            assert f.read() == g.read()
         return
     assert coalesced == [1]
     assert parts_seen == {"parts": [1], "concats": 0}
     assert os.path.isfile(out)
-    if zstd:
-        with open(out, "rb") as f:
-            assert f.read(4) == b"\x28\xb5\x2f\xfd"  # zstd frame magic
-    elif name == "line_break.csv":
+    if name == "line_break.csv":
         back = spark.read.option("header", "true").option(
             "multiLine", "true"
         ).csv(out)
         assert back.columns == ["a\nb"] and back.count() == 30
     else:
         assert read_file(spark, out).count() == 30
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+@pytest.mark.parametrize("single_file", [True, False])
+def test_zstd_text_output_is_written_plain(
+    spark, sf_dir, tmp_path, fmt, single_file
+):
+    """zstd compresses no text format, as in the reference, which sets it
+    through parquet writer properties (convert.rs:23-34): a csv or json
+    write under zstd succeeds, single file or directory, with the bytes
+    of the plain write."""
+    from bdt_spark.sources.io import _part_files
+
+    def write(name, zstd):
+        out = str(tmp_path / f"{name}.{fmt}")
+        convert(spark, f"{sf_dir}/nation.parquet", out,
+                single_file=single_file, zstd=zstd)
+        paths = [out] if single_file else _part_files(out)
+        contents = []
+        for p in paths:
+            with open(p, "rb") as f:
+                contents.append(f.read())
+        return contents
+
+    assert write("z", True) == write("plain", False)

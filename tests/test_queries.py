@@ -26,22 +26,40 @@ def test_inventory_size():
     assert len(ALL) >= 80
 
 
+def test_ledger_has_one_row_per_query():
+    from tools.plan_ledger import read_ledger
+
+    assert sorted(read_ledger()) == ALL
+
+
 def _run_query_and_check(spark, sf_dir, name):
-    """The query runs AND cleans up after itself: once the result is
-    consumed and released (the standardized cacheutil ownership
+    """The query runs, its build jobs and plan shape match its
+    plans/ledger.json row, AND it cleans up after itself: once the result
+    is consumed and released (the standardized cacheutil ownership
     contract), no persisted RDDs may remain — operator-internal caches,
     checkpoint blocks, and eager-path results are all accounted for."""
     from bdt_spark.operators.cacheutil import release
+    from bdt_spark.planaudit import ledger_row
+    from tools.plan_ledger import read_ledger
 
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    spec = plans.get_query(name)
-    df = spec.fn(spark, sf_dir)
+    df, live = ledger_row(spark, name, sf_dir)
     assert df.columns, name
-    assert df.count() >= 0
     release(df)
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert after - before == set(), (
         f"{name} left persisted RDDs behind: {sorted(after - before)}"
+    )
+    want = read_ledger().get(name, {})
+    drift = [
+        (name, col, want.get(col, 0), live.get(col, 0))
+        for col in sorted(set(want) | set(live))
+        if want.get(col, 0) != live.get(col, 0)
+    ]
+    assert not drift, (
+        "plan shape differs from plans/ledger.json; (query, column, "
+        f"ledger, live): {drift}. If the change is intended, regenerate "
+        f"the ledger: python tools/plan_ledger.py {sf_dir}"
     )
 
 
