@@ -8,7 +8,6 @@ Public API:
 - operators.compare.compare_files  positional + distributed compare
 - operators.meta.read_parquet_meta parquet footer stats
 - operators.asof.asof_join    point-in-time join
-- operators.bucketing         bucketed/salted join helpers
 - functions.datetime.date_bin event-time binning shim
 - plans                       the declared, DuckDB-oracled query inventory
 - streaming                   Structured Streaming mirrors

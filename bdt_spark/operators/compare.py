@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession, Window, functions as F
 
 from bdt_spark.sources.io import (
+    _arrow_table_from_bytes,
     _concat_parts,
     _local_path,
     _part_files,
@@ -64,8 +65,8 @@ def _read_arrow_table(path: str, header: bool = True):
     """The whole file as one Arrow table. A directory reads its Spark
     part files in partition order: csv and json parts as one
     concatenated byte stream (each later csv part's header dropped), so
-    they parse exactly as the single-file output would; orc parts one by
-    one. Parquet reads a directory natively."""
+    they parse exactly as the single-file output would; orc and arrow
+    parts one by one. Parquet reads a directory natively."""
     import os
 
     import pyarrow as pa
@@ -79,6 +80,12 @@ def _read_arrow_table(path: str, header: bool = True):
     paths = _part_files(path) if os.path.isdir(path) else [path]
     if not paths:
         raise ValueError(f"no part files under {path!r}")
+    if fmt == "arrow":
+        tables = []
+        for p in paths:
+            with open(p, "rb") as f:
+                tables.append(_arrow_table_from_bytes(f.read()))
+        return pa.concat_tables(tables)
     if fmt in ("csv", "json") and len(paths) > 1:
         buf = io.BytesIO()
         _concat_parts(paths, buf, header=fmt == "csv" and header)
@@ -166,8 +173,6 @@ def _compare_positional(
     path1: str, path2: str, *, epsilon: float | None, header: bool
 ) -> ComparisonResult:
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     t1 = _read_arrow_table(path1, header)
     t2 = _read_arrow_table(path2, header)
@@ -193,31 +198,12 @@ def _compare_positional(
     for ci in range(t1.num_columns):
         c1 = t1.column(ci).combine_chunks()
         c2 = t2.column(ci).combine_chunks()
-        if pa.types.is_floating(c1.type) and pa.types.is_floating(c2.type):
-            a = c1.to_numpy(zero_copy_only=False).astype("float64")
-            b = c2.to_numpy(zero_copy_only=False).astype("float64")
-            nan_both = np.isnan(a) & np.isnan(b)
-            if epsilon is not None:
-                bad = ~(nan_both | (np.abs(a - b) < epsilon))
-            else:
-                bad = ~(nan_both | (a == b))
-            # nulls: arrow nulls became NaN above only for float; use validity
-            n1 = np.asarray(c1.is_null())
-            n2 = np.asarray(c2.is_null())
-            bad = (bad & ~(n1 & n2)) | (n1 != n2)
-        else:
-            if c1.type != c2.type:
-                try:
-                    c1, c2 = _cast_to_common_type(c1, c2)
-                except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                    return ComparisonResult(
-                        False,
-                        f"Column {ci} types are incomparable: "
-                        f"{c1.type} != {c2.type}",
-                    )
-            neq = pc.fill_null(pc.not_equal(c1, c2), False)
-            null_diff = pc.xor(c1.is_null(), c2.is_null())
-            bad = np.asarray(pc.or_(neq, null_diff))
+        bad = _mismatch(c1, c2, epsilon)
+        if bad is None:
+            return ComparisonResult(
+                False,
+                f"Column {ci} types are incomparable: {c1.type} != {c2.type}",
+            )
         idx = np.flatnonzero(bad)
         if idx.size:
             ri = int(idx[0])
@@ -227,6 +213,61 @@ def _compare_positional(
     if first is not None:
         return _diff(*first)
     return ComparisonResult(True, "Files match")
+
+
+def _mismatch(c1, c2, epsilon: float | None):
+    """Boolean numpy mask of the rows where Arrow arrays `c1` and `c2`
+    differ, or None when their types are incomparable. A null differs
+    from any value. Floats are equal when both NaN, or within `epsilon`
+    when one is given. Lists differ in a row whose null flags or lengths
+    differ; the rest compare their flattened values by these same rules,
+    and a differing value marks the row it sits in."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n1 = np.asarray(c1.is_null())
+    n2 = np.asarray(c2.is_null())
+    if pa.types.is_floating(c1.type) and pa.types.is_floating(c2.type):
+        a = c1.to_numpy(zero_copy_only=False).astype("float64")
+        b = c2.to_numpy(zero_copy_only=False).astype("float64")
+        nan_both = np.isnan(a) & np.isnan(b)
+        if epsilon is not None:
+            bad = ~(nan_both | (np.abs(a - b) < epsilon))
+        else:
+            bad = ~(nan_both | (a == b))
+        # arrow nulls became NaN above: decide them by validity
+        return (bad & ~(n1 & n2)) | (n1 != n2)
+    if _is_list(c1.type) and _is_list(c2.type):
+        l1 = np.asarray(pc.fill_null(pc.list_value_length(c1), 0))
+        l2 = np.asarray(pc.fill_null(pc.list_value_length(c2), 0))
+        bad = (n1 != n2) | (l1 != l2)
+        rows = np.flatnonzero(~n1 & ~n2 & (l1 == l2))
+        s1, s2 = c1.take(rows), c2.take(rows)
+        flat = _mismatch(pc.list_flatten(s1), pc.list_flatten(s2), epsilon)
+        if flat is None:
+            return None
+        parents = np.asarray(pc.list_parent_indices(s1))
+        bad[rows[parents[flat]]] = True
+        return bad
+    if c1.type != c2.type:
+        try:
+            c1, c2 = _cast_to_common_type(c1, c2)
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+            return None
+    # casts keep nulls (an unparsable value raises), so n1/n2 still hold
+    neq = pc.fill_null(pc.not_equal(c1, c2), False)
+    return np.asarray(neq) | (n1 != n2)
+
+
+def _is_list(t) -> bool:
+    import pyarrow as pa
+
+    return (
+        pa.types.is_list(t)
+        or pa.types.is_large_list(t)
+        or pa.types.is_fixed_size_list(t)
+    )
 
 
 def _cast_to_common_type(c1, c2):

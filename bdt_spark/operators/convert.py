@@ -48,6 +48,14 @@ from bdt_spark.sources.io import (
 )
 
 
+# Text timestamps keep all six fraction digits: Spark's default csv/json
+# formats write milliseconds, which drops a timestamp's microseconds.
+_TEXT_TIMESTAMP_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
+
+
 class UnsupportedOutputError(ValueError):
     """Mirrors the reference's unsupported-output error (convert.rs:37-39)."""
 
@@ -287,6 +295,8 @@ def write_file(
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
+    if out_fmt in ("csv", "json"):
+        writer = writer.options(**_TEXT_TIMESTAMP_OPTIONS)
     if out_fmt == "csv":
         writer.option("header", "true").csv(target_dir)
     elif out_fmt == "json":

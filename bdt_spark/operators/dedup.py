@@ -653,10 +653,10 @@ def embedding_neardup_pairs(
 # NEW batch against the EXISTING corpus without rescanning corpus text.
 # The carried state is one row per corpus doc — its k-lane minhash
 # signature plus band keys — hive-partitioned by ingest batch
-# (`state_dir/batch=<id>/`), the same replay-idempotent layout as
-# operators/sketchstate.py: re-running a batch overwrites exactly its own
-# partition (dynamic partition overwrite), so at-least-once upstream
-# delivery converges to exactly-once state.
+# (`state_dir/batch=<id>/`), a replay-idempotent layout: re-running a
+# batch overwrites exactly its own partition (dynamic partition
+# overwrite), so at-least-once upstream delivery converges to
+# exactly-once state.
 #
 # Scale shape: state update is MAP-ONLY over the batch (shingle ->
 # signature -> band keys, no shuffle — the write's partitionBy(batch) is
@@ -1021,12 +1021,11 @@ def _compact_dedup_state(spark, state_dir: str, id_col: str) -> str:
     NEXT compaction). Corollary of the same ordering contract: only
     compact batches whose upstream delivery is COMMITTED — a replay
     of the newest folded batch after compaction would sort below the
-    compacted id and lose. Same crash-safe ordering as
-    sketchstate.compact_sketch_state: the compacted partition is
-    written FIRST, old partitions deleted after (a racing reader sees
-    old or old+compacted — per-id duplicates across those are identical
-    rows, so probe results are unchanged), and a failed delete raises
-    instead of leaving double rows."""
+    compacted id and lose. Crash-safe ordering: the compacted
+    partition is written FIRST, old partitions deleted after (a racing
+    reader sees old or old+compacted — per-id duplicates across those
+    are identical rows, so probe results are unchanged), and a failed
+    delete raises instead of leaving double rows."""
     from pyspark.sql import Window
 
     state = _read_state_untyped(spark, state_dir)

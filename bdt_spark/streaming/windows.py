@@ -213,8 +213,7 @@ def _snapshot_ids(
     mapreduce.fileoutputcommitter.marksuccessfuljobs=false) a committed
     snapshot never shows a marker, so part-file existence stands in —
     weaker (a partial write with some part files passes), the documented
-    trade-off of running without markers; same fallback as
-    upsert_stream_to_parquet's init-path existence check."""
+    trade-off of running without markers."""
     import glob
     import os
 
@@ -360,25 +359,6 @@ def running_max_stream_to_parquet(
     )
 
 
-def run_to_memory(
-    spark: SparkSession,
-    streaming_df: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-) -> DataFrame:
-    """Drain a stream into an in-memory table with availableNow (test/dev
-    harness; production uses a real sink + checkpointLocation)."""
-    q = (
-        streaming_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
 def purchases_after_errors_stream(
     events: DataFrame, within: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -413,155 +393,6 @@ def purchases_after_errors_stream(
             f" AND p_ts <= e_ts + INTERVAL {within}"
         ),
     ).select("error_id", "purchase_id", "e_user", "e_ts", "p_ts")
-
-
-def upsert_stream_to_parquet(
-    events: DataFrame,
-    base_path: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    watermark: str = "1 hour",
-    versioned: bool = False,
-) -> "StreamingQuery":  # noqa: F821
-    """Streaming keyed writeback: each micro-batch MERGEs into a parquet
-    table via operators/upsert.py — the incremental-pipeline pattern of
-    maintaining a latest-state table from an event stream.
-
-    Per batch: reduce the batch to one row per key (last event wins by
-    ts), then resolve against the CURRENT stored row for each touched
-    key — the stored rows for the batch's keys are unioned in and the
-    ts-desc row_number reduction re-applied — before merge_upsert
-    replaces/inserts those keys. Without that second reduction, 'last
-    event wins' would only hold WITHIN a micro-batch: an out-of-order
-    event arriving in a later batch would regress its key to an older
-    ts. Replaying a batch after failure re-applies the same keyed rows —
-    idempotent, so the sink stays exactly-once given the checkpoint.
-    `versioned=True` routes the same merge through the manifest-commit
-    table (operators/versioned.py) — the object-store-safe path, with
-    snapshot-consistent concurrent readers; the touched-keys read stays
-    a broadcast semi-join against the (small) batch key set either way."""
-    from pyspark.sql import Window
-
-    from bdt_spark.operators.upsert import merge_upsert
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-
-        def latest_per_key(df: DataFrame) -> DataFrame:
-            return (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-
-        latest = latest_per_key(batch_df)
-        spark = batch_df.sparkSession
-
-        def resolve_against(base_df: DataFrame) -> DataFrame:
-            # cross-batch out-of-order guard: the stored row for each
-            # touched key competes in the same ts-desc reduction, so an
-            # older event in a later batch cannot overwrite newer state
-            stored = base_df.join(
-                F.broadcast(latest.select(*key_cols).distinct()),
-                key_cols,
-                "left_semi",
-            )
-            return latest_per_key(stored.unionByName(latest))
-
-        if versioned:
-            from bdt_spark.operators.versioned import (
-                current_version,
-                merge_upsert_versioned,
-                read_versioned,
-                write_versioned,
-            )
-
-            if current_version(spark, base_path) is None:
-                write_versioned(spark, base_path, latest)
-            else:
-                merge_upsert_versioned(
-                    spark,
-                    base_path,
-                    resolve_against(read_versioned(spark, base_path)),
-                    key_cols,
-                )
-            return
-        import glob
-        import os
-
-        # The _SUCCESS marker, not the directory, decides "table exists":
-        # a crash mid-way through the initial write leaves a partial dir
-        # with no marker, and a bare exists-check would route the replayed
-        # batch into the merge path, which then fails forever reading the
-        # truncated table. mode("overwrite") makes the init retryable.
-        # When the Hadoop conf disables markers
-        # (mapreduce.fileoutputcommitter.marksuccessfuljobs=false), an
-        # existing committed table never shows one — relying on the marker
-        # alone would take the overwrite-init path EVERY batch and silently
-        # discard all previously merged state. Fall back to part-file
-        # existence in that case (weaker: a partial initial write is then
-        # indistinguishable from a committed one, the documented trade-off
-        # of running without markers).
-        markers_on = (
-            spark.sparkContext._jsc.hadoopConfiguration()
-            .get("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-            .lower()
-            != "false"
-        )
-        exists = os.path.exists(os.path.join(base_path, "_SUCCESS")) or (
-            not markers_on and bool(glob.glob(os.path.join(base_path, "part-*")))
-        )
-        if not exists:
-            latest.write.mode("overwrite").parquet(base_path)
-        else:
-            resolved = resolve_against(spark.read.parquet(base_path))
-            merge_upsert(spark, base_path, resolved, key_cols)
-
-    return (
-        events.withWatermark("ts", watermark)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def dedup_stream_to_parquet(
-    events: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "1 hour",
-) -> "StreamingQuery":  # noqa: F821
-    """Streaming exact-dedup writeback via foreachBatch — the
-    exactly-once sink pattern.
-
-    dropDuplicatesWithinWatermark bounds the dedup state (event_ids older
-    than the watermark are evicted — at 100 TB/day unbounded dedup state
-    is a guaranteed OOM); foreachBatch writes each micro-batch to a
-    batch_id-named subdirectory, so a replayed batch after failure
-    OVERWRITES its own output instead of duplicating it (idempotent =
-    exactly-once end-to-end given the checkpoint).
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 MG_OUTPUT_SCHEMA = StructType(

@@ -13,10 +13,10 @@ from bdt_spark.sources.avro import (
     AvroError,
     avro_schema_to_spark,
     decode_file,
-    spark_schema_to_avro,
     write_avro,
 )
 from bdt_spark.sources.io import read_file
+from harness import spark_schema_to_avro
 
 
 def _write(tmp_path, name, rows, avro_schema, codec="deflate"):

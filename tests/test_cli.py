@@ -474,7 +474,9 @@ def test_query_order_by_csv_output_matches_coalesced_write(
     try:
         rc = main(["query", "--tables", SF_DIR, "--sql", sql, "--output", out])
         ref = str(tmp_path / "ref")
-        spark.sql(sql).coalesce(1).write.option("header", "true").csv(ref)
+        spark.sql(sql).coalesce(1).write.options(
+            **conv._TEXT_TIMESTAMP_OPTIONS
+        ).option("header", "true").csv(ref)
     finally:
         spark.conf.set(key, old)
     assert rc == 0

@@ -772,3 +772,55 @@ def test_positional_compare_parses_json_times(spark, sf_dir, tmp_path):
         assert not res.ok
         assert res.message.startswith("Row 7 does not match."), res.message
         assert res.message.endswith("at position 4"), res.message
+
+
+def test_positional_compare_list_columns(sf_dir, tmp_path):
+    """List columns compare by per-row null flag and length, then by
+    their flattened values: sf0.01 embeddings match themselves, and one
+    perturbed vector element reports its row and column."""
+    src = os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "embeddings.parquet"
+    )
+    if not os.path.exists(src):
+        pytest.skip("needs the sf0.01 fixtures")
+    res = compare_files(None, src, src)
+    assert res.ok and res.method == "positional", res.message
+
+    t = pq.read_table(src)
+    vecs = t.column("embedding").to_pylist()
+    vecs[37][5] += 0.5
+    bad = str(tmp_path / "embeddings_bad.parquet")
+    pq.write_table(
+        t.set_column(1, "embedding", pa.array(vecs, t.schema.field(1).type)),
+        bad,
+    )
+    for a, b in ((src, bad), (bad, src)):
+        res = compare_files(None, a, b)
+        assert res.message.startswith("Row 37 does not match."), res.message
+        assert res.message.endswith("at position 1"), res.message
+    # within epsilon the perturbed element matches
+    assert compare_files(None, src, bad, epsilon=1.0).ok
+
+
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "right,row",
+    [
+        ([[[1.0]], None, [], [[2.0, _NAN]]], None),
+        ([[[1.0]], [], [], [[2.0, _NAN]]], 1),  # null vs empty
+        ([[[1.0]], None, [[3.0]], [[2.0, _NAN]]], 2),  # length
+        ([[[1.0]], None, [], [[2.0, 0.0]]], 3),  # nested value
+    ],
+)
+def test_positional_compare_nested_list_shapes(files, right, row):
+    typ = pa.list_(pa.list_(pa.float64()))
+    left = [[[1.0]], None, [], [[2.0, _NAN]]]
+    a = files("a.parquet", {"v": pa.array(left, typ)})
+    b = files("b.parquet", {"v": pa.array(right, typ)})
+    res = compare_files(None, a, b)
+    if row is None:
+        assert res.ok, res.message
+    else:
+        assert res.message.startswith(f"Row {row} does not match."), res.message

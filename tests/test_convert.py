@@ -6,7 +6,11 @@ import os
 import pytest
 
 from bdt_spark.operators.compare import compare_files
-from bdt_spark.operators.convert import UnsupportedOutputError, convert
+from bdt_spark.operators.convert import (
+    _TEXT_TIMESTAMP_OPTIONS,
+    UnsupportedOutputError,
+    convert,
+)
 from bdt_spark.sources.io import read_file
 
 
@@ -99,7 +103,8 @@ def test_convert_avro_to_parquet(spark, tmp_path):
     (utils.rs:62-64; avro OUT is rejected, convert.rs:37-39). Prove the
     same: an .avro input converts to parquet losslessly."""
     from bdt_spark.operators.convert import convert
-    from bdt_spark.sources.avro import spark_schema_to_avro, write_avro
+    from bdt_spark.sources.avro import write_avro
+    from harness import spark_schema_to_avro
 
     src = spark.range(10).selectExpr(
         "id", "CAST(id * 1.5 AS DOUBLE) AS x", "CAST(id AS STRING) AS s"
@@ -279,7 +284,7 @@ def test_arrow_convert_roundtrip_plain_path_and_file_uri(
     """A `file:` URI names the same local file as its plain path: convert
     to .arrow (directory and single file) writes at that path, the
     output reads back, and a session-less positional compare of the
-    round trip against the source passes. Any other scheme is refused
+    output and of its round trip against the source passes. Any other scheme is refused
     on these driver-local paths before a job runs."""
     from bdt_spark.sources.io import read_file
 
@@ -295,8 +300,9 @@ def test_arrow_convert_roundtrip_plain_path_and_file_uri(
         assert (os.path.isfile if single else os.path.isdir)(out)
         assert sorted(read_file(spark, p(out)).collect()) == src_rows
         convert(spark, p(out), p(back), single_file=True)
-        res = compare_files(None, p(src), p(back))
-        assert res.ok and res.method == "positional", res
+        for copy in (out, back):
+            res = compare_files(None, p(src), p(copy))
+            assert res.ok and res.method == "positional", res
 
     with pytest.raises(ValueError, match="file: URI"):
         convert(spark, p(src), "s3a://bucket/supplier.arrow")
@@ -312,7 +318,7 @@ def _coalesced_bytes(df, fmt: str, out: str) -> bytes:
     single-file csv/json output must equal."""
     import glob
 
-    w = df.coalesce(1).write.mode("overwrite")
+    w = df.coalesce(1).write.mode("overwrite").options(**_TEXT_TIMESTAMP_OPTIONS)
     if fmt == "csv":
         w.option("header", "true").csv(out)
     else:
@@ -355,7 +361,15 @@ def test_single_file_line_formats_match_coalesce_bytes(
     src = str(tmp_path / "orders3.parquet")
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(3).write.parquet(src)
     out = str(tmp_path / f"orders.{fmt}")
-    convert(spark, src, out, single_file=True)
+    # one read partition per file at any core count: an open cost above
+    # the largest split keeps each file in a partition of its own
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    try:
+        convert(spark, src, out, single_file=True)
+    finally:
+        spark.conf.set(key, old)
     assert parts_seen == {"parts": [3], "concats": 1}
     want = _coalesced_bytes(read_file(spark, src), fmt, str(tmp_path / "ref"))
     with open(out, "rb") as f:
@@ -474,3 +488,29 @@ def test_zstd_text_output_is_written_plain(
         return contents
 
     assert write("z", True) == write("plain", False)
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+def test_text_copies_keep_microseconds(spark, sf_dir, tmp_path, fmt):
+    """Single-file csv and json copies of sf0.01 events hold ts with all
+    six fraction digits (07.179575, not 07.179), so a positional compare
+    against the source says they match."""
+    import pyarrow.parquet as pq
+
+    src = os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "events.parquet"
+    )
+    if not os.path.exists(src):
+        pytest.skip("needs the sf0.01 fixtures")
+    if fmt == "csv":
+        # props holds quoted json text, which Spark's csv writer escapes
+        # with a backslash and pyarrow's csv reader does not unescape
+        src_csv = str(tmp_path / "events_noprops.parquet")
+        pq.write_table(pq.read_table(src).drop(["props"]), src_csv)
+        src = src_csv
+    out = str(tmp_path / f"events.{fmt}")
+    convert(spark, src, out, single_file=True)
+    with open(out) as f:
+        assert "00:00:07.179575" in f.read()
+    res = compare_files(None, src, out, method="positional")
+    assert res.ok, res.message

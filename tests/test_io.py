@@ -59,7 +59,8 @@ def test_avro_dispatch_reads_real_file(spark, tmp_path):
     """.avro dispatch is functional without the spark-avro jar: the pure-
     Python spec decoder (sources/avro.py) reads container files through
     binaryFile + mapInPandas. Full coverage lives in tests/test_avro.py."""
-    from bdt_spark.sources.avro import spark_schema_to_avro, write_avro
+    from bdt_spark.sources.avro import write_avro
+    from harness import spark_schema_to_avro
 
     df = spark.range(4).selectExpr("id", "CAST(id % 2 = 0 AS BOOLEAN) AS even")
     rows = [r.asDict() for r in df.collect()]

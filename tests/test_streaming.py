@@ -11,7 +11,7 @@ from bdt_spark.streaming import (
     stateful_running_max,
     tumbling_counts_stream,
 )
-from bdt_spark.streaming.windows import run_to_memory
+from harness import run_to_memory
 
 
 @pytest.fixture(scope="module")
@@ -133,36 +133,12 @@ def test_stream_stream_interval_join(spark, sf_dir, events_stream):
     assert got.count() == expected
 
 
-def test_foreachbatch_dedup_sink_exactly_once(spark, sf_dir, tmp_path):
-    # duplicate the stream source rows, run the dedup writeback, and the
-    # parquet output must contain each event_id exactly once
-    from bdt_spark.streaming.windows import (
-        dedup_stream_to_parquet,
-        read_events_stream,
-    )
-
-    out = str(tmp_path / "deduped")
-    ckpt = str(tmp_path / "ckpt")
-    events = read_events_stream(spark, sf_dir)
-    doubled = events.union(events)  # two file triggers -> duplicate ids
-    q = dedup_stream_to_parquet(doubled, out, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.option("basePath", out).parquet(out)
-    n_ids = got.select("event_id").distinct().count()
-    assert got.count() == n_ids  # no duplicates survived
-    from bdt_spark.sources.io import read_file
-
-    assert n_ids == read_file(spark, f"{sf_dir}/events.parquet").count()
-
-
 def test_stream_static_dim_join(spark, sf_dir, events_stream):
     # stream enriched against a static dim (broadcast at micro-batch
     # planning — the streaming analog of the broadcast dim join)
     from pyspark.sql import functions as F
 
     from bdt_spark.sources.io import read_file
-    from bdt_spark.streaming.windows import run_to_memory
 
     dim = spark.createDataFrame(
         [("click", "engagement"), ("purchase", "revenue"),
@@ -183,178 +159,6 @@ def test_stream_static_dim_join(spark, sf_dir, events_stream):
     ).groupBy("category").agg(F.count("*").alias("n"))
     want = {r.category: r.n for r in batch.collect()}
     assert got == want
-
-
-def test_foreachbatch_checkpoint_restart_is_noop(spark, sf_dir, tmp_path):
-    # restarting against the same checkpoint with no new source data must
-    # not rewrite or duplicate anything (exactly-once across restarts)
-    from bdt_spark.streaming.windows import (
-        dedup_stream_to_parquet,
-        read_events_stream,
-    )
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q1 = dedup_stream_to_parquet(read_events_stream(spark, sf_dir), out, ckpt)
-    q1.awaitTermination(120)
-    n1 = spark.read.option("basePath", out).parquet(out).count()
-
-    q2 = dedup_stream_to_parquet(read_events_stream(spark, sf_dir), out, ckpt)
-    q2.awaitTermination(120)
-    n2 = spark.read.option("basePath", out).parquet(out).count()
-    assert n1 == n2  # nothing reprocessed, nothing duplicated
-
-
-def test_streaming_upsert_writeback(spark, sf_dir, tmp_path):
-    """foreachBatch + merge_upsert: the stream maintains a latest-state
-    table; the result equals the batch 'last event per user' query."""
-    from bdt_spark.streaming.windows import upsert_stream_to_parquet
-
-    base = str(tmp_path / "user_state")
-    ckpt = str(tmp_path / "ckpt")
-    stream = read_events_stream(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "value"
-    )
-    q = upsert_stream_to_parquet(stream, base, ckpt, ["user_id"])
-    q.awaitTermination()
-
-    # replay with a fresh checkpoint: the table now EXISTS, so the batch
-    # goes through merge_upsert — and the keyed merge is idempotent
-    q2 = upsert_stream_to_parquet(
-        stream, base, str(tmp_path / "ckpt2"), ["user_id"]
-    )
-    q2.awaitTermination()
-
-    got = {r.user_id: r.event_id for r in spark.read.parquet(base).collect()}
-
-    from pyspark.sql import Window
-
-    batch = _batch_events(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "value"
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    expected = {
-        r.user_id: r.event_id
-        for r in batch.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    assert got == expected
-
-
-def test_streaming_upsert_cross_batch_out_of_order(spark, tmp_path):
-    """An out-of-order event arriving in a LATER micro-batch must not
-    regress its key to older state (regression: merge_upsert replaced
-    keys unconditionally, so 'last by ts' only held within one batch)."""
-    from bdt_spark.streaming.windows import upsert_stream_to_parquet
-
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = tmp_path / "src"
-    src.mkdir()
-    base = str(tmp_path / "state")
-    schema = "event_id string, ts timestamp, user_id string, value double"
-
-    def write_file(name, rows):
-        # plain single parquet FILES: the file stream source lists files,
-        # not Spark-written output directories
-        tbl = pa.table(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pa.array(
-                    [dt.datetime.fromisoformat(r[1]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-                "user_id": [r[2] for r in rows],
-                "value": pa.array([r[3] for r in rows], pa.float64()),
-            }
-        )
-        pq.write_table(tbl, str(src / name))
-
-    def run(ckpt_name):
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = upsert_stream_to_parquet(
-            stream, base, str(tmp_path / ckpt_name), ["user_id"]
-        )
-        q.awaitTermination(120)
-
-    write_file(
-        "f1.parquet",
-        [("e2", "2026-01-02 10:00:00", "u1", 2.0),
-         ("e3", "2026-01-02 11:00:00", "u2", 3.0)],
-    )
-    run("ckpt")
-
-    # later batch delivers an OLDER event for u1 and a newer one for u2
-    write_file(
-        "f2.parquet",
-        [("e1", "2026-01-01 09:00:00", "u1", 1.0),
-         ("e4", "2026-01-03 09:00:00", "u2", 4.0)],
-    )
-    run("ckpt")  # same checkpoint: only f2 is a new batch
-
-    got = {r.user_id: r.event_id for r in spark.read.parquet(base).collect()}
-    assert got == {"u1": "e2", "u2": "e4"}
-
-
-def test_streaming_upsert_versioned_manifest_table(spark, tmp_path):
-    """versioned=True: the stream maintains a manifest-commit table —
-    one committed version per non-empty micro-batch, same out-of-order
-    semantics, snapshot-consistent reads."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from bdt_spark.operators.versioned import read_versioned, table_versions
-    from bdt_spark.streaming.windows import upsert_stream_to_parquet
-
-    src = tmp_path / "src"
-    src.mkdir()
-    root = str(tmp_path / "vstate")
-    schema = "event_id string, ts timestamp, user_id string, value double"
-
-    def write_file(name, rows):
-        tbl = pa.table(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pa.array(
-                    [dt.datetime.fromisoformat(r[1]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-                "user_id": [r[2] for r in rows],
-                "value": pa.array([r[3] for r in rows], pa.float64()),
-            }
-        )
-        pq.write_table(tbl, str(src / name))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = upsert_stream_to_parquet(
-            stream, root, str(tmp_path / "ckpt"), ["user_id"], versioned=True
-        )
-        q.awaitTermination(120)
-
-    write_file("f1.parquet", [("e2", "2026-01-02 10:00:00", "u1", 2.0)])
-    run()
-    assert table_versions(spark, root) == [1]
-
-    write_file(
-        "f2.parquet",
-        [("e1", "2026-01-01 09:00:00", "u1", 1.0),   # older: must lose
-         ("e4", "2026-01-03 09:00:00", "u2", 4.0)],
-    )
-    run()
-    assert table_versions(spark, root) == [1, 2]
-    got = {r.user_id: r.event_id for r in read_versioned(spark, root).collect()}
-    assert got == {"u1": "e2", "u2": "e4"}
-    # the v1 snapshot is still intact for in-flight readers
-    assert read_versioned(spark, root, version=1).count() == 1
 
 
 def test_running_max_foreachbatch_matches_batch(spark, sf_dir, events_stream, tmp_path):
