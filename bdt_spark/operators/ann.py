@@ -125,8 +125,8 @@ def _driver_roundtrip(spark: SparkSession, df: DataFrame) -> DataFrame:
     Recreated as a JVM LocalRelation (operators/localrel.py): the
     centroid frame is re-scanned by every Lloyd-iteration assignment
     join and every probe, and createDataFrame's pickled-RDD scan pays a
-    Python-worker round each time (guide §4.1); doubles render via
-    shortest-repr so the bit-exactness guarantee is unchanged."""
+    Python-worker round each time (guide §4.1); Arrow carries the doubles
+    bit-exactly, so the guarantee is unchanged."""
     from bdt_spark.operators.localrel import local_relation
 
     rows = df.collect()

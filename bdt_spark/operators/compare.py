@@ -221,7 +221,9 @@ def _mismatch(c1, c2, epsilon: float | None):
     from any value. Floats are equal when both NaN, or within `epsilon`
     when one is given. Lists differ in a row whose null flags or lengths
     differ; the rest compare their flattened values by these same rules,
-    and a differing value marks the row it sits in."""
+    and a differing value marks the row it sits in. A map is the list of
+    its key/item entries; a struct differs in a row whose null flags or
+    any field (by position, by these same rules) differ."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -250,6 +252,19 @@ def _mismatch(c1, c2, epsilon: float | None):
         parents = np.asarray(pc.list_parent_indices(s1))
         bad[rows[parents[flat]]] = True
         return bad
+    if pa.types.is_map(c1.type) and pa.types.is_map(c2.type):
+        return _mismatch(_entries(c1), _entries(c2), epsilon)
+    if pa.types.is_struct(c1.type) and pa.types.is_struct(c2.type):
+        if c1.type.num_fields != c2.type.num_fields:
+            return None
+        bad = n1 != n2
+        # flatten() folds each row's null flag into its fields
+        for f1, f2 in zip(c1.flatten(), c2.flatten()):
+            field_bad = _mismatch(f1, f2, epsilon)
+            if field_bad is None:
+                return None
+            bad |= field_bad
+        return bad
     if c1.type != c2.type:
         try:
             c1, c2 = _cast_to_common_type(c1, c2)
@@ -268,6 +283,14 @@ def _is_list(t) -> bool:
         or pa.types.is_large_list(t)
         or pa.types.is_fixed_size_list(t)
     )
+
+
+def _entries(m):
+    """A map array as the list array of its key/item entry structs."""
+    import pyarrow as pa
+
+    t = m.type
+    return m.cast(pa.list_(pa.struct([t.key_field, t.item_field])))
 
 
 def _cast_to_common_type(c1, c2):
@@ -774,15 +797,6 @@ def _compare_hash(
 ) -> ComparisonResult:
     df1 = read_file(spark, path1, header=header)
     df2 = read_file(spark, path2, header=header)
-    # Spark's JSON reader orders inferred columns by name, so a JSON copy
-    # lists its source's columns in another order; both modes below
-    # align the sides by position, so realign the JSON side by name.
-    if sorted(df1.columns) == sorted(df2.columns):
-        json1, json2 = file_format(path1) == "json", file_format(path2) == "json"
-        if json2 and not json1:
-            df2 = df2.select(*df1.columns)
-        elif json1 and not json2:
-            df1 = df1.select(*df2.columns)
 
     if len(df1.columns) != len(df2.columns):
         # reference reports count mismatch before row-length mismatch

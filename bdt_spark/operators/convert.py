@@ -298,7 +298,8 @@ def write_file(
     if out_fmt in ("csv", "json"):
         writer = writer.options(**_TEXT_TIMESTAMP_OPTIONS)
     if out_fmt == "csv":
-        writer.option("header", "true").csv(target_dir)
+        # RFC 4180: a quote inside a value is doubled, not backslash-escaped
+        writer.option("header", "true").option("escape", '"').csv(target_dir)
     elif out_fmt == "json":
         writer.json(target_dir)
     elif out_fmt == "orc":

@@ -180,11 +180,11 @@ def _heavy_arm(df, order, running, index_col):
               StructField("__go_off_cnt", LongType(), False)]
     for out in running:
         fields.append(StructField(f"__go_off_{out}", sum_types[out], True))
-    # LocalRelation, not createDataFrame: the offsets frame is scanned by
-    # every downstream job (broadcast build per pass, chained passes embed
-    # earlier passes' joins), and a pickled-RDD scan pays a Python-worker
-    # round each time — measured ~1.3 s of blocked executor time per
-    # 32-task scan at sf0.1 (operators/localrel.py; guide §4.1).
+    # A JVM LocalRelation, not a pickled Python RDD: the offsets frame is
+    # scanned by every downstream job (broadcast build per pass, chained
+    # passes embed earlier passes' joins), and a pickled-RDD scan pays a
+    # Python-worker round each time — measured ~1.3 s of blocked executor
+    # time per 32-task scan at sf0.1 (operators/localrel.py; guide §4.1).
     from bdt_spark.operators.localrel import local_relation
 
     off_df = local_relation(

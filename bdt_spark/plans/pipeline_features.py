@@ -480,9 +480,9 @@ def agg_frequent_items_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = summaries.collect()
     from bdt_spark.operators.localrel import local_relation
 
-    # LocalRelation, not createDataFrame: the tail SQL reads this view
-    # from several CTE branches — a pickled-RDD scan would pay a
-    # Python-worker round per branch per action (guide §4.1).
+    # A JVM LocalRelation, not a pickled Python RDD: the tail SQL reads
+    # this view from several CTE branches — a pickled-RDD scan would pay
+    # a Python-worker round per branch per action (guide §4.1).
     local_relation(
         spark, rows, "shard bigint, item bigint, est bigint"
     ).createOrReplaceTempView("mg_summaries")

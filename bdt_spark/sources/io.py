@@ -8,8 +8,8 @@ Reimplements the reference's native pieces (reference citations for parity):
 
 Differences (documented improvements, not regressions):
 - The reference leaves Arrow `unimplemented!()` (utils.rs:59-61); we read
-  .arrow/.feather via pyarrow on the driver and parallelize via
-  createDataFrame (small files only — documented).
+  .arrow/.feather distributed, one task per file, over `binaryFile` +
+  mapInPandas (the schema from the first file's footer on the driver).
 - ORC added (native Spark reader; not in the reference).
 - Avro reads natively via the spark-avro jar when present; without it
   (this environment) a self-contained pure-Python container-file decoder
@@ -383,6 +383,45 @@ def _footer_schema(spark: SparkSession, footer):
     )
 
 
+def _first_json_keys(spark: SparkSession, path: str) -> list[str]:
+    """The top-level keys, in file order, of the first record of the json
+    file `path` (of a directory, its first `part-*` file in partition
+    order), read on the driver through the Hadoop FS, as the parquet
+    footer is. Empty for a glob, a path the JVM cannot open, or a first
+    line that is not a JSON object."""
+    import json
+
+    from py4j.protocol import Py4JJavaError
+
+    if any(c in _GLOB_CHARS for c in path):
+        return []
+    jvm = spark._jvm
+    try:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        jp = jvm.org.apache.hadoop.fs.Path(path)
+        fs = jp.getFileSystem(conf)
+        if fs.getFileStatus(jp).isDirectory():
+            parts = [st.getPath() for st in fs.listStatus(jp)
+                     if st.getPath().getName().startswith("part-")]
+            if not parts:
+                return []
+            jp = min(parts, key=lambda q: _part_order(q.getName()))
+        stream = fs.open(jp)
+        try:
+            line = jvm.java.io.BufferedReader(
+                jvm.java.io.InputStreamReader(stream, "UTF-8")
+            ).readLine()
+        finally:
+            stream.close()
+    except Py4JJavaError:
+        return []
+    try:
+        record = json.loads(line or "")
+    except ValueError:
+        return []
+    return list(record) if isinstance(record, dict) else []
+
+
 def read_file(
     spark: SparkSession,
     path: str,
@@ -401,7 +440,9 @@ def read_file(
     footer is read once on the driver and Spark's own converter turns it
     into the schema the reader is given, the schema Spark's inference
     job would have returned. A parquet directory or glob keeps Spark's
-    inference (one job), as do the text formats.
+    inference (one job), as do the text formats. Json columns keep the
+    key order of the file's first record (Spark's inference sorts them
+    by name); keys that record lacks follow in Spark's order.
     """
     fmt = fmt or file_format(path)
     if fmt == "arrow":
@@ -410,8 +451,10 @@ def read_file(
         return _read_avro(spark, path)
     reader = spark.read
     if fmt == "csv":
-        reader = reader.option("header", str(header).lower()).option(
-            "inferSchema", str(infer_schema).lower()
+        reader = reader.options(
+            header=str(header).lower(),
+            inferSchema=str(infer_schema).lower(),
+            escape='"',  # RFC 4180 doubled quotes, as convert writes them
         )
         if path.lower().endswith(".tsv"):
             reader = reader.option("sep", "\t")
@@ -435,7 +478,19 @@ def read_file(
         for col in nano_cols:
             df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))
         return _ntz_to_ltz(df)
-    return _ntz_to_ltz(reader.format(fmt).load(path))
+    df = reader.format(fmt).load(path)
+    if fmt == "json":
+        from pyspark.sql.types import StructType
+
+        rank = {k: i for i, k in enumerate(_first_json_keys(spark, path))}
+        # stable: keys the first record lacks keep Spark's order, last
+        ordered = sorted(
+            df.schema.fields, key=lambda f: rank.get(f.name, len(rank))
+        )
+        if [f.name for f in ordered] != df.columns:
+            # the inferred schema, reordered: the same scan, no new job
+            df = reader.schema(StructType(ordered)).format(fmt).load(path)
+    return _ntz_to_ltz(df)
 
 
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:
@@ -572,8 +627,13 @@ def _part_files(directory: str) -> list[str]:
     order, the row order a coalesce(1) write of the same plan has (its
     `.crc` and `_SUCCESS` files are not parts)."""
     names = [n for n in os.listdir(directory) if n.startswith("part-")]
-    names.sort(key=lambda n: (int(re.match(r"part-(\d+)", n).group(1)), n))
+    names.sort(key=_part_order)
     return [os.path.join(directory, n) for n in names]
+
+
+def _part_order(name: str):
+    """Sort key of a `part-*` file name: its partition number."""
+    return int(re.match(r"part-(\d+)", name).group(1)), name
 
 
 def _concat_parts(parts: list[str], dst, *, header: bool) -> None:

@@ -476,7 +476,7 @@ def test_query_order_by_csv_output_matches_coalesced_write(
         ref = str(tmp_path / "ref")
         spark.sql(sql).coalesce(1).write.options(
             **conv._TEXT_TIMESTAMP_OPTIONS
-        ).option("header", "true").csv(ref)
+        ).option("header", "true").option("escape", '"').csv(ref)
     finally:
         spark.conf.set(key, old)
     assert rc == 0

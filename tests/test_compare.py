@@ -824,3 +824,34 @@ def test_positional_compare_nested_list_shapes(files, right, row):
         assert res.ok, res.message
     else:
         assert res.message.startswith(f"Row {row} does not match."), res.message
+
+
+_STRUCT = pa.struct([("a", pa.int64()), ("b", pa.string())])
+_MAP = pa.map_(pa.string(), pa.int64())
+
+
+@pytest.mark.parametrize(
+    "typ,left,right,row",
+    [
+        (_STRUCT, [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}],
+         [{"a": 1, "b": "x"}, {"a": 2, "b": "z"}], 1),
+        (_STRUCT, [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}],
+         [None, {"a": 2, "b": "y"}], 0),
+        (_MAP, [[("k", 1)], [("k", 2), ("j", 3)]],
+         [[("k", 1)], [("k", 2), ("j", 4)]], 1),
+        (_MAP, [[("k", 1)], [("k", 2), ("j", 3)]],
+         [[("k", 1)], [("k", 2)]], 1),
+    ],
+    ids=["struct_value", "struct_null", "map_item", "map_length"],
+)
+def test_positional_compare_struct_and_map_columns(files, typ, left, right, row):
+    """Struct columns compare field by field and map columns as lists of
+    key/item entries: a file matches itself, and one changed value
+    reports its row."""
+    a = files("a.parquet", {"id": [0, 1], "v": pa.array(left, typ)})
+    b = files("b.parquet", {"id": [0, 1], "v": pa.array(right, typ)})
+    assert compare_files(None, a, a).message == "Files match"
+    for x, y in ((a, b), (b, a)):
+        res = compare_files(None, x, y)
+        assert res.message.startswith(f"Row {row} does not match."), res.message
+        assert res.message.endswith("at position 1"), res.message

@@ -320,7 +320,7 @@ def _coalesced_bytes(df, fmt: str, out: str) -> bytes:
 
     w = df.coalesce(1).write.mode("overwrite").options(**_TEXT_TIMESTAMP_OPTIONS)
     if fmt == "csv":
-        w.option("header", "true").csv(out)
+        w.option("header", "true").option("escape", '"').csv(out)
     else:
         w.json(out)
     [part] = glob.glob(os.path.join(out, "part-*"))
@@ -405,7 +405,7 @@ def test_single_file_csv_quoted_column_names(spark, tmp_path, parts_seen):
     assert got == _coalesced_bytes(
         read_file(spark, src), "csv", str(tmp_path / "ref")
     )
-    back = spark.read.option("header", "true").csv(out)
+    back = read_file(spark, out)
     assert back.columns == ["a,b", 'c"d']
     assert back.count() == 30
 
@@ -493,24 +493,36 @@ def test_zstd_text_output_is_written_plain(
 @pytest.mark.parametrize("fmt", ["csv", "json"])
 def test_text_copies_keep_microseconds(spark, sf_dir, tmp_path, fmt):
     """Single-file csv and json copies of sf0.01 events hold ts with all
-    six fraction digits (07.179575, not 07.179), so a positional compare
-    against the source says they match."""
-    import pyarrow.parquet as pq
-
+    six fraction digits (07.179575, not 07.179), and csv doubles the
+    quotes inside props' json text (RFC 4180, not a backslash escape),
+    so a positional compare against the source says they match."""
     src = os.path.join(
         os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "events.parquet"
     )
     if not os.path.exists(src):
         pytest.skip("needs the sf0.01 fixtures")
-    if fmt == "csv":
-        # props holds quoted json text, which Spark's csv writer escapes
-        # with a backslash and pyarrow's csv reader does not unescape
-        src_csv = str(tmp_path / "events_noprops.parquet")
-        pq.write_table(pq.read_table(src).drop(["props"]), src_csv)
-        src = src_csv
     out = str(tmp_path / f"events.{fmt}")
     convert(spark, src, out, single_file=True)
     with open(out) as f:
-        assert "00:00:07.179575" in f.read()
+        text = f.read()
+    assert "00:00:07.179575" in text
+    if fmt == "csv":
+        assert '"{""k"": 69}"' in text
     res = compare_files(None, src, out, method="positional")
     assert res.ok, res.message
+
+
+def test_json_hop_keeps_column_order(spark, sf_dir, tmp_path):
+    """parquet -> json -> parquet gives back the source's column order
+    (json columns follow the first record's keys), so the copy compares
+    positionally as sf0.01 nation."""
+    src = os.path.join(
+        os.path.dirname(sf_dir.rstrip("/")), "sf0.01", "nation.parquet"
+    )
+    if not os.path.exists(src):
+        pytest.skip("needs the sf0.01 fixtures")
+    js, back = str(tmp_path / "nation.json"), str(tmp_path / "nation.parquet")
+    convert(spark, src, js, single_file=True)
+    convert(spark, js, back, single_file=True)
+    res = compare_files(None, src, back, method="positional")
+    assert res.message == "Files match"

@@ -144,3 +144,31 @@ def test_escaped_string_literals_guard(spark):
         )
     finally:
         spark.conf.set(key, "false")
+
+
+# --- one Arrow path: the types and sizes the old VALUES renderer sent to
+# the pickled-RDD createDataFrame fallback ---
+
+
+def test_arrow_path_covers_every_type_and_size(spark):
+    src = spark.sql(
+        "SELECT id, named_struct('a', id, 'b', CAST(id AS STRING)) AS s "
+        "FROM range(3)"
+    )
+    cases = [
+        ([(1, {"a": 1, "b": None}), (2, {})], "id int, m map<string,int>"),
+        (src.collect(), src.schema),
+        (
+            [(datetime.datetime(2021, 3, 4, 5, 6, 7, 123456),), (None,)],
+            "ts timestamp_ntz",
+        ),
+        # its VALUES rendering is ~9 MB, over the old 4 MB cap
+        ([(i, i / 7) for i in range(200_000)], "i int, d double"),
+    ]
+    for rows, schema in cases:
+        a = local_relation(spark, rows, schema)
+        b = spark.createDataFrame(rows, schema)
+        assert a.schema == b.schema
+        assert a.collect() == b.collect()
+        assert "LocalTableScan" in _plan(a)
+        assert "ExistingRDD" not in _plan(a)
