@@ -797,6 +797,16 @@ def _compare_hash(
 ) -> ComparisonResult:
     df1 = read_file(spark, path1, header=header)
     df2 = read_file(spark, path2, header=header)
+    # A JSON copy need not list its source's columns in order: Spark's
+    # writer drops null fields, so a key missing from the first record
+    # reads last. Both modes below align the sides by position, so
+    # realign the JSON side by name.
+    if sorted(df1.columns) == sorted(df2.columns):
+        json1, json2 = file_format(path1) == "json", file_format(path2) == "json"
+        if json2 and not json1:
+            df2 = df2.select(*df1.columns)
+        elif json1 and not json2:
+            df1 = df1.select(*df2.columns)
 
     if len(df1.columns) != len(df2.columns):
         # reference reports count mismatch before row-length mismatch

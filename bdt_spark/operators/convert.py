@@ -40,6 +40,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from bdt_spark.sources.io import (
+    _CSV_OPTIONS,
     _concat_parts,
     _local_path,
     _part_files,
@@ -298,8 +299,7 @@ def write_file(
     if out_fmt in ("csv", "json"):
         writer = writer.options(**_TEXT_TIMESTAMP_OPTIONS)
     if out_fmt == "csv":
-        # RFC 4180: a quote inside a value is doubled, not backslash-escaped
-        writer.option("header", "true").option("escape", '"').csv(target_dir)
+        writer.option("header", "true").options(**_CSV_OPTIONS).csv(target_dir)
     elif out_fmt == "json":
         writer.json(target_dir)
     elif out_fmt == "orc":

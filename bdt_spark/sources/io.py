@@ -323,6 +323,9 @@ def _nano_timestamp_columns(path: str) -> list[str]:
     ]
 
 
+# The csv dialect bdt reads and writes: RFC 4180, where a quote inside a
+# value is doubled, not backslash-escaped (Spark's default).
+_CSV_OPTIONS = {"escape": '"'}
 # Characters that make Spark expand a path as a glob (SparkHadoopUtil.isGlobPath)
 _GLOB_CHARS = frozenset("{}[]*?\\")
 # A top-level INT64 TIMESTAMP(NANOS) field in parquet-mr's text form of a
@@ -334,30 +337,44 @@ _NANOS_FIELD = re.compile(
 )
 
 
+def _driver_status(spark: SparkSession, path: str):
+    """`(conf, status)` of the Hadoop path `path` names, under the
+    session's Hadoop conf, for a driver-side read that spares Spark a
+    job. None for a glob, whose file choice stays Spark's, and for a
+    path the JVM cannot stat (missing, an unknown scheme): Spark's own
+    read then reports it exactly as it would have."""
+    from py4j.protocol import Py4JJavaError
+
+    if any(c in _GLOB_CHARS for c in path):
+        return None
+    try:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        jp = spark._jvm.org.apache.hadoop.fs.Path(path)
+        return conf, jp.getFileSystem(conf).getFileStatus(jp)
+    except Py4JJavaError:
+        return None
+
+
 def _single_parquet_footer(spark: SparkSession, path: str):
     """The footer of the one parquet file `path` names, read on the
     driver with the calls Spark's schema-inference task makes for it
     (ParquetFileFormat.readParquetFootersInParallel), as a JVM `Footer`.
 
-    None for a directory or a glob, whose file choice and partition
-    discovery stay Spark's, and for a path the JVM cannot open as a
-    parquet file (missing, corrupt, an unknown scheme): Spark's own
-    inference then reports it exactly as it would have."""
+    None for a directory, whose partition discovery stays Spark's, for
+    a path _driver_status rejects, and for a file the JVM cannot read as
+    parquet (corrupt): Spark's own inference then reports it."""
     from py4j.protocol import Py4JJavaError
 
-    if any(c in _GLOB_CHARS for c in path):
+    found = _driver_status(spark, path)
+    if found is None or not found[1].isFile():
         return None
+    conf, status = found
     jvm = spark._jvm
     reader = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
     skip_row_groups = (
         jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     )
     try:
-        conf = spark._jsparkSession.sessionState().newHadoopConf()
-        jp = jvm.org.apache.hadoop.fs.Path(path)
-        status = jp.getFileSystem(conf).getFileStatus(jp)
-        if not status.isFile():
-            return None
         md = reader.readFooter(
             jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
             skip_row_groups,
@@ -383,40 +400,53 @@ def _footer_schema(spark: SparkSession, footer):
     )
 
 
+# Bytes of a json file's head searched for its first line, read in
+# chunks: a file that is one long line (a top-level array) is never
+# pulled onto the driver.
+_JSON_HEAD_BYTES = 1 << 20
+_JSON_HEAD_CHUNK = 1 << 16
+
+
 def _first_json_keys(spark: SparkSession, path: str) -> list[str]:
     """The top-level keys, in file order, of the first record of the json
     file `path` (of a directory, its first `part-*` file in partition
     order), read on the driver through the Hadoop FS, as the parquet
-    footer is. Empty for a glob, a path the JVM cannot open, or a first
-    line that is not a JSON object."""
+    footer is. Empty for a path _driver_status rejects, a first line
+    longer than _JSON_HEAD_BYTES, or one that is not a JSON object."""
     import json
 
     from py4j.protocol import Py4JJavaError
 
-    if any(c in _GLOB_CHARS for c in path):
+    found = _driver_status(spark, path)
+    if found is None:
         return []
-    jvm = spark._jvm
+    conf, status = found
+    jp = status.getPath()
     try:
-        conf = spark._jsparkSession.sessionState().newHadoopConf()
-        jp = jvm.org.apache.hadoop.fs.Path(path)
         fs = jp.getFileSystem(conf)
-        if fs.getFileStatus(jp).isDirectory():
+        if status.isDirectory():
             parts = [st.getPath() for st in fs.listStatus(jp)
                      if st.getPath().getName().startswith("part-")]
             if not parts:
                 return []
             jp = min(parts, key=lambda q: _part_order(q.getName()))
         stream = fs.open(jp)
+        head = b""
         try:
-            line = jvm.java.io.BufferedReader(
-                jvm.java.io.InputStreamReader(stream, "UTF-8")
-            ).readLine()
+            while b"\n" not in head and len(head) < _JSON_HEAD_BYTES:
+                chunk = bytes(stream.readNBytes(_JSON_HEAD_CHUNK))
+                if not chunk:
+                    break
+                head += chunk
         finally:
             stream.close()
     except Py4JJavaError:
         return []
+    line, newline, _ = head.partition(b"\n")
+    if not newline and len(head) >= _JSON_HEAD_BYTES:
+        return []
     try:
-        record = json.loads(line or "")
+        record = json.loads(line)
     except ValueError:
         return []
     return list(record) if isinstance(record, dict) else []
@@ -454,7 +484,7 @@ def read_file(
         reader = reader.options(
             header=str(header).lower(),
             inferSchema=str(infer_schema).lower(),
-            escape='"',  # RFC 4180 doubled quotes, as convert writes them
+            **_CSV_OPTIONS,
         )
         if path.lower().endswith(".tsv"):
             reader = reader.option("sep", "\t")

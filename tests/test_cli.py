@@ -453,6 +453,7 @@ def test_query_order_by_csv_output_matches_coalesced_write(
 
     from bdt_spark import cli
     from bdt_spark.operators import convert as conv
+    from bdt_spark.sources.io import _CSV_OPTIONS
 
     # the test session as is: get_spark would reset the AQE conf below
     monkeypatch.setattr(cli, "get_spark", lambda name: spark)
@@ -476,7 +477,7 @@ def test_query_order_by_csv_output_matches_coalesced_write(
         ref = str(tmp_path / "ref")
         spark.sql(sql).coalesce(1).write.options(
             **conv._TEXT_TIMESTAMP_OPTIONS
-        ).option("header", "true").option("escape", '"').csv(ref)
+        ).option("header", "true").options(**_CSV_OPTIONS).csv(ref)
     finally:
         spark.conf.set(key, old)
     assert rc == 0

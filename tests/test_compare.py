@@ -699,15 +699,32 @@ def _json_copies(spark, sf_dir, tmp_path, table="supplier"):
 
 
 def test_hash_and_epsilon_compare_json_copies(spark, sf_dir, tmp_path):
-    """Spark's JSON reader orders inferred columns by name; hash and
-    epsilon compare realign the JSON side by name, so a JSON copy (single
-    file or part directory) matches its source and a perturbed one does
-    not, in either argument order."""
+    """A JSON copy's columns need not come in its source's order: Spark's
+    writer drops null fields, so a column null in the first row reads
+    last. Hash and epsilon compare realign the JSON side by name, so a
+    JSON copy (single file or part directory) matches its source and a
+    perturbed one does not, in either argument order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bdt_spark.operators.convert import convert
+    from bdt_spark.sources.io import read_file
+
     src, one, many, bad = _json_copies(spark, sf_dir, tmp_path)
-    assert spark.read.json(one).columns != spark.read.parquet(src).columns
+    # a source whose row 0 has a null in a middle column
+    t = pq.read_table(src)
+    i = t.column_names.index("s_name")
+    name = t.column(i).to_pylist()
+    t = t.set_column(i, "s_name", pa.array([None] + name[1:], t.column(i).type))
+    holed = str(tmp_path / "holed.parquet")
+    pq.write_table(t, holed)
+    holed_copy = str(tmp_path / "holed.json")
+    convert(spark, holed, holed_copy, single_file=True)
+    assert read_file(spark, holed_copy).columns[-1] == "s_name"
+    pairs = [(src, one), (src, many), (holed, holed_copy)]
     for eps in (None, 1e-6):
-        for copy in (one, many):
-            for a, b in ((src, copy), (copy, src)):
+        for source, copy in pairs:
+            for a, b in ((source, copy), (copy, source)):
                 res = compare_files(spark, a, b, method="hash", epsilon=eps)
                 assert res.ok, (a, b, eps, res.message)
         res = compare_files(spark, src, bad, method="hash", epsilon=eps)

@@ -11,7 +11,7 @@ from bdt_spark.operators.convert import (
     UnsupportedOutputError,
     convert,
 )
-from bdt_spark.sources.io import read_file
+from bdt_spark.sources.io import _CSV_OPTIONS, read_file
 
 
 def test_parquet_to_csv_single_file(spark, sf_dir, tmp_path):
@@ -320,7 +320,7 @@ def _coalesced_bytes(df, fmt: str, out: str) -> bytes:
 
     w = df.coalesce(1).write.mode("overwrite").options(**_TEXT_TIMESTAMP_OPTIONS)
     if fmt == "csv":
-        w.option("header", "true").option("escape", '"').csv(out)
+        w.option("header", "true").options(**_CSV_OPTIONS).csv(out)
     else:
         w.json(out)
     [part] = glob.glob(os.path.join(out, "part-*"))

@@ -672,6 +672,27 @@ def test_json_columns_keep_first_record_key_order(spark, tmp_path, capsys):
     )
 
 
+def test_json_key_order_reads_a_bounded_head(spark, tmp_path, monkeypatch):
+    """The first record's keys come from a bounded head of the file: a
+    one-line top-level JSON array, and a first line longer than the
+    bound, keep Spark's by-name order."""
+    from bdt_spark.sources import io as bio
+
+    arr = str(tmp_path / "arr.json")
+    with open(arr, "w") as f:
+        f.write('[{"z": 1, "a": 2}, {"z": 3, "a": 4}]')
+    assert read_file(spark, arr).columns == spark.read.json(arr).columns
+    assert bio._first_json_keys(spark, arr) == []
+    p = str(tmp_path / "long.json")
+    with open(p, "w") as f:
+        f.write('{"z": 1, "a": "%s"}\n{"z": 2, "a": "y"}\n' % ("x" * 100))
+    assert read_file(spark, p).columns == ["z", "a"]
+    monkeypatch.setattr(bio, "_JSON_HEAD_CHUNK", 16)
+    monkeypatch.setattr(bio, "_JSON_HEAD_BYTES", 64)
+    assert bio._first_json_keys(spark, p) == []
+    assert read_file(spark, p).columns == ["a", "z"]
+
+
 def test_csv_reads_rfc4180_doubled_quotes(spark, tmp_path):
     """A quote inside a quoted csv value is written doubled (RFC 4180),
     and read_file reads such a value whole."""
