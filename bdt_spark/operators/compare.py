@@ -110,6 +110,23 @@ def _read_arrow_table(path: str, header: bool = True):
     raise ValueError(f"unsupported format for compare: {path!r}")
 
 
+def _realign_json_side(path1, side1, path2, side2):
+    """The two sides with a JSON side's columns in the other side's order.
+    A JSON copy need not list its source's columns in order: Spark's
+    writer drops null fields, so a key missing from the first record
+    reads last. Both compare modes pair columns by position, so a JSON
+    side holding the same names is realigned by name. A side is an Arrow
+    table or a DataFrame: both have `schema.names` and `select` a list."""
+    cols1, cols2 = side1.schema.names, side2.schema.names
+    if cols1 != cols2 and sorted(cols1) == sorted(cols2):
+        json1, json2 = file_format(path1) == "json", file_format(path2) == "json"
+        if json2 and not json1:
+            return side1, side2.select(cols1)
+        if json1 and not json2:
+            return side1.select(cols2), side2
+    return side1, side2
+
+
 # `method="auto"` switchover: combined on-disk bytes above which the
 # driver-side positional mode is replaced by the distributed hash mode.
 # The positional mode materializes BOTH files into driver memory
@@ -174,8 +191,10 @@ def _compare_positional(
 ) -> ComparisonResult:
     import numpy as np
 
-    t1 = _read_arrow_table(path1, header)
-    t2 = _read_arrow_table(path2, header)
+    t1, t2 = _realign_json_side(
+        path1, _read_arrow_table(path1, header), path2,
+        _read_arrow_table(path2, header),
+    )
 
     # count mismatch first (compare.rs:22-24, 66-67)
     if t1.num_rows != t2.num_rows:
@@ -795,18 +814,10 @@ def _compare_hash(
     epsilon: float | None,
     header: bool,
 ) -> ComparisonResult:
-    df1 = read_file(spark, path1, header=header)
-    df2 = read_file(spark, path2, header=header)
-    # A JSON copy need not list its source's columns in order: Spark's
-    # writer drops null fields, so a key missing from the first record
-    # reads last. Both modes below align the sides by position, so
-    # realign the JSON side by name.
-    if sorted(df1.columns) == sorted(df2.columns):
-        json1, json2 = file_format(path1) == "json", file_format(path2) == "json"
-        if json2 and not json1:
-            df2 = df2.select(*df1.columns)
-        elif json1 and not json2:
-            df1 = df1.select(*df2.columns)
+    df1, df2 = _realign_json_side(
+        path1, read_file(spark, path1, header=header), path2,
+        read_file(spark, path2, header=header),
+    )
 
     if len(df1.columns) != len(df2.columns):
         # reference reports count mismatch before row-length mismatch

@@ -53,6 +53,11 @@ _DEFAULTS = {
     # disables row-group min/max skipping on every timestamp-clustered
     # table (caught by tests/test_layout.py).
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Python workers fork from bdt_spark.pydaemon, which stops a reused
+    # worker re-reading Spark's zip archives before every task (~0.2 s of
+    # CPU a task on CPython < 3.13). spark.python.worker.module cannot
+    # carry it: pyspark.daemon accepts only worker modules named pyspark*.
+    "spark.python.daemon.module": "bdt_spark.pydaemon",
 }
 
 
@@ -61,7 +66,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or reuse) the session. Mirrors reference main.rs:110-112."""
+    """Create (or reuse) the session. Mirrors reference main.rs:110-112.
+
+    Its Python workers fork from `bdt_spark.pydaemon`, so executors'
+    Python must be able to import `bdt_spark` for every Python task, as
+    the pandas-UDF operators already required."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # local[N,4]: a task-retry budget. Every real cluster defaults to
     # spark.task.maxFailures=4; plain local[N]'s 1-failure budget is the

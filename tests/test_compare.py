@@ -731,6 +731,30 @@ def test_hash_and_epsilon_compare_json_copies(spark, sf_dir, tmp_path):
         assert not res.ok, res.message
 
 
+def test_positional_compare_realigns_json_side_by_name(files, tmp_path):
+    """Positional compare (and `auto` at this size) realigns a JSON side by
+    name as hash compare does: a parquet source whose row 0 is null in a
+    middle column matches its JSON copy, which lacks that key on its first
+    line, in either argument order; a changed value still differs."""
+    src = files("src.parquet", {"a": [1, 2], "b": [None, "x"], "c": ["u", "v"]})
+
+    def write_json(name, lines):
+        p = str(tmp_path / name)
+        with open(p, "w") as f:
+            f.write("\n".join(lines) + "\n")
+        return p
+
+    copy = write_json("copy.json", ['{"a":1,"c":"u"}', '{"a":2,"b":"x","c":"v"}'])
+    bad = write_json("bad.json", ['{"a":1,"c":"u"}', '{"a":2,"b":"y","c":"v"}'])
+    for method in ("positional", "auto"):
+        for a, b in ((src, copy), (copy, src)):
+            res = compare_files(None, a, b, method=method)
+            assert res.ok and res.method == "positional", (a, b, res.message)
+        for a, b in ((src, bad), (bad, src)):
+            res = compare_files(None, a, b, method=method)
+            assert not res.ok and "Row 1" in res.message, res.message
+
+
 @pytest.mark.parametrize("fmt", ["csv", "json"])
 def test_positional_compare_reads_part_file_directory(
     spark, sf_dir, tmp_path, fmt
