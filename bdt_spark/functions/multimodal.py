@@ -13,8 +13,7 @@ the one that holds at 100 TB:
   from-scratch public-spec codecs in `functions/imagecodec.py` give the
   image (BMP/PPM/PNG/baseline JPEG) and audio (RIFF/WAVE PCM) paths REAL
   decodes — see decode_real_features / decode_wav_features. Only the
-  library-backed generic path (`decode_image`) stays stubbed: it raises
-  NotImplementedError unless `fake=True`, which substitutes a
+  library-backed generic path stays a stub: `decode_image` returns a
   deterministic, content-derived fake decode (the `stub`-tagged queries).
 
 Batch-shape notes: `mapInPandas` receives an iterator of pandas DataFrames
@@ -65,21 +64,16 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def decode_image(payload: bytes, *, fake: bool = False) -> dict:
-    """Decode one image payload to features.
+def decode_image(payload: bytes) -> dict:
+    """Fake-decode one image payload to features.
 
-    Library-backed codec decode (JPEG/...) requires libraries this
-    container does not ship — that path stays stubbed. `fake=True`
-    produces a deterministic content-derived result so the distributed
-    plumbing can be tested end-to-end and oracled in SQL. For REAL decode
-    see decode_real_features / imagecodec.py (pure-Python BMP + PPM + PNG
+    A stand-in for a library-backed codec decode (JPEG/...), whose
+    libraries this environment does not ship: a deterministic
+    content-derived result, so the distributed plumbing can be tested
+    end-to-end and oracled in SQL. For REAL decode see
+    decode_real_features / imagecodec.py (pure-Python BMP + PPM + PNG
     codecs, used by multimodal_decode_bmp / multimodal_decode_png).
     """
-    if not fake:
-        raise NotImplementedError(
-            "library-backed image codecs unavailable in this environment; "
-            "use fake=True, or decode_real_features for BMP/PPM/PNG payloads"
-        )
     n = len(payload)
     return {
         "n_bytes": n,
@@ -282,8 +276,8 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def decode_features(df: DataFrame, *, fake: bool = True) -> DataFrame:
-    """Distributed decode via Arrow-batched mapInPandas."""
+def decode_features(df: DataFrame) -> DataFrame:
+    """Distributed (fake) decode via Arrow-batched mapInPandas."""
 
     cols = [f.name for f in DECODE_SCHEMA.fields]
     _null_feats = {c: None for c in cols if c != "doc_id"}
@@ -295,7 +289,7 @@ def decode_features(df: DataFrame, *, fake: bool = True) -> DataFrame:
             # columns= keeps empty Arrow batches typed (a bare
             # pd.DataFrame([]) has no columns and the projection KeyErrors)
             feats = [
-                _null_feats if p is None else decode_image(p, fake=fake)
+                _null_feats if p is None else decode_image(p)
                 for p in pdf["payload"]
             ]
             out = pd.DataFrame(feats, columns=[c for c in cols if c != "doc_id"])

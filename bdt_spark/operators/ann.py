@@ -56,6 +56,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from bdt_spark.sources.io import hadoop_exists, hadoop_fs
+
 
 def _dist2(vec_col: str, cen_col: str) -> str:
     # squared L2 as a sequential fold — codegen-friendly, no UDF
@@ -299,7 +301,7 @@ def ivf_probe(
     if "nrm" not in pruned.columns:  # pre-norm legacy layout
         pruned = pruned.withColumn("nrm", F.expr(_norm("embedding")))
     inc_path = f"{path}/increments"
-    if _hadoop_exists(spark, inc_path):
+    if hadoop_exists(spark, inc_path):
         # live increments (update_ivf_index batches not yet compacted):
         # union them into the candidate set under the SAME cluster_id
         # pruning — one directory level deeper, still a partition
@@ -369,9 +371,6 @@ def ivf_probe(
         .orderBy("q_id", "rk")
     )
     return transfer_ownership(result, probes)
-
-# canonical home: sources/io.hadoop_exists (streaming sinks import it too)
-from bdt_spark.sources.io import hadoop_exists as _hadoop_exists  # noqa: E402
 
 
 def _centroid_argmin_expr(cent_rows) -> str:
@@ -484,15 +483,13 @@ def compact_ivf_index(spark: SparkSession, path: str) -> int:
     latest-wins already resolves; a failed rename/delete raises rather
     than leaving a half-swapped index. Do not run concurrently with
     update_ivf_index."""
-    from bdt_spark.operators.dedup import _read_state_untyped
+    from bdt_spark.operators.dedup import _read_state_untyped, _state_batch_ids
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     inc_path = f"{path}/increments"
-    if not fs.exists(jvm_path(inc_path)):
+    n_batches = len(_state_batch_ids(spark, inc_path))
+    if not n_batches:
         return 0
     inc = _read_state_untyped(spark, inc_path)
-    n_batches = inc.select("batch").distinct().count()
     base = spark.read.parquet(f"{path}/assignments")
     if "nrm" not in base.columns:  # legacy pre-norm layout: upgrade
         base = base.withColumn("nrm", F.expr(_norm("embedding")))
@@ -516,26 +513,28 @@ def compact_ivf_index(spark: SparkSession, path: str) -> int:
         )
         .select("vec_id", "_s.embedding", "_s.nrm", "_s.cluster_id")
     )
-    tmp = f"{path}/assignments__compact"
-    old = f"{path}/assignments__old"
     (
         merged.repartition("cluster_id")
         .write.mode("overwrite")
         .partitionBy("cluster_id")
-        .parquet(tmp)
+        .parquet(f"{path}/assignments__compact")
     )
-    if fs.exists(jvm_path(old)):
-        fs.delete(jvm_path(old), True)
-    if not fs.rename(jvm_path(f"{path}/assignments"), jvm_path(old)):
+    fs, root = hadoop_fs(spark, path)
+    base_p = root.suffix("/assignments")
+    tmp_p = root.suffix("/assignments__compact")
+    old_p = root.suffix("/assignments__old")
+    if fs.exists(old_p):
+        fs.delete(old_p, True)
+    if not fs.rename(base_p, old_p):
         raise IOError(f"compact_ivf_index: failed to move old base at {path}")
-    if not fs.rename(jvm_path(tmp), jvm_path(f"{path}/assignments")):
+    if not fs.rename(tmp_p, base_p):
         raise IOError(f"compact_ivf_index: failed to swap new base at {path}")
-    for p in (old, inc_path):
-        if fs.exists(jvm_path(p)) and not fs.delete(jvm_path(p), True):
+    for p in (old_p, root.suffix("/increments")):
+        if fs.exists(p) and not fs.delete(p, True):
             raise IOError(
-                f"compact_ivf_index: failed to delete {p}; duplicate "
-                "rows would remain (probe latest-wins still resolves "
-                "them, but the layout is not compact)"
+                f"compact_ivf_index: failed to delete {p.toString()}; "
+                "duplicate rows would remain (probe latest-wins still "
+                "resolves them, but the layout is not compact)"
             )
     return n_batches
 

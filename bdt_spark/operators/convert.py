@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from bdt_spark.sources.io import (
     _CSV_OPTIONS,
     _concat_parts,
+    _file_path,
     _local_path,
     _part_files,
     file_format,
@@ -82,14 +83,17 @@ def _write_arrow(df, output_path: str, *, single_file: bool, zstd: bool) -> None
     APIs, while the post-job `.tmp` sweep and `_SUCCESS` marker run on the
     DRIVER — so this writer requires `output_path` to be a POSIX path on a
     filesystem shared by driver and executors (local mode, NFS, a FUSE
-    mount). That is weaker than a FileOutputCommitter, which commits
-    through the Hadoop FS on any URI: on an object store (`s3://...`) this
-    writer does not work at all (convert refuses any scheme but `file:`
-    with a ValueError before a job runs), and even on a
-    shared POSIX FS the driver-side sweep could in principle race one
-    zombie speculative attempt still holding its `.tmp` (harmless to
-    committed output — the sweep only ever deletes `.tmp` files — but the
-    zombie's late rename could resurrect a duplicate part after the sweep).
+    mount). A `file:` URI becomes that path by sources/io's path rule
+    (`_local_path`): the literal path Hadoop's `Path` reads in it, so
+    read_file of the same URI opens the files written here. That is
+    weaker than a FileOutputCommitter, which commits through the Hadoop
+    FS on any URI: on an object store (`s3://...`) this writer does not
+    work at all (convert refuses any scheme but `file:` with a
+    ValueError before a job runs), and even on a shared POSIX FS the
+    driver-side sweep could in principle race one zombie speculative
+    attempt still holding its `.tmp` (harmless to committed output — the
+    sweep only ever deletes `.tmp` files — but the zombie's late rename
+    could resurrect a duplicate part after the sweep).
     Spark kills speculative twins at job end, so the window is theoretical;
     for cluster object-store deployments, route Arrow output through a
     Hadoop-committer-backed format instead."""
@@ -267,6 +271,8 @@ def write_file(
     if out_fmt == "arrow" or single_file:
         # written (arrow) or moved (single_file) with driver-local file APIs
         output_path = _local_path(output_path)
+    else:
+        _file_path(output_path)  # a malformed file: URI raises before any job
 
     if out_fmt == "arrow":
         # Arrow IPC write — an EXTENSION: the reference panics on Arrow in

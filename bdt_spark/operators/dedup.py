@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from bdt_spark.sources.io import hadoop_fs
+
 # Default minhash geometry. 8 hashes / 4 bands (2 rows per band) gives an
 # S-curve centered near t=0.5 and is what the DuckDB oracle models;
 # production near-dup at corpus scale typically runs 64-128 hashes — pass
@@ -709,19 +711,23 @@ def update_minhash_state(
 
 
 def _state_batch_ids(spark, state_dir: str) -> list[str]:
-    """Batch-partition ids of an incremental dedup state dir — a
-    driver-side Hadoop FS listing (no Spark job), the same handle
-    _compact_dedup_state uses for deletes."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    p = jvm_path(state_dir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Batch-partition ids of a batch-partitioned state dir (incremental
+    dedup state, IVF increments) — the one partition listing: a
+    driver-side Hadoop FS listing, no Spark job. The ids are the `batch`
+    values a read shows: Spark escapes a value into its directory name
+    (ExternalCatalogUtils.escapePathName), and its own unescapePathName
+    undoes that here."""
+    fs, p = hadoop_fs(spark, state_dir)
     if not fs.exists(p):
         return []
+    catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog
     out = []
     for st in fs.listStatus(p):
         name = st.getPath().getName()
         if name.startswith("batch="):
-            out.append(name[len("batch="):])
+            out.append(
+                catalog.ExternalCatalogUtils.unescapePathName(name[len("batch="):])
+            )
     return out
 
 
@@ -1028,17 +1034,15 @@ def _compact_dedup_state(spark, state_dir: str, id_col: str) -> str:
     delete raises instead of leaving double rows."""
     from pyspark.sql import Window
 
-    state = _read_state_untyped(spark, state_dir)
-    old_batches = [
-        r["batch"] for r in state.select("batch").distinct().collect()
-    ]
+    old_batches = _state_batch_ids(spark, state_dir)
     if len(old_batches) <= 1:
         # already compact — re-writing would only grow the id
         return old_batches[0] if old_batches else ""
     compact_id = f"{max(old_batches)}.compact"
     w = Window.partitionBy(id_col).orderBy(F.col("batch").desc())
     merged = (
-        state.withColumn("_rk", F.row_number().over(w))
+        _read_state_untyped(spark, state_dir)
+        .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .drop("_rk", "batch")
     )
@@ -1049,10 +1053,12 @@ def _compact_dedup_state(spark, state_dir: str, id_col: str) -> str:
         .partitionBy("batch")
         .parquet(state_dir)
     )
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(state_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = hadoop_fs(spark, state_dir)
+    catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog
     for b in old_batches:
-        part = jvm_path(f"{state_dir}/batch={b}")
+        part = root.suffix(
+            "/" + catalog.ExternalCatalogUtils.getPartitionPathString("batch", b)
+        )
         if fs.exists(part) and not fs.delete(part, True):
             raise IOError(
                 f"compact_dedup_state: failed to delete old partition "

@@ -25,6 +25,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from bdt_spark.sources.io import _local_path
+
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
     """Recursively rewrite a DataType with every nested nullability flag
@@ -123,30 +125,12 @@ def merge_upsert(
     Limitation: this swap uses local-filesystem os.rename/shutil.rmtree,
     so `base_path` must be a local path — hdfs://, s3://, or other URI
     schemes are rejected here (on such stores, route the same merge
-    through dynamic partition overwrite or a table format instead).
-    `file:` / `file://` URIs are accepted and normalized to their POSIX
-    path so the os-level swap operates on the real directory.
+    through operators/versioned.py's manifest commit or dynamic
+    partition overwrite instead). A `file:` URI is accepted and mapped
+    to its local path by sources/io's path rule (`_local_path`), so the
+    os-level swap operates on the directory Spark reads.
     """
-    if base_path.startswith("file:"):
-        from urllib.parse import urlparse
-
-        u = urlparse(base_path)
-        if u.netloc not in ("", "localhost"):
-            raise ValueError(
-                f"merge_upsert only supports the local host; got {base_path!r}"
-            )
-        if not u.path:
-            # 'file://' / 'file://localhost' would otherwise default to '/'
-            # and fail later with a baffling read error at filesystem root
-            raise ValueError(f"malformed file URI (empty path): {base_path!r}")
-        base_path = u.path
-    elif "://" in base_path:
-        raise ValueError(
-            "merge_upsert's rewrite-and-swap only supports local filesystem "
-            f"paths; got {base_path!r}. On distributed stores use "
-            "operators/versioned.py (manifest-commit protocol) or dynamic "
-            "partition overwrite."
-        )
+    base_path = _local_path(base_path)
     if not key_cols:
         raise ValueError("key_cols must name at least one column")
     base = spark.read.parquet(base_path)

@@ -29,8 +29,10 @@ is create-exclusive; on object stores it maps to a conditional PUT
 produce one winner and one ConcurrentCommitError, never interleaved state.
 The loser re-reads the new current version and recomputes its merge.
 
-All filesystem access goes through the Hadoop FileSystem API of the active
-session, so the same code path serves file:/, hdfs:/, and s3a:/ URIs.
+All filesystem access goes through the Hadoop FileSystem API under the
+session's Hadoop conf (sources/io.hadoop_fs), so the same code path serves
+file:/, hdfs:/, and s3a:/ URIs; only the local manifest commit opens files
+with os, at the path sources/io's path rule gives.
 
 The reference has no DML surface at all (its tables are read-only
 registrations, reference src/utils.rs); this module exists for the
@@ -47,6 +49,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from bdt_spark.sources.io import _local_path, hadoop_fs
+
 _MANIFEST_RE = re.compile(r"^v(\d{8})\.json$")
 
 
@@ -54,19 +58,10 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first. Re-read and retry."""
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _jpath(spark: SparkSession, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path)
-
-
 def table_versions(spark: SparkSession, root: str) -> list[int]:
     """Committed versions (ascending). One listing of the manifest dir."""
-    fs = _fs(spark, root)
-    mdir = _jpath(spark, f"{root}/_manifests")
+    fs, root_p = hadoop_fs(spark, root)
+    mdir = root_p.suffix("/_manifests")
     if not fs.exists(mdir):
         return []
     versions = []
@@ -83,9 +78,8 @@ def current_version(spark: SparkSession, root: str) -> int | None:
 
 
 def read_manifest(spark: SparkSession, root: str, version: int) -> dict:
-    fs = _fs(spark, root)
-    path = _jpath(spark, f"{root}/_manifests/v{version:08d}.json")
-    stream = fs.open(path)
+    fs, root_p = hadoop_fs(spark, root)
+    stream = fs.open(root_p.suffix(f"/_manifests/v{version:08d}.json"))
     try:
         text = spark._jvm.org.apache.commons.io.IOUtils.toString(
             stream, "UTF-8"
@@ -105,16 +99,6 @@ def read_versioned(
             raise ValueError(f"no committed version under {root!r}")
     meta = read_manifest(spark, root, version)
     return spark.read.parquet(f"{root}/{meta['data_dir']}")
-
-
-def _scheme_create_is_atomic(root: str) -> bool:
-    """Whether create(overwrite=False) is a true atomic exclusive create
-    for this path's scheme. Local FS and HDFS: yes (O_EXCL / namenode).
-    Object-store schemes (s3/s3a/gs/...): assume HEAD-then-PUT unless the
-    stack has conditional PUT — the commit then runs the extra delayed
-    read-back."""
-    scheme = root.split("://", 1)[0].lower() if "://" in root else "file"
-    return scheme in ("file", "hdfs", "viewfs", "local")
 
 
 def _is_already_exists(e: Exception) -> bool:
@@ -137,15 +121,6 @@ def _is_already_exists(e: Exception) -> bool:
     )
 
 
-def _local_path(p: str) -> str:
-    """Strip a file-scheme prefix down to the OS path."""
-    if p.startswith("file://"):
-        return p[7:] or "/"
-    if p.startswith("file:"):
-        return p[5:]
-    return p
-
-
 def _commit_manifest(
     spark: SparkSession, root: str, version: int, meta: dict
 ) -> None:
@@ -160,7 +135,7 @@ def _commit_manifest(
     points at (r11; the committers-race test's polling reader could hit
     the window). Per scheme:
 
-    - file/local: write a hidden tmp file, fsync, then hard-LINK it to
+    - file: write a hidden tmp file, fsync, then hard-LINK it to
       the manifest name — link(2) is atomic and fails EEXIST, so
       visibility==content AND exclusivity are one syscall; a crashed
       writer leaves only tmp garbage, which table_versions' name filter
@@ -183,13 +158,14 @@ def _commit_manifest(
       external lock (e.g. DynamoDB, the standard S3 answer before
       If-None-Match).
     """
-    fs = _fs(spark, root)
-    fs.mkdirs(_jpath(spark, f"{root}/_manifests"))
+    fs, root_p = hadoop_fs(spark, root)
+    mdir_p = root_p.suffix("/_manifests")
+    fs.mkdirs(mdir_p)
     target_name = f"v{version:08d}.json"
     meta = dict(meta, attempt=uuid.uuid4().hex)
     payload = json.dumps(meta, sort_keys=True).encode()
-    scheme = root.split("://", 1)[0].lower() if "://" in root else "file"
-    if scheme in ("file", "local"):
+    scheme = fs.getUri().getScheme()
+    if scheme == "file":
         mdir = _local_path(f"{root}/_manifests")
         tmp = os.path.join(mdir, f".tmp-{target_name}-{meta['attempt']}")
         with open(tmp, "wb") as f:
@@ -220,15 +196,13 @@ def _commit_manifest(
         finally:
             os.unlink(tmp)
     elif scheme in ("hdfs", "viewfs"):
-        tmp_p = _jpath(
-            spark, f"{root}/_manifests/.tmp-{target_name}-{meta['attempt']}"
-        )
+        tmp_p = mdir_p.suffix(f"/.tmp-{target_name}-{meta['attempt']}")
         out = fs.create(tmp_p, True)
         try:
             out.write(bytearray(payload))
         finally:
             out.close()
-        target_p = _jpath(spark, f"{root}/_manifests/{target_name}")
+        target_p = mdir_p.suffix(f"/{target_name}")
         if not fs.rename(tmp_p, target_p):
             # The FileSystem rename contract returns false for MORE than
             # dest-exists (missing source, parent problems, quota): only
@@ -247,7 +221,7 @@ def _commit_manifest(
                 "source path, parent dirs, and quota)"
             )
     else:
-        target = _jpath(spark, f"{root}/_manifests/{target_name}")
+        target = mdir_p.suffix(f"/{target_name}")
         try:
             out = fs.create(target, False)  # overwrite=False -> exclusive
         except Exception as e:
@@ -262,10 +236,12 @@ def _commit_manifest(
             out.close()
     # Second, delayed read-back narrows the both-writers-verify-early race
     # window — only worth the fixed sleep on stores whose exclusive create
-    # may be non-atomic (object-store schemes); local FS/HDFS commits are
-    # atomic, so one immediate read-back is already just a sanity check
-    # and a per-commit sleep would tax every micro-batch for nothing.
-    delays = (0.0,) if _scheme_create_is_atomic(root) else (0.0, 0.2)
+    # may be non-atomic (object-store schemes: HEAD-then-PUT unless the
+    # stack has conditional PUT); local FS/HDFS commits are atomic
+    # (O_EXCL / namenode), so one immediate read-back is already just a
+    # sanity check and a per-commit sleep would tax every micro-batch for
+    # nothing.
+    delays = (0.0,) if scheme in ("file", "hdfs", "viewfs") else (0.0, 0.2)
     for delay_s in delays:
         if delay_s:
             time.sleep(delay_s)
@@ -318,12 +294,12 @@ def acquire_commit_lease(
     the worst-case manifest-write time. `_clock_skew_ms` exists for
     tests to simulate skewed writers.
     """
-    fs = _fs(spark, root)
-    lock_dir = f"{root}/_locks/v{version:08d}"
-    fs.mkdirs(_jpath(spark, lock_dir))
+    fs, root_p = hadoop_fs(spark, root)
+    lock_dir = root_p.suffix(f"/_locks/v{version:08d}")
+    fs.mkdirs(lock_dir)
     token = uuid.uuid4().hex
     now_ms = int(time.time() * 1000) + _clock_skew_ms
-    mine = _jpath(spark, f"{lock_dir}/cand-{now_ms:020d}-{token}.json")
+    mine = lock_dir.suffix(f"/cand-{now_ms:020d}-{token}.json")
     out = fs.create(mine, False)
     try:
         out.write(bytearray(json.dumps({"ts_ms": now_ms, "token": token}).encode()))
@@ -333,7 +309,7 @@ def acquire_commit_lease(
         time.sleep(settle_s)
         cutoff_ms = int(time.time() * 1000) - int(ttl_s * 1000)
         best: tuple[int, str] | None = None
-        if not fs.exists(_jpath(spark, lock_dir)):
+        if not fs.exists(lock_dir):
             # the whole lock dir is gone: an earlier winner already
             # committed this version and released its lease while we
             # slept — we lost.
@@ -342,7 +318,7 @@ def acquire_commit_lease(
                 f"while settling under {root!r}"
             )
         try:
-            statuses = list(fs.listStatus(_jpath(spark, lock_dir)))
+            statuses = list(fs.listStatus(lock_dir))
         except Exception as e:  # TOCTOU on the exists guard above: a
             # rival can commit + sweep the lock dir between our exists()
             # and this listing — translate the raw FileNotFoundException
@@ -369,7 +345,7 @@ def acquire_commit_lease(
                 f"lost commit lease election for version {version} under "
                 f"{root!r} (winner ts/token {best})"
             )
-        if fs.exists(_jpath(spark, f"{root}/_manifests/v{version:08d}.json")):
+        if fs.exists(root_p.suffix(f"/_manifests/v{version:08d}.json")):
             # A writer that starts its election AFTER the version
             # committed (and the committer released its lease) can win a
             # fresh election over an empty lock dir — electing it would
@@ -409,14 +385,14 @@ def release_commit_lease(
     candidate behind would block every retry (own and rivals') for ttl_s,
     while deleting rivals' candidates mid-settle could hand two writers
     the same election."""
-    fs = _fs(spark, root)
-    lock_dir = f"{root}/_locks/v{version:08d}"
+    fs, root_p = hadoop_fs(spark, root)
+    lock_dir = root_p.suffix(f"/_locks/v{version:08d}")
     if token is None:
-        fs.delete(_jpath(spark, lock_dir), True)
+        fs.delete(lock_dir, True)
         return
-    if not fs.exists(_jpath(spark, lock_dir)):
+    if not fs.exists(lock_dir):
         return  # a rival committed and swept the dir — nothing to clean
-    for st in fs.listStatus(_jpath(spark, lock_dir)):
+    for st in fs.listStatus(lock_dir):
         m = _CAND_RE.match(st.getPath().getName())
         if m and m.group(2) == token:
             fs.delete(st.getPath(), False)
@@ -460,7 +436,8 @@ def write_versioned(
     except ConcurrentCommitError:
         # loser's attempt dir is orphaned and invisible to readers;
         # best-effort reclaim now, vacuum_versions handles the crash case
-        _fs(spark, root).delete(_jpath(spark, f"{root}/{rel}"), True)
+        fs, root_p = hadoop_fs(spark, root)
+        fs.delete(root_p.suffix(f"/{rel}"), True)
         if lease_token is not None:
             release_commit_lease(spark, root, version, token=lease_token)
         raise
@@ -533,7 +510,7 @@ def vacuum_versions(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     import time as _time
-    fs = _fs(spark, root)
+    fs, root_p = hadoop_fs(spark, root)
     versions = table_versions(spark, root)
     keep = set(versions[-keep_last:])
     referenced = {
@@ -545,10 +522,10 @@ def vacuum_versions(
         if v in keep:
             continue
         meta = read_manifest(spark, root, v)
-        fs.delete(_jpath(spark, f"{root}/{meta['data_dir']}"), True)
-        fs.delete(_jpath(spark, f"{root}/_manifests/v{v:08d}.json"), False)
+        fs.delete(root_p.suffix(f"/{meta['data_dir']}"), True)
+        fs.delete(root_p.suffix(f"/_manifests/v{v:08d}.json"), False)
         removed.append(v)
-    ddir = _jpath(spark, f"{root}/data")
+    ddir = root_p.suffix("/data")
     cutoff_ms = (_time.time() - orphan_min_age_s) * 1000
     if fs.exists(ddir):
         for st in fs.listStatus(ddir):
@@ -569,7 +546,7 @@ def vacuum_versions(
     # belong to a writer currently between tmp-write and link — deleting
     # it would turn that writer's clean ConcurrentCommitError into a
     # FileNotFoundError.
-    mdir = _jpath(spark, f"{root}/_manifests")
+    mdir = root_p.suffix("/_manifests")
     if fs.exists(mdir):
         for st in fs.listStatus(mdir):
             name = st.getPath().getName()

@@ -44,7 +44,7 @@ FRAME_BYTES = 100
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_fixture_tables(spark, sf_dir)
     binary = with_binary_payload(t["documents"])
-    return decode_features(binary, fake=True).orderBy("doc_id")
+    return decode_features(binary).orderBy("doc_id")
 
 
 @query(

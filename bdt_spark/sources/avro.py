@@ -14,14 +14,14 @@ PUBLIC Avro 1.11 specification (container-file + binary encoding):
               arrays/maps = counted blocks terminated by 0, union =
               branch index + value, enum = symbol index, fixed = n bytes
 
-Distribution model: `spark.read.format("binaryFile")` lists the files as
-(path, content) rows on executors; an Arrow-batched `mapInPandas` decodes
-each file body with this module and yields rows. Parallelism is per FILE
-(the natural granularity — avro files at scale are written as many
-100-500 MB files); block-level splitting via the sync marker is the
-scale-up path if ever needed. The decode itself is pure Python and
-therefore the slow path per byte — acceptable because it runs ONCE at
-ingest, on executors, after which data lives as parquet/DataFrames.
+Distribution model (sources/io._read_avro): local files are cut into byte
+ranges, and each task decodes the blocks that start in its range with
+`decode_range`, the one block decoder, finding the first block by its
+sync marker; a remote URI's files arrive whole through
+`spark.read.format("binaryFile")` and decode as the range [0, size) of an
+in-memory file. The decode itself is pure Python and therefore the slow
+path per byte — acceptable because it runs ONCE at ingest, on executors,
+after which data lives as parquet/DataFrames.
 
 Supported: all primitives, record, enum (-> string), fixed (-> binary),
 array, map, unions (nullable [null, X] -> X; general unions -> JSON
@@ -88,9 +88,6 @@ class _Reader:
 
     def read_bytes(self) -> bytes:
         return self.read(self.read_long())
-
-    def at_end(self) -> bool:
-        return self.pos >= len(self.buf)
 
 
 # ---------------------------------------------------------------------------
@@ -269,58 +266,9 @@ def _make_decoder(schema, names=None):
 # ---------------------------------------------------------------------------
 
 
-def read_header(raw: bytes):
-    """Parse the container header -> (schema_json, codec, sync, body_pos)."""
-    r = _Reader(raw)
-    if r.read(4) != MAGIC:
-        raise AvroError("not an avro object container file (bad magic)")
-    meta = {}
-    while True:
-        n = r.read_long()
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            r.read_long()
-        for _ in range(n):
-            k = r.read_bytes().decode("utf-8")
-            meta[k] = r.read_bytes()
-    sync = r.read(16)
-    schema = json.loads(meta["avro.schema"].decode("utf-8"))
-    codec = meta.get("avro.codec", b"null").decode("utf-8")
-    if codec not in ("null", "deflate"):
-        raise AvroError(f"unsupported avro codec: {codec!r}")
-    return schema, codec, sync, r.pos
-
-
-def decode_file(raw: bytes) -> tuple[dict, list[dict]]:
-    """Decode one container file -> (schema_json, rows as dicts).
-
-    Top-level schema must be a record (the standard tabular layout)."""
-    schema, codec, sync, pos = read_header(raw)
-    if not (isinstance(schema, dict) and schema.get("type") == "record"):
-        raise AvroError("top-level avro schema must be a record")
-    dec = _make_decoder(schema)
-    rows: list[dict] = []
-    r = _Reader(raw)
-    r.pos = pos
-    while not r.at_end():
-        count = r.read_long()
-        size = r.read_long()
-        block = r.read(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)
-        br = _Reader(block)
-        for _ in range(count):
-            rows.append(dec(br))
-        if r.read(16) != sync:
-            raise AvroError("sync marker mismatch (corrupt block)")
-    return schema, rows
-
-
 class _StreamReader:
-    """_Reader interface over a seekable binary file object (used by the
-    range decoder so a task never materializes more than its own blocks)."""
+    """_Reader interface over a seekable binary file object (so a range
+    decode never materializes more than the header and its own blocks)."""
 
     __slots__ = ("f",)
 
@@ -347,21 +295,34 @@ class _StreamReader:
             shift += 7
         return (acc >> 1) ^ -(acc & 1)
 
+    def read_bytes(self) -> bytes:
+        return self.read(self.read_long())
 
-def read_header_from(f):
-    """read_header against a file object, fetching only as much of the
-    file head as the header actually needs (metadata maps are small, but
-    unbounded by spec — grow geometrically until the parse completes)."""
-    size = 1 << 14
+
+def read_header(f):
+    """Parse the container header of the seekable binary file `f` ->
+    (schema_json, codec, sync, body_pos)."""
+    f.seek(0)
+    r = _StreamReader(f)
+    if r.read(4) != MAGIC:
+        raise AvroError("not an avro object container file (bad magic)")
+    meta = {}
     while True:
-        f.seek(0)
-        buf = f.read(size)
-        try:
-            return read_header(buf)
-        except AvroError:
-            if len(buf) < size:  # hit EOF: genuinely corrupt/truncated
-                raise
-            size *= 4
+        n = r.read_long()
+        if n == 0:
+            break
+        if n < 0:
+            n = -n
+            r.read_long()
+        for _ in range(n):
+            k = r.read_bytes().decode("utf-8")
+            meta[k] = r.read_bytes()
+    sync = r.read(16)
+    schema = json.loads(meta["avro.schema"].decode("utf-8"))
+    codec = meta.get("avro.codec", b"null").decode("utf-8")
+    if codec not in ("null", "deflate"):
+        raise AvroError(f"unsupported avro codec: {codec!r}")
+    return schema, codec, sync, f.tell()
 
 
 def _first_block_at_or_after(f, target: int, sync: bytes, body_pos: int):
@@ -390,48 +351,51 @@ def _first_block_at_or_after(f, target: int, sync: bytes, body_pos: int):
             return data_start + idx + 16
 
 
-def decode_range(path: str, start: int, end: int, expected_schema=None):
-    """Decode the blocks of an avro container file whose START offset lies
-    in [start, end) — the input-split contract that lets one large file
-    fan out to many tasks: adjacent ranges never skip or double-read a
-    block, because each block belongs to exactly the range containing its
-    first byte.
+def decode_range(f, start: int, end: int, expected_schema=None):
+    """Decode the blocks of the avro container file open as the seekable
+    binary file `f` whose START offset lies in [start, end) — the
+    input-split contract that lets one large file fan out to many tasks:
+    adjacent ranges never skip or double-read a block, because each
+    block belongs to exactly the range containing its first byte. A
+    whole file is the range [0, size); a file held in memory reads
+    through `io.BytesIO`.
 
-    Returns (schema_json, rows). `expected_schema` (parsed JSON) guards
-    multi-file reads: a file whose embedded writer schema differs raises
-    AvroError instead of silently reshaping rows."""
-    with open(path, "rb") as f:
-        schema, codec, sync, body_pos = read_header_from(f)
-        if expected_schema is not None and schema != expected_schema:
-            raise AvroError(
-                f"avro schema mismatch in {path!r}: file schema differs "
-                "from the first file's schema (schema evolution across a "
-                "directory is not resolved; convert files to one schema)"
-            )
-        if not (isinstance(schema, dict) and schema.get("type") == "record"):
-            raise AvroError("top-level avro schema must be a record")
-        dec = _make_decoder(schema)
-        pos = _first_block_at_or_after(f, max(start, body_pos), sync, body_pos)
-        rows: list[dict] = []
-        if pos is None or pos >= end:
-            return schema, rows
-        f.seek(0, 2)
-        file_size = f.tell()
-        f.seek(pos)
-        sr = _StreamReader(f)
-        while pos < end and pos < file_size:
-            count = sr.read_long()
-            size = sr.read_long()
-            block = sr.read(size)
-            if codec == "deflate":
-                block = zlib.decompress(block, -15)
-            br = _Reader(block)
-            for _ in range(count):
-                rows.append(dec(br))
-            if sr.read(16) != sync:
-                raise AvroError("sync marker mismatch (corrupt block)")
-            pos = f.tell()
+    Returns (schema_json, rows). The top-level schema must be a record
+    (the standard tabular layout). `expected_schema` (parsed JSON)
+    guards multi-file reads: a file whose embedded writer schema differs
+    raises AvroError instead of silently reshaping rows."""
+    schema, codec, sync, body_pos = read_header(f)
+    if expected_schema is not None and schema != expected_schema:
+        raise AvroError(
+            f"avro schema mismatch in {getattr(f, 'name', 'a file')!r}: "
+            "file schema differs from the first file's schema (schema "
+            "evolution across a directory is not resolved; convert files "
+            "to one schema)"
+        )
+    if not (isinstance(schema, dict) and schema.get("type") == "record"):
+        raise AvroError("top-level avro schema must be a record")
+    dec = _make_decoder(schema)
+    pos = _first_block_at_or_after(f, max(start, body_pos), sync, body_pos)
+    rows: list[dict] = []
+    if pos is None or pos >= end:
         return schema, rows
+    f.seek(0, 2)
+    file_size = f.tell()
+    f.seek(pos)
+    sr = _StreamReader(f)
+    while pos < end and pos < file_size:
+        count = sr.read_long()
+        size = sr.read_long()
+        block = sr.read(size)
+        if codec == "deflate":
+            block = zlib.decompress(block, -15)
+        br = _Reader(block)
+        for _ in range(count):
+            rows.append(dec(br))
+        if sr.read(16) != sync:
+            raise AvroError("sync marker mismatch (corrupt block)")
+        pos = f.tell()
+    return schema, rows
 
 
 def avro_schema_to_spark(schema):

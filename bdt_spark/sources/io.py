@@ -28,6 +28,14 @@ a type that drifts after the head raise instead of widen. A single
 parquet file needs no scan: its
 schema is in its footer, which read_file reads on the driver, so opening it
 runs no Spark job.
+
+One path rule: a path names the same file to Spark (Hadoop's `Path`) and
+to driver-local os/pyarrow code. `_file_path`, the one `file:` URI parser,
+reads a URI as `Path` does: the optional empty `//` authority goes, the
+rest is the path, literally (`file:///x/a#b/p%20q` is `/x/a#b/p%20q`);
+a host or a missing path raises ValueError before any job. Driver-side
+Hadoop access goes through one handle, `hadoop_fs`, under the session's
+Hadoop conf, the one Spark's readers and writers use.
 """
 
 from __future__ import annotations
@@ -90,23 +98,43 @@ def table_name_from_path(path: str) -> str:
     return sanitize_table_name(Path(path).stem)
 
 
-def _local_path(path: str) -> str:
-    """The driver-local filesystem path behind `path`: a plain path as
-    given, a `file:` URI as its percent-decoded path. Its callers open
-    the result with os/pyarrow, so any other scheme raises ValueError
-    before a Spark job runs, instead of a write landing under a
-    literal `./file:` directory or a read failing with a missing file."""
-    if "://" not in path and not path.startswith("file:"):
-        return path
-    from urllib.parse import unquote, urlparse
+def _file_path(path: str) -> str | None:
+    """The path rule: the local path Hadoop's `Path` reads in `path`.
 
-    u = urlparse(path)
-    if u.scheme != "file":
+    A plain path is returned as given. A `file:` URI (scheme in any
+    case) loses its scheme and an optional empty `//` authority; the
+    rest is the path, literally: no percent-decoding, and `?` and `#`
+    are path characters. A host (`file://host/x`, a wrong FS to Hadoop)
+    or a missing or relative path (`file://`, `file:x`) raises
+    ValueError. None for a URI of another scheme."""
+    scheme, colon, rest = path.partition(":")
+    if not colon or scheme.lower() != "file":
+        return None if "://" in path else path
+    if rest.startswith("//"):
+        host, slash, tail = rest[2:].partition("/")
+        if host:
+            raise ValueError(
+                f"malformed file URI (host {host!r}; a file: URI names "
+                f"this machine's filesystem): {path!r}"
+            )
+        rest = slash + tail
+    if not rest.startswith("/"):
+        raise ValueError(f"malformed file URI (empty or relative path): {path!r}")
+    return rest
+
+
+def _local_path(path: str) -> str:
+    """The local path behind `path` for callers that open it with
+    os/pyarrow, by the path rule (`_file_path`): a plain path as given,
+    a `file:` URI as the literal path Hadoop's `Path` reads in it. A URI
+    of another scheme raises ValueError before a Spark job runs."""
+    local = _file_path(path)
+    if local is None:
         raise ValueError(
-            f"{path!r}: this path is opened with local file APIs; pass a "
-            "local path or a file: URI"
+            f"{path!r}: this path is opened with local filesystem APIs; "
+            "pass a local path or a file: URI"
         )
-    return unquote(u.path)
+    return local
 
 
 def _arrow_table_from_bytes(content: bytes):
@@ -218,33 +246,20 @@ def _read_avro(spark: SparkSession, path: str) -> DataFrame:
         pass  # jar absent (FAILED_TO_FIND_DATA_SOURCE) -> spec decoder
 
     import glob as _glob
+    import io
 
     from bdt_spark.sources import avro as A
 
-    try:
-        fs_path = _local_path(path)
-    except ValueError:  # remote URI: whole-file decode below
-        fs_path = None
-    local = fs_path is not None
-
-    if local and os.path.isdir(fs_path):
-        files = sorted(_glob.glob(os.path.join(fs_path, "*.avro")))
-        if not files:
-            raise A.AvroError(f"no .avro files under {path!r}")
-    elif local:
-        files = [fs_path]
-    else:
-        files = []
-
-    if not local:
+    fs_path = _file_path(path)
+    if fs_path is None:
         # remote URI: whole-file decode via the Hadoop-IO binaryFile source
         bin_df = (
             spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.avro")
             .load(path)
         )
-        first_content = bytes(bin_df.select("content").first()["content"])
-        header_schema, _, _, _ = A.read_header(first_content)
+        first_content = bin_df.select("content").first()["content"]
+        header_schema, _, _, _ = A.read_header(io.BytesIO(first_content))
         spark_schema = A.avro_schema_to_spark(header_schema)
         cols = [f.name for f in spark_schema.fields]
 
@@ -252,24 +267,28 @@ def _read_avro(spark: SparkSession, path: str) -> DataFrame:
             import pandas as pd
 
             for pdf in batches:
-                for content in pdf["content"]:
-                    schema_j, rows = A.decode_file(bytes(content))
-                    if schema_j != header_schema:
-                        raise A.AvroError(
-                            "avro schema mismatch across files under "
-                            f"{path!r}; convert to one schema"
-                        )
+                for fp, content in zip(pdf["path"], pdf["content"]):
+                    whole = io.BytesIO(content)
+                    whole.name = fp  # a schema mismatch names the file
+                    _, rows = A.decode_range(
+                        whole, 0, len(content), expected_schema=header_schema
+                    )
                     yield pd.DataFrame(
                         {c: [r.get(c) for r in rows] for c in cols},
                         columns=cols,
                     )
 
-        return bin_df.select("content").mapInPandas(
+        return bin_df.select("path", "content").mapInPandas(
             _decode_whole, schema=spark_schema
         )
 
+    files = [fs_path]
+    if os.path.isdir(fs_path):
+        files = sorted(_glob.glob(os.path.join(fs_path, "*.avro")))
+        if not files:
+            raise A.AvroError(f"no .avro files under {path!r}")
     with open(files[0], "rb") as f:
-        header_schema, _, _, _ = A.read_header_from(f)
+        header_schema, _, _, _ = A.read_header(f)
     spark_schema = A.avro_schema_to_spark(header_schema)
     cols = [f.name for f in spark_schema.fields]
 
@@ -284,9 +303,10 @@ def _read_avro(spark: SparkSession, path: str) -> DataFrame:
 
         for pdf in batches:
             for fp, start, stop in zip(pdf["path"], pdf["start"], pdf["stop"]):
-                _, rows = A.decode_range(
-                    fp, int(start), int(stop), expected_schema=header_schema
-                )
+                with open(fp, "rb") as f:
+                    _, rows = A.decode_range(
+                        f, int(start), int(stop), expected_schema=header_schema
+                    )
                 yield pd.DataFrame(
                     {c: [r.get(c) for r in rows] for c in cols},
                     columns=cols,
@@ -343,20 +363,51 @@ _NANOS_FIELD = re.compile(
 )
 
 
+def _hadoop_conf(spark: SparkSession):
+    """The session's Hadoop conf: the one Spark's readers and writers
+    use (the SparkContext's, plus the session's `spark.conf` settings)."""
+    return spark._jsparkSession.sessionState().newHadoopConf()
+
+
+def _hadoop_handle(spark: SparkSession, path: str):
+    """`(conf, fs, jpath)`: the session's Hadoop conf and the Hadoop
+    FileSystem and Path `path` names under it. A malformed `file:` URI
+    raises ValueError (`_file_path`), where Hadoop would read `file://`
+    as `/`."""
+    _file_path(path)
+    conf = _hadoop_conf(spark)
+    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return conf, jp.getFileSystem(conf), jp
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """`(fs, jpath)` of `_hadoop_handle`: the one driver-side Hadoop
+    handle."""
+    return _hadoop_handle(spark, path)[1:]
+
+
+def hadoop_exists(spark: SparkSession, path: str) -> bool:
+    """Driver-side existence check through the Hadoop FS abstraction —
+    works on any filesystem the session can reach, unlike
+    os.path.isdir; used by fixture registration and the incremental
+    state/index guards."""
+    fs, jp = hadoop_fs(spark, path)
+    return fs.exists(jp)
+
+
 def _driver_status(spark: SparkSession, path: str):
-    """`(conf, status)` of the Hadoop path `path` names, under the
-    session's Hadoop conf, for a driver-side read that spares Spark a
-    job. None for a glob, whose file choice stays Spark's, and for a
-    path the JVM cannot stat (missing, an unknown scheme): Spark's own
-    read then reports it exactly as it would have."""
+    """`(conf, fs, status)` of the Hadoop path `path` names
+    (`_hadoop_handle`), for a driver-side read that spares Spark a job.
+    None for a glob, whose file choice stays Spark's, and for a path the
+    JVM cannot stat (missing, an unknown scheme): Spark's own read then
+    reports it exactly as it would have."""
     from py4j.protocol import Py4JJavaError
 
     if any(c in _GLOB_CHARS for c in path):
         return None
     try:
-        conf = spark._jsparkSession.sessionState().newHadoopConf()
-        jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-        return conf, jp.getFileSystem(conf).getFileStatus(jp)
+        conf, fs, jp = _hadoop_handle(spark, path)
+        return conf, fs, fs.getFileStatus(jp)
     except Py4JJavaError:
         return None
 
@@ -372,9 +423,9 @@ def _single_parquet_footer(spark: SparkSession, path: str):
     from py4j.protocol import Py4JJavaError
 
     found = _driver_status(spark, path)
-    if found is None or not found[1].isFile():
+    if found is None or not found[2].isFile():
         return None
-    conf, status = found
+    conf, _, status = found
     jvm = spark._jvm
     reader = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
     skip_row_groups = (
@@ -426,10 +477,9 @@ def _first_json_keys(spark: SparkSession, path: str) -> list[str]:
     found = _driver_status(spark, path)
     if found is None:
         return []
-    conf, status = found
+    _, fs, status = found
     jp = status.getPath()
     try:
-        fs = jp.getFileSystem(conf)
         if status.isDirectory():
             parts = [st.getPath() for st in fs.listStatus(jp)
                      if st.getPath().getName().startswith("part-")]
@@ -481,6 +531,7 @@ def read_file(
     by name); keys that record lacks follow in Spark's order.
     """
     fmt = fmt or file_format(path)
+    _file_path(path)  # a malformed file: URI raises before any job
     if fmt == "arrow":
         return _read_arrow(spark, path)
     if fmt == "avro":
@@ -633,16 +684,6 @@ class _Views(Mapping):
 
     def __len__(self) -> int:
         return sum(1 for _ in self)
-
-
-def hadoop_exists(spark: SparkSession, p: str) -> bool:
-    """Driver-side existence check through the Hadoop FS abstraction —
-    works on any filesystem the session can reach, unlike
-    os.path.isdir; used by fixture registration and the incremental
-    state/index guards."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    jp = jvm_path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jp)
 
 
 def _path_bytes(path: str) -> int:
@@ -897,7 +938,8 @@ def _scan_units(df: DataFrame, stop: int) -> int:
     already holds, so hive-partitioned and extension-less parts count.
     A plan with no file leaf (an in-memory relation, which
     createDataFrame already spreads) counts 0. A footer that cannot be
-    read counts `stop`: an unknown layout never gets a fan-out."""
+    read, or is not in a `file:` URI, counts `stop`: an unknown layout
+    never gets a fan-out."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -919,8 +961,11 @@ def _scan_units(df: DataFrame, stop: int) -> int:
         for i in range(len(files)):
             if units >= stop:
                 break
+            uri = files[i]  # percent-encoded (Path.toUri): pyarrow decodes it
+            if not uri.startswith("file:"):
+                return stop
             try:
-                meta = pq.read_metadata(_local_path(files[i]))
+                meta = pq.read_metadata(uri)
             except (OSError, ValueError, pa.ArrowException):
                 return stop
             units += meta.num_row_groups

@@ -193,9 +193,12 @@ def stateful_running_max(events: DataFrame) -> DataFrame:
 
 def _markers_enabled(spark: SparkSession) -> bool:
     """Whether the Hadoop committer writes _SUCCESS markers
-    (mapreduce.fileoutputcommitter.marksuccessfuljobs, default true)."""
+    (mapreduce.fileoutputcommitter.marksuccessfuljobs, default true)
+    under the session's Hadoop conf, which Spark's writers commit with."""
+    from bdt_spark.sources.io import _hadoop_conf
+
     return (
-        spark.sparkContext._jsc.hadoopConfiguration()
+        _hadoop_conf(spark)
         .get("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
         .lower()
         != "false"
@@ -531,10 +534,10 @@ def neardup_stream_to_state(
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
-        from bdt_spark.operators.ann import _hadoop_exists
+        from bdt_spark.sources.io import hadoop_exists
 
         bid = f"{batch_id:020d}"  # zero-pad: lexicographic == numeric
-        if _hadoop_exists(spark, state_dir):
+        if hadoop_exists(spark, state_dir):
             # stats_out (VERDICT r14 #4): per-batch dropped-hot-bucket
             # counts keyed by batch id, with a stderr note — recall
             # loss is visible instead of silent. Opt-in: the count is
@@ -613,10 +616,10 @@ def embedding_neardup_stream_to_state(
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
-        from bdt_spark.operators.ann import _hadoop_exists
+        from bdt_spark.sources.io import hadoop_exists
 
         bid = f"{batch_id:020d}"
-        if _hadoop_exists(spark, state_dir):
+        if hadoop_exists(spark, state_dir):
             bstats: dict | None = {} if stats_out is not None else None
             kw = (
                 {}

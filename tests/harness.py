@@ -1,9 +1,49 @@
-"""Helpers the test files share: stream draining and avro fixture
-schemas. Test harness only; no library code calls them."""
+"""Helpers the test files share: stream draining, Spark job counting
+and avro fixture schemas. Test harness only; no library code calls
+them."""
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.readwriter import DataFrameWriter
 
 from bdt_spark.sources.avro import AvroError
+
+
+def jobs_started(spark: SparkSession, fn) -> set:
+    """Ids of the Spark jobs `fn` starts, from any thread (registration
+    reads tables on a thread pool, whose jobs carry no job group): the
+    ungrouped job ids the status tracker gains, read once the listener
+    bus has delivered every event."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None)) - before
+
+
+class _WriteReached(Exception):
+    pass
+
+
+def jobs_before_write(spark: SparkSession, fn, monkeypatch) -> set:
+    """Ids of the Spark jobs `fn` starts before its first parquet write,
+    which is stopped instead of run."""
+
+    def stop(*_a, **_k):
+        raise _WriteReached
+
+    def run():
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", stop)
+            try:
+                fn()
+            except _WriteReached:
+                return
+        raise AssertionError("no parquet write was reached")
+
+    return jobs_started(spark, run)
 
 
 def run_to_memory(

@@ -366,6 +366,37 @@ def test_update_replay_idempotent_and_compaction(spark, tmp_path):
     assert compact_ivf_index(spark, path) == 0
 
 
+def test_compact_lists_increments_without_a_job(spark, tmp_path, monkeypatch):
+    """compact_ivf_index counts its increment batches from the
+    driver-side partition listing: before its write it runs only the
+    schema jobs of reading the increments and the base."""
+    from harness import jobs_before_write, jobs_started
+
+    from bdt_spark.operators.ann import (
+        build_ivf_index,
+        compact_ivf_index,
+        update_ivf_index,
+    )
+    from bdt_spark.operators.dedup import _read_state_untyped
+
+    path = str(tmp_path / "idx")
+    build_ivf_index(spark, _vecs(spark, range(0, 30)), path, k=4, n_iters=2)
+    for b in (1, 2):
+        update_ivf_index(
+            spark, path, _vecs(spark, range(100 * b, 100 * b + 5)),
+            batch_id=f"{b:020d}",
+        )
+    read_jobs = jobs_started(spark, lambda: (
+        _read_state_untyped(spark, f"{path}/increments"),
+        spark.read.parquet(f"{path}/assignments"),
+    ))
+    before = jobs_before_write(
+        spark, lambda: compact_ivf_index(spark, path), monkeypatch
+    )
+    assert len(before) == len(read_jobs)
+    assert compact_ivf_index(spark, path) == 2
+
+
 def test_update_reingest_latest_wins(spark, tmp_path):
     """A vec_id re-ingested with CHANGED values in a later monotone
     batch scores against its NEW embedding (probe-side latest-wins),

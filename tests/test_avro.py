@@ -5,6 +5,7 @@ has no spark-avro jar, so the decoder is implemented from the public Avro
 spec and these tests pin it with writer->reader round-trips."""
 
 import datetime
+import io
 from decimal import Decimal
 
 import pytest
@@ -12,11 +13,16 @@ import pytest
 from bdt_spark.sources.avro import (
     AvroError,
     avro_schema_to_spark,
-    decode_file,
+    decode_range,
     write_avro,
 )
 from bdt_spark.sources.io import read_file
 from harness import spark_schema_to_avro
+
+
+def _decode_whole(raw: bytes):
+    """A whole container file held in memory, decoded as one range."""
+    return decode_range(io.BytesIO(raw), 0, len(raw))
 
 
 def _write(tmp_path, name, rows, avro_schema, codec="deflate"):
@@ -45,7 +51,7 @@ BASIC_ROWS = [
 def test_decode_roundtrip_both_codecs():
     for codec in ("null", "deflate"):
         raw = write_avro(BASIC_ROWS, BASIC_SCHEMA, codec=codec)
-        schema, rows = decode_file(raw)
+        schema, rows = _decode_whole(raw)
         assert schema["name"] == "t"
         assert rows == BASIC_ROWS
 
@@ -75,8 +81,6 @@ def test_block_split_single_file_many_tasks(spark, tmp_path, monkeypatch):
     input splits), and adjacent ranges must neither skip nor double-read
     blocks — total rows and values stay exact."""
     import bdt_spark.sources.io as io_mod
-    from bdt_spark.sources.avro import decode_range
-
     rows = [
         {"id": i, "name": f"name-{i}", "score": i * 0.5, "ok": i % 2 == 0}
         for i in range(5000)
@@ -94,13 +98,12 @@ def test_block_split_single_file_many_tasks(spark, tmp_path, monkeypatch):
     assert {r.name for r in got if r.id == 4321} == {"name-4321"}
 
     # the same file decoded as one full range gives identical rows
-    _, whole = decode_range(str(p), 0, p.stat().st_size)
+    with open(p, "rb") as f:
+        _, whole = decode_range(f, 0, p.stat().st_size)
     assert len(whole) == 5000
 
 
-def test_avro_schema_mismatch_across_files_raises(spark, tmp_path):
-    """A directory whose files carry different writer schemas must error,
-    not silently null/drop columns (ADVICE r4)."""
+def _write_mixed_schemas(tmp_path):
     other = {
         "type": "record",
         "name": "t2",
@@ -111,8 +114,28 @@ def test_avro_schema_mismatch_across_files_raises(spark, tmp_path):
     }
     _write(tmp_path, "a1.avro", BASIC_ROWS[:1], BASIC_SCHEMA)
     _write(tmp_path, "a2.avro", [{"id": 9, "extra": 1.0}], other)
+
+
+def test_avro_schema_mismatch_across_files_raises(spark, tmp_path):
+    """A directory whose files carry different writer schemas must error,
+    not silently null/drop columns (ADVICE r4), and the error names the
+    odd file."""
+    _write_mixed_schemas(tmp_path)
     df = read_file(spark, str(tmp_path), fmt="avro")
-    with pytest.raises(Exception, match="schema mismatch"):
+    with pytest.raises(Exception, match=r"schema mismatch in '[^']*a2\.avro'"):
+        df.collect()
+
+
+def test_avro_whole_file_schema_mismatch_names_the_file(spark, tmp_path, monkeypatch):
+    """The path a non-`file:` URI takes (each file read whole through
+    Spark's binaryFile source, decoded from memory) names the odd file
+    in its schema-mismatch error too."""
+    import bdt_spark.sources.io as io_mod
+
+    monkeypatch.setattr(io_mod, "_file_path", lambda p: None)
+    _write_mixed_schemas(tmp_path)
+    df = read_file(spark, str(tmp_path), fmt="avro")
+    with pytest.raises(Exception, match=r"schema mismatch in '[^']*a2\.avro'"):
         df.collect()
 
 
@@ -131,7 +154,7 @@ def test_far_future_timestamp_micros_exact(spark, tmp_path):
     }
     v = datetime.datetime(2099, 12, 31, 23, 59, 59, 999999)
     raw = write_avro([{"t": v}], schema, codec="null")
-    _, rows = decode_file(raw)
+    _, rows = _decode_whole(raw)
     got = rows[0]["t"]
     assert (got.replace(tzinfo=None) if got.tzinfo else got) == v
 
@@ -226,12 +249,12 @@ def test_spark_schema_to_avro_roundtrip(spark, tmp_path):
 
 def test_bad_magic_and_codec_errors(tmp_path):
     with pytest.raises(AvroError, match="magic"):
-        decode_file(b"NOPE" + b"\x00" * 32)
+        _decode_whole(b"NOPE" + b"\x00" * 32)
     raw = bytearray(write_avro(BASIC_ROWS, BASIC_SCHEMA, codec="null"))
     # corrupt the sync marker of the data block
     raw[-1] ^= 0xFF
     with pytest.raises(AvroError, match="sync"):
-        decode_file(bytes(raw))
+        _decode_whole(bytes(raw))
 
 
 def test_union_null_first_or_last_roundtrips():
@@ -248,7 +271,7 @@ def test_union_null_first_or_last_roundtrips():
             "fields": [{"name": "f", "type": union}],
         }
         raw = write_avro([{"f": 42}, {"f": None}], schema)
-        _, rows = decode_file(raw)
+        _, rows = _decode_whole(raw)
         assert [r["f"] for r in rows] == [42, None]
     multi = {
         "type": "record",
@@ -275,7 +298,7 @@ def test_timestamp_millis_write_roundtrips():
         ],
     }
     v = datetime(2024, 3, 1, 12, 30, 45, 123000, tzinfo=timezone.utc)
-    _, rows = decode_file(write_avro([{"ts": v}], schema))
+    _, rows = _decode_whole(write_avro([{"ts": v}], schema))
     # decoder yields naive UTC (session pinned to UTC)
     assert rows[0]["ts"] == v.replace(tzinfo=None)
 
@@ -362,7 +385,7 @@ if HAVE_HYP:
             for v, w, t in rows_data
         ]
         raw = write_avro(rows, schema, codec=codec)
-        _, back = decode_file(raw)
+        _, back = _decode_whole(raw)
         assert back == rows
 
 
@@ -384,7 +407,7 @@ if HAVE_HYP:
         double-read."""
         import os
 
-        from bdt_spark.sources.avro import decode_file, decode_range, write_avro
+        from bdt_spark.sources.avro import decode_range, write_avro
 
         rows = [
             {"id": i, "name": f"n{i}" * (i % 7), "score": i * 0.25, "ok": i % 3 == 0}
@@ -397,8 +420,9 @@ if HAVE_HYP:
             f.write(raw)
         size = os.path.getsize(p)
         got = []
-        for start in range(0, max(size, 1), split_bytes):
-            _, part = decode_range(p, start, min(start + split_bytes, size))
-            got.extend(part)
-        _, whole = decode_file(raw)
+        with open(p, "rb") as f:
+            for start in range(0, max(size, 1), split_bytes):
+                _, part = decode_range(f, start, min(start + split_bytes, size))
+                got.extend(part)
+        _, whole = _decode_whole(raw)
         assert got == whole == rows

@@ -604,6 +604,42 @@ def test_incremental_state_compaction_probe_invariant(spark, tmp_path):
     assert after == before
 
 
+def test_state_compaction_lists_partitions_without_a_job(
+    spark, tmp_path, monkeypatch
+):
+    """Compaction takes its batch ids from the driver-side partition
+    listing: before its write it runs only the state read's own schema
+    job. A batch id Spark escapes in its directory name (`b:1` is
+    `batch=b%3A1`) is folded and deleted like any other."""
+    import os
+
+    from harness import jobs_before_write, jobs_started
+
+    from bdt_spark.operators.dedup import (
+        _read_state_untyped,
+        compact_minhash_state,
+        update_minhash_state,
+    )
+
+    state = str(tmp_path / "mh_state")
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog today"),
+         (1, "pack my box with five dozen liquor jugs right now")],
+        "doc_id long, text string",
+    )
+    update_minhash_state(spark, state, docs, batch_id="b0")
+    update_minhash_state(spark, state, docs, batch_id="b:1")
+    read_jobs = jobs_started(spark, lambda: _read_state_untyped(spark, state))
+    before = jobs_before_write(
+        spark, lambda: compact_minhash_state(spark, state), monkeypatch
+    )
+    assert len(before) == len(read_jobs)
+    assert compact_minhash_state(spark, state) == "b:1.compact"
+    parts = [n for n in os.listdir(state) if n.startswith("batch=")]
+    assert parts == ["batch=b%3A1.compact"]
+    assert _read_state_untyped(spark, state).count() == 2
+
+
 def test_incremental_embedding_gate_both_arms_agree(
     spark, sf_dir, monkeypatch
 ):

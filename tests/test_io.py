@@ -2,6 +2,7 @@
 sanitize_table_name (utils.rs:41-51), extension dispatch (utils.rs:12-23)."""
 
 import pytest
+from harness import jobs_started
 
 from bdt_spark.sources.io import (
     UnsupportedFormatError,
@@ -453,21 +454,6 @@ def test_fixtures_register_from_hadoop_fs_uri(spark, sf_dir):
 # --- single-file parquet opens: the footer schema, no inference job -------
 
 
-def _jobs_started(spark, fn) -> set:
-    """Ids of the Spark jobs `fn` starts, from any thread (registration
-    reads tables on a thread pool, whose jobs carry no job group): the
-    ungrouped job ids the status tracker gains, read once the listener
-    bus has delivered every event."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    bus.waitUntilEmpty()
-    before = set(sc.statusTracker().getJobIdsForGroup(None))
-    fn()
-    bus.waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup(None)) - before
-
-
 def _assert_spark_parity(spark, path):
     """read_file of one parquet file gives the schema Spark's inference
     gives, and the same rows. (The relation makes every column nullable
@@ -612,13 +598,13 @@ def test_single_parquet_open_runs_no_spark_job(spark, sf_dir, tmp_path):
     from bdt_spark.sources.io import load_fixture_tables
 
     one = f"{sf_dir}/orders.parquet"
-    assert not _jobs_started(spark, lambda: read_file(spark, one).schema)
-    assert not _jobs_started(
+    assert not jobs_started(spark, lambda: read_file(spark, one).schema)
+    assert not jobs_started(
         spark, lambda: load_fixture_tables(spark, sf_dir, force=True)
     )
     d = str(tmp_path / "orders_dir.parquet")
     spark.read.parquet(one).repartition(3).write.parquet(d)
-    assert _jobs_started(spark, lambda: read_file(spark, d).schema)
+    assert jobs_started(spark, lambda: read_file(spark, d).schema)
 
 
 def test_single_parquet_footer_leaves_globs_and_missing_paths_to_spark(
@@ -667,8 +653,8 @@ def test_json_columns_keep_first_record_key_order(spark, tmp_path, capsys):
     d = str(tmp_path / "x_dir.json")
     convert(spark, p, d)
     assert read_file(spark, d).columns == want
-    assert len(_jobs_started(spark, lambda: read_file(spark, p))) == len(
-        _jobs_started(spark, lambda: spark.read.json(p))
+    assert len(jobs_started(spark, lambda: read_file(spark, p))) == len(
+        jobs_started(spark, lambda: spark.read.json(p))
     )
 
 
@@ -702,3 +688,106 @@ def test_csv_reads_rfc4180_doubled_quotes(spark, tmp_path):
     assert [tuple(r) for r in read_file(spark, p).collect()] == [
         (1, 'say "hi", ok')
     ]
+
+
+# --- the path rule: a file: URI names the file Hadoop's Path names --------
+
+
+def test_file_uri_maps_as_hadoop_path(spark):
+    """_file_path reads a file: URI as Hadoop's Path does: the empty
+    authority goes, the rest is the path, literally."""
+    from bdt_spark.sources.io import _file_path
+
+    for uri in ("file:///x/a#b/p%20q?r", "file:/x/a#b/p%20q?r",
+                "FILE:///x/a#b/p%20q?r"):
+        jp = spark._jvm.org.apache.hadoop.fs.Path(uri)
+        assert _file_path(uri) == jp.toUri().getPath() == "/x/a#b/p%20q?r"
+    assert _file_path("/x/a#b") == "/x/a#b"
+    assert _file_path("rel/a:b.csv") == "rel/a:b.csv"
+    assert _file_path("s3a://bucket/t.parquet") is None
+    for bad in ("file://host/x", "file://localhost/x", "file://", "file:",
+                "file:x/y"):
+        with pytest.raises(ValueError, match="malformed file URI"):
+            _file_path(bad)
+
+
+# the wrong local path the earlier percent-decoding, #-splitting parser
+# read in each segment: a directory there must be left alone
+_MISREAD = {"p%20q": "p q", "a#b": "a"}
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet", "arrow"])
+@pytest.mark.parametrize("segment", sorted(_MISREAD))
+def test_file_uri_single_file_round_trip(spark, sf_dir, tmp_path, segment, fmt):
+    """`convert -s` to a file: URI whose path holds `%20` or `#` writes
+    the file at the URI's literal path, and read_file of the same URI
+    returns the source rows. The directory the old parser misread the
+    URI as (`p q/`, or `a/` for `a#b/`) survives with its file."""
+    import os
+
+    src = f"{sf_dir}/nation.parquet"
+    want = sorted(tuple(r) for r in spark.read.parquet(src).collect())
+    misread = tmp_path / _MISREAD[segment]
+    misread.mkdir()
+    (misread / "keep.txt").write_text("kept")
+    out = tmp_path / segment / f"nation.{fmt}"
+    uri = f"file://{out}"
+
+    from bdt_spark.operators.convert import convert
+
+    convert(spark, src, uri, single_file=True)
+    assert os.path.isfile(out)
+    assert sorted(tuple(r) for r in read_file(spark, uri).collect()) == want
+    assert (misread / "keep.txt").read_text() == "kept"
+    assert os.listdir(misread) == ["keep.txt"]
+
+
+def test_scan_units_open_the_files_the_index_lists(spark, sf_dir, tmp_path):
+    """The file index lists its files as percent-encoded URIs (a space
+    is `%20`, a `#` is `%23`); the fan-out's footer peek opens the file
+    each one names, so it counts that file's row groups."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from bdt_spark.sources.io import _scan_units
+
+    d = tmp_path / "p q#1"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/orders.parquet", d / "orders.parquet")
+    df = spark.read.parquet(str(d / "orders.parquet"))
+    [uri] = df.inputFiles()
+    assert "%20" in uri and "%23" in uri
+    want = pq.read_metadata(d / "orders.parquet").num_row_groups
+    assert _scan_units(df, want + 1) == want
+
+
+@pytest.mark.parametrize("bad", ["file://host/x/t.parquet", "file://"])
+def test_malformed_file_uri_raises_before_any_job(
+    spark, sf_dir, tmp_path, bad
+):
+    """A file: URI with a host, or with no path, raises ValueError in
+    convert (as input and as output), compare_files (both methods),
+    merge_upsert and write_versioned before any Spark job runs."""
+    from bdt_spark.operators.compare import compare_files
+    from bdt_spark.operators.convert import convert
+    from bdt_spark.operators.upsert import merge_upsert
+    from bdt_spark.operators.versioned import write_versioned
+
+    src = f"{sf_dir}/nation.parquet"
+    delta = spark.createDataFrame([(1, "x")], "k int, v string")
+    calls = [
+        lambda: convert(spark, src, bad),
+        lambda: convert(spark, bad, str(tmp_path / "out.parquet")),
+        lambda: compare_files(spark, src, bad),
+        lambda: compare_files(spark, src, bad, method="hash"),
+        lambda: merge_upsert(spark, bad, delta, ["k"]),
+        lambda: write_versioned(spark, bad, delta),
+    ]
+
+    def run_all():
+        for call in calls:
+            with pytest.raises(ValueError):
+                call()
+
+    assert not jobs_started(spark, run_all)

@@ -286,6 +286,39 @@ def test_state_table_markers_off_fallback(spark, sf_dir, tmp_path):
         hconf.set(key, old)
 
 
+def test_state_table_markers_off_through_spark_conf(spark, sf_dir, tmp_path):
+    """marksuccessfuljobs=false set through spark.conf reaches Spark's
+    committer (no snapshot gets a _SUCCESS marker) and the state table's
+    marker check alike: the second batch merges onto the first, so
+    n_seen accumulates, and read_running_state reads the newest
+    snapshot."""
+    import os
+
+    from bdt_spark.streaming import merge_running_state, read_running_state
+
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    spark.conf.set(key, "false")
+    try:
+        state = str(tmp_path / "state_conf_nomark")
+        ev = _batch_events(spark, sf_dir).select("user_id", "value")
+        merge_running_state(spark, state, ev, 0)
+        merge_running_state(spark, state, ev, 1)
+        assert not os.path.exists(os.path.join(state, "v1", "_SUCCESS"))
+        got = {
+            r.user_id: (r.running_max, r.n_seen)
+            for r in read_running_state(spark, state).collect()
+        }
+    finally:
+        spark.conf.unset(key)
+    expect = {
+        r.user_id: (r.mx, 2 * r.n)
+        for r in ev.groupBy("user_id")
+        .agg(F.max("value").alias("mx"), F.count("*").alias("n"))
+        .collect()
+    }
+    assert got == expect
+
+
 def test_streaming_frequent_items_mg_invariants(spark, sf_dir, tmp_path):
     """Streaming Misra-Gries across REAL batch boundaries: split the
     events fixture into 4 files (maxFilesPerTrigger=1 -> 4 micro-

@@ -320,14 +320,13 @@ def test_lease_expired_candidate_does_not_block(spark, root):
     import time as _time
     import uuid as _uuid
 
-    from bdt_spark.operators.versioned import _fs, _jpath
+    from bdt_spark.sources.io import hadoop_fs
 
-    fs = _fs(spark, root)
-    lock_dir = f"{root}/_locks/v{2:08d}"
-    fs.mkdirs(_jpath(spark, lock_dir))
+    fs, lock_dir = hadoop_fs(spark, f"{root}/_locks/v{2:08d}")
+    fs.mkdirs(lock_dir)
     ts = int((_time.time() - 10) * 1000)
     tok = _uuid.uuid4().hex
-    out = fs.create(_jpath(spark, f"{lock_dir}/cand-{ts:020d}-{tok}.json"), False)
+    out = fs.create(lock_dir.suffix(f"/cand-{ts:020d}-{tok}.json"), False)
     out.write(bytearray(_json.dumps({"ts_ms": ts, "token": tok}).encode()))
     out.close()
 
@@ -342,10 +341,10 @@ def test_lease_guarded_write_commits_and_cleans_lock_dir(spark, root):
     assert v == 2
     got = {r.k: r.v for r in read_versioned(spark, root).collect()}
     assert got[1] == "v1-n" and len(got) == 10
-    from bdt_spark.operators.versioned import _fs, _jpath
+    from bdt_spark.sources.io import hadoop_fs
 
-    fs = _fs(spark, root)
-    assert not fs.exists(_jpath(spark, f"{root}/_locks/v{2:08d}"))
+    fs, lock_dir = hadoop_fs(spark, f"{root}/_locks/v{2:08d}")
+    assert not fs.exists(lock_dir)
 
 
 def test_lease_late_rival_after_release_gets_protocol_error(spark, root):
@@ -427,23 +426,25 @@ def test_lease_sweep_between_exists_and_list_is_protocol_error(
     exists() passes the guard, then deletes the dir underneath before
     the listing runs."""
     import bdt_spark.operators.versioned as vz
-    from bdt_spark.operators.versioned import _fs, _jpath, acquire_commit_lease
+    from bdt_spark.operators.versioned import acquire_commit_lease
+    from bdt_spark.sources.io import hadoop_fs
 
-    real_fs = _fs(spark, root)
-    lock_dir = f"{root}/_locks/v{2:08d}"
+    real_fs, lock_dir = hadoop_fs(spark, f"{root}/_locks/v{2:08d}")
 
     class SweepingFs:
         def exists(self, jpath):
             if jpath.toString().endswith(f"_locks/v{2:08d}"):
                 # the "rival": swept the whole lease dir mid-window
-                real_fs.delete(_jpath(spark, lock_dir), True)
+                real_fs.delete(lock_dir, True)
                 return True
             return real_fs.exists(jpath)
 
         def __getattr__(self, name):  # everything else passes through
             return getattr(real_fs, name)
 
-    monkeypatch.setattr(vz, "_fs", lambda *_a, **_k: SweepingFs())
+    monkeypatch.setattr(
+        vz, "hadoop_fs", lambda s, p: (SweepingFs(), hadoop_fs(s, p)[1])
+    )
     with pytest.raises(ConcurrentCommitError, match="committed"):
         acquire_commit_lease(spark, root, version=2, settle_s=0.05)
 
@@ -456,7 +457,8 @@ def test_lease_nonprotocol_failure_mid_settle_drops_own_candidate(
     writer's own candidate before re-raising — otherwise the version is
     blocked for every writer until ttl_s (600 s default) expires."""
     import bdt_spark.operators.versioned as vz
-    from bdt_spark.operators.versioned import _fs, _jpath, acquire_commit_lease
+    from bdt_spark.operators.versioned import acquire_commit_lease
+    from bdt_spark.sources.io import hadoop_fs
 
     def interrupted(_s):
         raise RuntimeError("simulated interrupt mid-settle")
@@ -466,8 +468,7 @@ def test_lease_nonprotocol_failure_mid_settle_drops_own_candidate(
         acquire_commit_lease(spark, root, version=2, settle_s=5.0)
     monkeypatch.undo()
 
-    fs = _fs(spark, root)
-    lock_dir = _jpath(spark, f"{root}/_locks/v{2:08d}")
+    fs, lock_dir = hadoop_fs(spark, f"{root}/_locks/v{2:08d}")
     leftovers = (
         [st.getPath().getName() for st in fs.listStatus(lock_dir)]
         if fs.exists(lock_dir)
